@@ -75,10 +75,11 @@ object BenchExtra {
           override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
             jobs.put(js.jobId, (System.nanoTime(),
               Option(js.properties.getProperty("spark.job.description")).getOrElse("")))
-          override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-            val (t0, d) = jobs.get(je.jobId)
-            done.synchronized { done += ((je.jobId, (System.nanoTime() - t0) / 1e9, d)) }
-          }
+          // a job end whose start this listener never saw is ignored
+          override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+            Option(jobs.get(je.jobId)).foreach { case (t0, d) =>
+              done.synchronized { done += ((je.jobId, (System.nanoTime() - t0) / 1e9, d)) }
+            }
         })
         for (rep <- 1 to 2) {
           done.synchronized(done.clear())

@@ -5,7 +5,9 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Iceberg-layout storage for the offline sandbox (SURVEY.md §7.4): snapshot
   * manifests over partitioned Parquet with append/overwrite and
@@ -672,48 +674,110 @@ object Tables {
 }
 
 /** Checkpoint manifest for mid-pipeline resume (BASELINE north_rule
-  * "resumable from checkpoint"): completed stages recorded as
-  * `name<TAB>path<TAB>rows` lines, appended atomically after each stage's
-  * parquet lands. A rerun with the same outDir skips completed stages by
-  * reading their parquet.
+  * "resumable from checkpoint"). Each completed stage is one line of
+  * `outDir/_graft_manifest.tsv`, appended atomically after the stage's
+  * parquet lands:
+  *
+  * {{{
+  *   name<TAB>path<TAB>rows[<TAB>k=v;k=v...]
+  * }}}
+  *
+  * `rows` and the optional named counters (`k=v`, long values, `;`-joined)
+  * are observed on the stage's write itself (`Dataset.observe`), so a stage
+  * costs its write job and nothing else: no re-count, no schema inference.
+  * Lines without the 4th field (outDirs written before counters existed, or
+  * hand-recorded) parse with no counters. A later line for a stage
+  * supersedes an earlier one. A rerun with the same outDir skips completed
+  * stages by reading their parquet.
   */
 class StageManifest(outDir: String) {
+  import StageManifest.Entry
+
   private val p = Paths.get(outDir, "_graft_manifest.tsv")
 
-  def completed: Map[String, String] =
+  def entries: Map[String, Entry] =
     if (!Files.exists(p)) Map.empty
     else Files.readAllLines(p, StandardCharsets.UTF_8).asScala
-      .filter(_.nonEmpty).map { l => val a = l.split('\t'); a(0) -> a(1) }.toMap
+      .filter(_.nonEmpty).map { l =>
+        val a = l.split('\t')
+        val counters =
+          if (a.length < 4) Map.empty[String, Long]
+          else a(3).split(';').filter(_.nonEmpty).map { kv =>
+            val i = kv.indexOf('=')
+            kv.take(i) -> kv.drop(i + 1).toLong
+          }.toMap
+        a(0) -> Entry(a(1), a(2).toLong, counters)
+      }.toMap
+
+  def completed: Map[String, String] = entries.map { case (k, e) => k -> e.path }
 
   /** Row counts recorded when each stage landed — summary epilogues read
     * these instead of re-running count jobs over stage parquet (every
     * driver-side action is serial fixed cost; VERDICT r3 #8).
     */
-  def completedRows: Map[String, Long] =
-    if (!Files.exists(p)) Map.empty
-    else Files.readAllLines(p, StandardCharsets.UTF_8).asScala
-      .filter(_.nonEmpty).map { l => val a = l.split('\t'); a(0) -> a(2).toLong }.toMap
+  def completedRows: Map[String, Long] = entries.map { case (k, e) => k -> e.rows }
 
-  def record(stage: String, path: String, rows: Long): Unit = {
+  /** The counters a completed stage recorded (see [[stage]]). */
+  def counters(stage: String): Map[String, Long] = entries(stage).counters
+
+  def record(stage: String, path: String, rows: Long,
+      counters: Map[String, Long] = Map.empty): Unit = {
     Files.createDirectories(p.getParent)
-    val line = s"$stage\t$path\t$rows\n"
+    val extra =
+      if (counters.isEmpty) ""
+      else counters.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString("\t", ";", "")
+    val line = s"$stage\t$path\t$rows$extra\n"
     Files.writeString(p, line, StandardCharsets.UTF_8,
       java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
   }
 
   /** Run-or-resume one stage: compute + persist once, then always serve from
     * parquet (also truncates lineage at every stage boundary).
+    *
+    * `counters` are named aggregates (e.g. `count(when(cond, 1))`) observed
+    * on the same write as the row count and recorded with it; a null result
+    * (a `sum` over no rows) records 0. A completed stage whose line lacks
+    * one of them is recomputed — stage outputs are deterministic — so the
+    * caller can always read [[counters]] afterwards. The fresh frame is read
+    * back with the written schema, made nullable the way a parquet
+    * round-trip makes it; only a resumed stage infers its schema.
     */
-  def stage(spark: SparkSession, name: String)(compute: => DataFrame): DataFrame = {
+  def stage(spark: SparkSession, name: String, counters: (String, Column)*)(
+      compute: => DataFrame): DataFrame = {
     val path = s"$outDir/$name"
-    completed.get(name) match {
-      case Some(existing) => spark.read.parquet(existing)
-      case None =>
+    entries.get(name) match {
+      case Some(e) if counters.forall(c => e.counters.contains(c._1)) =>
+        spark.read.parquet(e.path)
+      case _ =>
+        require(!counters.exists(_._1 == "rows") && counters.forall(c =>
+          c._1.nonEmpty && !c._1.exists(";=\t\n".contains(_))),
+          s"stage $name: counter names must be non-empty, not 'rows', without ;=TAB")
         val df = compute
-        df.write.mode("overwrite").parquet(path)
-        val rows = spark.read.parquet(path).count()
-        record(name, path, rows)
-        spark.read.parquet(path)
+        val obs = Observation()
+        val named = (("rows" -> count(lit(1))) +: counters).map { case (k, c) => c.as(k) }
+        df.observe(obs, named.head, named.tail: _*).write.mode("overwrite").parquet(path)
+        val got = obs.get.map { case (k, v) =>
+          k -> Option(v).map(_.asInstanceOf[Number].longValue).getOrElse(0L)
+        }
+        record(name, path, got("rows"), got - "rows")
+        spark.read.schema(StageManifest.readBackSchema(df.schema)).parquet(path)
     }
+  }
+}
+
+object StageManifest {
+  final case class Entry(path: String, rows: Long, counters: Map[String, Long])
+
+  /** The schema a parquet round-trip gives `s`: every field, array element
+    * and map value becomes nullable, at every depth.
+    */
+  private[io] def readBackSchema(s: StructType): StructType = {
+    def nullable(t: DataType): DataType = t match {
+      case st: StructType => readBackSchema(st)
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+      case other => other
+    }
+    StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
   }
 }

@@ -59,7 +59,8 @@ object DedupJob {
     //    large key per row (at corpus scale the key would double the
     //    exchange). A 128-bit collision wrongly merging two groups needs
     //    ~2⁻¹²⁸ per pair — ~10⁻¹⁵ cumulative even at 10¹² docs.
-    val grouped = m.stage(spark, "grouped") {
+    val grouped = m.stage(spark, "grouped",
+        "exact_groups" -> count(when($"doc_id" === $"rep", 1))) {
       val fps = TrainingOps.shingleFps(documents.select($"doc_id", $"text"))
       val withRep = fps.withColumn("rep",
         min($"doc_id").over(Window.partitionBy(md5(concat_ws(",", $"fps")))))
@@ -114,7 +115,8 @@ object DedupJob {
 
     // ⑤ transitive dup clusters over reps, expanded to every doc through its
     //    exact group; keep = the cluster's minimum doc_id (= the CC label)
-    val decisions = m.stage(spark, "decisions") {
+    m.stage(spark, "decisions",
+        "kept" -> count(when($"keep", 1)), "dropped" -> count(when(!$"keep", 1))) {
       val labeled = Cluster.connectedComponents(edges.select($"a_id", $"b_id"))
         .select($"doc_id".cast("long").as("rep"), $"cluster_id".cast("long").as("cc"))
       grouped.select($"doc_id", $"rep")
@@ -124,26 +126,20 @@ object DedupJob {
           ($"doc_id" === coalesce($"cc", $"rep")).as("keep"))
     }
 
-    // summary metrics in TWO actions: docs/candidates/edges counts come from
-    // the manifest rows recorded when each stage landed (no re-count jobs),
-    // leaving one agg over `grouped` (exact groups) and one over `decisions`
-    // (kept/dropped/clusters) — at bench scale the driver-side action count
-    // is a fixed serial cost that caps scaling efficiency
+    // summary counts come from the manifest, with no action: rows recorded
+    // and counters observed when each stage was written, on fresh and
+    // resumed runs alike. Each cluster keeps exactly one doc, its label (the
+    // cluster minimum; doc_id is the corpus key), so clusters = kept.
     val stageRows = m.completedRows
-    val nGroups = grouped
-      .agg(count(when($"doc_id" === $"rep", 1))).collect()(0).getLong(0)
-    val d = decisions
-      .agg(count(when($"keep", 1)), count(when(!$"keep", 1)),
-        countDistinct($"cluster_id")).collect()(0)
-    val (nKept, nDropped, nClusters) = (d.getLong(0), d.getLong(1), d.getLong(2))
+    val d = m.counters("decisions")
     val counts = Map(
       "docs" -> stageRows("grouped"),
-      "exact_groups" -> nGroups,
+      "exact_groups" -> m.counters("grouped")("exact_groups"),
       "candidates" -> stageRows("candidates"),
       "edges" -> stageRows("edges"),
-      "clusters" -> nClusters,
-      "kept" -> nKept,
-      "dropped" -> nDropped)
+      "clusters" -> d("kept"),
+      "kept" -> d("kept"),
+      "dropped" -> d("dropped"))
     counts.foreach { case (k, v) => metrics += (("job", k, v.toDouble)) }
     m.stage(spark, "metrics") { metrics.toSeq.toDF("stage", "metric", "value") }
 

@@ -2,6 +2,7 @@ package graft.jobs
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.io.StageManifest
 import graft.model.{Doc, MatchConfig}
@@ -36,7 +37,10 @@ object LinkJob {
     *                   outDir: re-running with a changed overrides table
     *                   serves the old edge set from the resume manifest. New
     *                   decisions need a fresh outDir (or deleting the
-    *                   edges/clusters/cc_iter_* manifest lines).
+    *                   edges/clusters/cc_iter_* manifest lines). Ids that are
+    *                   not in `docs` join the graph but get no `clusters`
+    *                   row; a cluster whose minimum id is such an id is not
+    *                   counted in `Summary.clusters`.
     */
   def run(
       spark: SparkSession,
@@ -82,7 +86,9 @@ object LinkJob {
     val scored = scoredDf.as[ErPipeline.ScoredPair]
 
     // ⑤ classification + match edges
-    val classified = m.stage(spark, "classified") {
+    val classified = m.stage(spark, "classified",
+        "matches" -> count(when($"bucket" === "match", 1)),
+        "maybes" -> count(when($"bucket" === "maybe", 1))) {
       ErPipeline.classify(scored, config)
     }
     // normalize override orientation once (cached for its two reads inside
@@ -119,7 +125,9 @@ object LinkJob {
         val last = ccDone.max
         (spark.read.parquet(s"$outDir/cc_iter_$last"), last)
       }
-    val clustersDf = m.stage(spark, "clusters") {
+    // a component's label is its minimum id, so each cluster has exactly one
+    // row whose doc_id is its label
+    m.stage(spark, "clusters", "clusters" -> count(when($"doc_id" === $"cluster_id", 1))) {
       val labeled = Cluster.connectedComponents(
         startEdges,
         onIteration = (i, df) => m.stage(spark, s"cc_iter_${startIter + i}")(df))
@@ -132,38 +140,23 @@ object LinkJob {
     // ⑦ lineage: per written FILE row counts of every persisted stage. Each
     //    writer task emits exactly one part file, so file-level counts ARE
     //    writer-side provenance — reader-side spark_partition_id() would
-    //    reflect the re-read split, not the task that wrote the data.
-    val lineage = m.stage(spark, "lineage") {
-      Seq("records", "blocks", "pairs", "scored", "classified", "edges", "clusters")
-        .map { s =>
-          spark.read.parquet(s"$outDir/$s")
-            .groupBy(input_file_name().as("file"))
-            .agg(count("*").as("rows"))
-            .select(lit(s).as("stage"), $"file", $"rows")
-        }.reduce(_ union _)
+    //    reflect the re-read split, not the task that wrote the data. All
+    //    seven stage dirs are read in one column-less scan (a file's stage is
+    //    its parent dir), and the summary's stage totals are observed on the
+    //    lineage write. An empty stage has no lineage rows; its total is 0.
+    val stages = Seq("records", "blocks", "pairs", "scored", "classified", "edges", "clusters")
+    val totals = Seq("records", "blocks", "pairs").map(s => s -> sum(when($"stage" === s, $"rows")))
+    m.stage(spark, "lineage", totals: _*) {
+      spark.read.schema(new StructType()).parquet(stages.map(s => s"$outDir/$s"): _*)
+        .groupBy(input_file_name().as("file"))
+        .agg(count("*").as("rows"))
+        .select(regexp_extract($"file", "([^/]+)/[^/]+$", 1).as("stage"), $"file", $"rows")
     }
 
-    // summary counts in four actions, not seven: the lineage stage already
-    // holds exact per-stage row counts (sum of per-file rows), and the two
-    // classification buckets fuse into one aggregate — driver-side actions
-    // are a fixed serial cost on every run
-    // `lineage` is the persisted stage frame already in hand; an empty
-    // persisted stage contributes no lineage rows, so its count is 0
-    val stageRows = lineage
-      .groupBy($"stage").agg(sum($"rows").as("n")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-      .withDefaultValue(0L)
-    val cl = classified.agg(
-      count(when($"bucket" === "match", 1)),
-      count(when($"bucket" === "maybe", 1))).collect()(0)
-    val counts = Map(
-      "docs" -> docs.count(),
-      "records" -> stageRows("records"),
-      "blocks" -> stageRows("blocks"),
-      "pairs" -> stageRows("pairs"),
-      "matches" -> cl.getLong(0),
-      "maybes" -> cl.getLong(1),
-      "clusters" -> clustersDf.select($"cluster_id").distinct().count())
+    // every summary count but `docs` was observed on a stage write and is
+    // read back from the manifest, on fresh and resumed runs alike
+    val counts = Seq("lineage", "classified", "clusters").map(m.counters).reduce(_ ++ _) +
+      ("docs" -> docs.count())
     counts.foreach { case (k, v) => metrics += (("job", k, v.toDouble)) }
 
     m.stage(spark, "metrics") {

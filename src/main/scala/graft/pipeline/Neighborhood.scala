@@ -85,14 +85,21 @@ object Neighborhood {
     import org.apache.spark.sql.graftshim
     import org.apache.spark.sql.types._
     import org.apache.spark.unsafe.types.UTF8String
-    val ranked = globalRank(df.select(id.as("__id"), key.as("__k")), col("__k"), col("__id"), partitions)
-    val spark = ranked.sparkSession
-    val idType = ranked.schema("__id").dataType
-    // scan rows are reused buffers; buffered values must be copied out
+    val idType = df.select(id).schema.head.dataType
+    // scan rows are reused buffers; buffered values must be copied out.
+    // copyVal copies UTF8String, and the other atomic values come out of an
+    // UnsafeRow as fresh objects. An array, map or struct id comes out as a
+    // view into the buffer and would alias it.
+    require(idType match {
+      case _: ArrayType | _: MapType | _: StructType | _: UserDefinedType[_] => false
+      case _ => true
+    }, s"Neighborhood.pairs: id must have an atomic type, got ${idType.simpleString}")
     def copyVal(v: Any): Any = v match {
       case u: UTF8String => u.copy()
       case x => x
     }
+    val ranked = globalRank(df.select(id.as("__id"), key.as("__k")), col("__k"), col("__id"), partitions)
+    val spark = ranked.sparkSession
 
     // ① narrow in-partition sliding window: each row pairs with the ≤ w
     // predecessors buffered from its own partition (iteration order = the

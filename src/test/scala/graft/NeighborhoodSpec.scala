@@ -92,4 +92,25 @@ class NeighborhoodSpec extends SparkSpec {
     } yield (sorted(i), sorted(j))).toSet
     assert(got === want)
   }
+
+  test("pairs: a non-atomic id is rejected; atomic non-string ids pair exactly") {
+    import spark.implicits._
+    // the sliding pass buffers ids out of reused scan rows; an array id came
+    // out as a view into that buffer, so buffered predecessors silently
+    // aliased the current row
+    val arr = (1 to 20).map(i => (Seq(i, i + 1), s"k${i % 3}")).toDF("id", "k")
+    val e = intercept[IllegalArgumentException] {
+      Neighborhood.pairs(arr, col("k"), col("id"), w = 2, partitions = 2)
+    }
+    assert(e.getMessage.contains("atomic type") && e.getMessage.contains("array<int>"))
+
+    val rows = (1L to 60L).map(i => (i * 7 % 61, s"k${i % 4}"))
+    val got = Neighborhood.pairs(rows.toDF("id", "k"), col("k"), col("id"), w = 2, partitions = 3)
+      .collect().map(x => (x.getLong(0), x.getLong(1))).toSet
+    val sorted = rows.sortBy { case (id, k) => (k, id) }.map(_._1)
+    val want = (for {
+      i <- sorted.indices; j <- (i + 1) to math.min(i + 2, sorted.size - 1)
+    } yield (sorted(i), sorted(j))).toSet
+    assert(got === want)
+  }
 }
