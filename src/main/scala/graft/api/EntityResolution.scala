@@ -6,7 +6,7 @@ import org.apache.spark.sql.graftshim
 
 import graft.core.Cleaners
 import graft.expr.DukeScoreExpr
-import graft.expr.functions.clean_chain
+import graft.expr.functions.clean_values
 import graft.model.MatchConfig
 
 /** The reference plugin's query surface, Spark-native (SURVEY.md §3.1):
@@ -25,12 +25,11 @@ object EntityResolution {
 
   /** Add a `score` column: probability(candidate ≙ query record).
     *
-    * Scoring routes through the fused `DukeScoreExpr` kernel — the fold runs
-    * in Scala over evaluated child arrays, so the expression tree stays LINEAR
-    * in property count. (A Column-level Bayes fold embeds the accumulator ~5×
-    * per property: 5^P growth, Catalyst analysis blows up past ~8-10
-    * properties.) Query-side values are cleaned once on the driver with the
-    * same kernel chain; candidate-side values clean declaratively per row.
+    * Scoring is one `DukeScoreExpr`: the Duke fold runs in Scala
+    * (`Duke.CompiledConfig.score`) over the evaluated child arrays, so the
+    * expression tree is linear in property count. Query-side values are
+    * cleaned once on the driver with the same kernel chain; candidate-side
+    * values clean declaratively per row (`clean_values`).
     */
   def scored(
       candidates: DataFrame,
@@ -61,8 +60,7 @@ object EntityResolution {
           case "array" => col(spec.name)
           case _       => array(col(spec.name))
         }
-        filter(transform(raw, v => clean_chain(spec.cleaners, v)),
-          v => v.isNotNull && v =!= "")
+        clean_values(spec.cleaners, raw)
       }
     Seq(qCol, cCol)
   }
@@ -70,8 +68,8 @@ object EntityResolution {
   /** Score explanation — the plugin's ES-explain / Duke per-property debug
     * face: beside `score`, an `explain` map property -> probability factor.
     * A single-property Duke fold from the 0.5 prior returns exactly that
-    * property's probability (bayes(0.5, p) = p), so each factor reuses the
-    * fused kernel verbatim; missing evidence reads 0.5 (Duke: no evidence
+    * property's probability (bayes(0.5, p) = p), so each factor is a
+    * one-property `DukeScoreExpr`; missing evidence reads 0.5 (Duke: no evidence
     * moves nothing). Bayes-folding the factors in config order reproduces
     * `score` bit-for-bit (spec-asserted).
     */

@@ -157,40 +157,52 @@ object Cleaners {
     lowerCaseNormalize(s).split(' ').map(t => nicknames.getOrElse(t, t)).mkString(" ")
   }
 
-  /** Registry keyed by both short names and Duke class names (config parity with the
-    * reference's query JSON — SURVEY.md §1.2). Parameterless cleaners only; regexp /
-    * mapping cleaners are parameterized and constructed explicitly.
+  /** The cleaner table: short name, Duke class name (package
+    * `no.priv.garshol.duke.cleaners`, config parity with the reference's query
+    * JSON — SURVEY.md §1.2), function. Parameterless cleaners only; the
+    * `regexp` / `mapping` / `mapping-file` forms are parameterized and built by
+    * `resolve`. The config path, the Column API and the SQL registration all
+    * read this table.
     */
-  val registry: Map[String, String => String] = {
-    val base: Map[String, String => String] = Map(
-      "trim" -> trim,
-      "lowercase-normalize" -> lowerCaseNormalize,
-      "digits-only" -> digitsOnly,
-      "phone-number" -> phoneNumber,
-      "family-comma-given" -> familyCommaGiven,
-      "company-name" -> companyName,
-      "address-norwegian" -> norwegianAddress,
-      "person-name" -> personName)
-    val dukeAliases = Map(
-      "no.priv.garshol.duke.cleaners.TrimCleaner" -> "trim",
-      "no.priv.garshol.duke.cleaners.LowerCaseNormalizeCleaner" -> "lowercase-normalize",
-      "no.priv.garshol.duke.cleaners.DigitsOnlyCleaner" -> "digits-only",
-      "no.priv.garshol.duke.cleaners.PhoneNumberCleaner" -> "phone-number",
-      "no.priv.garshol.duke.cleaners.FamilyCommaGivenCleaner" -> "family-comma-given",
-      "no.priv.garshol.duke.cleaners.NorwegianCompanyNameCleaner" -> "company-name",
-      "no.priv.garshol.duke.cleaners.NorwegianAddressCleaner" -> "address-norwegian",
-      "no.priv.garshol.duke.cleaners.PersonNameCleaner" -> "person-name")
-    base ++ dukeAliases.map { case (k, v) => k -> base(v) }
-  }
+  private val table: Seq[(String, String, String => String)] = Seq(
+    ("trim", "TrimCleaner", trim),
+    ("lowercase-normalize", "LowerCaseNormalizeCleaner", lowerCaseNormalize),
+    ("digits-only", "DigitsOnlyCleaner", digitsOnly),
+    ("phone-number", "PhoneNumberCleaner", phoneNumber),
+    ("family-comma-given", "FamilyCommaGivenCleaner", familyCommaGiven),
+    ("company-name", "NorwegianCompanyNameCleaner", companyName),
+    ("address-norwegian", "NorwegianAddressCleaner", norwegianAddress),
+    ("person-name", "PersonNameCleaner", personName))
 
-  /** Normalize a cleaner spec: Duke class names -> short names, including the
-    * parameterized forms (`RegexpCleaner(...)` -> `regexp(...)` etc.).
+  /** Duke class names of the parameterized forms -> their short spec prefix. */
+  private val parameterized = Seq("RegexpCleaner" -> "regexp", "MappingFileCleaner" -> "mapping-file")
+
+  private final val DukePackage = "no.priv.garshol.duke.cleaners."
+
+  /** Parameterless cleaners by short name. */
+  val registry: Map[String, String => String] = table.map { case (n, _, f) => n -> f }.toMap
+
+  private val shortByClass: Map[String, String] = table.map { case (n, c, _) => c -> n }.toMap
+
+  /** Normalize a cleaner spec to its short form: Duke class names (with or
+    * without the package) -> short names, including the parameterized forms
+    * (`RegexpCleaner(...)` -> `regexp(...)` etc.). Anything else is returned
+    * unchanged.
     */
   def normalizeSpec(spec: String): String = {
-    val s = spec.stripPrefix("no.priv.garshol.duke.cleaners.")
-    if (s.startsWith("RegexpCleaner(")) "regexp(" + s.stripPrefix("RegexpCleaner(")
-    else if (s.startsWith("MappingFileCleaner(")) "mapping-file(" + s.stripPrefix("MappingFileCleaner(")
-    else s
+    val s = spec.stripPrefix(DukePackage)
+    shortByClass.get(s).orElse(parameterized.collectFirst {
+      case (cls, short) if s == cls || s.startsWith(cls + "(") => short + s.stripPrefix(cls)
+    }).getOrElse(s)
+  }
+
+  /** A spec's short form, checked: a known cleaner name or a parameterized
+    * form, else `IllegalArgumentException`.
+    */
+  def canonical(spec: String): String = {
+    val s = normalizeSpec(spec)
+    if (registry.contains(s) || Seq("regexp(", "mapping(", "mapping-file(").exists(s.startsWith)) s
+    else throw new IllegalArgumentException(s"unknown cleaner $s")
   }
 
   /** Resolve a cleaner spec to a function. Beyond the parameterless registry,
@@ -241,7 +253,7 @@ object Cleaners {
         finally src.close()
       }
       (s: String) => mapping(s, dict)
-    } else registry.get(spec0).orElse(registry.get(spec)).getOrElse(
+    } else registry.getOrElse(spec,
       throw new IllegalArgumentException(s"unknown cleaner $spec0"))
   }
 

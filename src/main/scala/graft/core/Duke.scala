@@ -8,10 +8,14 @@ import graft.model.{EntityRecord, MatchConfig, PropertySpec}
   * candidate document (`[U EntityResolutionScript.java#runAsDouble]`,
   * `[D Processor.java#compare]`, `[D utils/Utils.java#computeBayes]`).
   *
-  * Pure JVM: the batched mapPartitions scorer, the Catalyst DukeScore expression
-  * and the golden tests all call these same functions.
+  * Pure JVM, and the only copy of the fold: the batched mapPartitions scorer
+  * (`ErPipeline.score`) and the Catalyst `DukeScoreExpr` both call
+  * `CompiledConfig.score` over per-property value arrays.
   */
 object Duke {
+
+  /** `CompiledProperty.factor` of a property with no evidence (P3). */
+  final val NoEvidence = Double.NegativeInfinity
 
   /** bayes(a,b) = ab / (ab + (1-a)(1-b)) `[D utils/Utils.java#computeBayes]`. */
   def bayes(a: Double, b: Double): Double = {
@@ -25,41 +29,22 @@ object Duke {
   def propertyProbability(sim: Double, low: Double, high: Double): Double =
     if (sim >= 0.5) (high - 0.5) * sim * sim + 0.5 else low
 
-  /** Best probability over the value cross product of one property (A2 multi-value
-    * max, `[D Processor.java#compare]`), with the missing-value skip (P3): empty
-    * value lists yield None (no evidence — the fold must not update).
-    * Values are assumed already cleaned; empty strings excluded *before* the max
-    * (SURVEY.md §7.4 parity pitfall).
-    */
-  def propertyFactor(
-      v1: Seq[String],
-      v2: Seq[String],
-      spec: PropertySpec,
-      fn: (String, String, Array[Double]) => Double,
-      params: Array[Double]): Option[Double] = {
-    val a = v1.filter(v => v != null && v.nonEmpty)
-    val b = v2.filter(v => v != null && v.nonEmpty)
-    if (a.isEmpty || b.isEmpty) None
-    else {
-      var best = Double.NegativeInfinity
-      for (x <- a; y <- b) {
-        val p = propertyProbability(fn(x, y, params), spec.low, spec.high)
-        if (p > best) best = p
-      }
-      Some(best)
-    }
-  }
-
   /** Compiled per-property scorer: cleaner chain + comparator resolved once (the
     * Spark analog of the plugin Factory parsing the query params once per query,
-    * not once per doc — SURVEY.md §3.1/§4 "config parse once").
+    * not once per doc — SURVEY.md §3.1/§4 "config parse once"). An evidence
+    * property's unknown comparator name fails here, on the driver; id/ignore
+    * properties are never compared, so their comparator is not looked up.
     */
   final class CompiledProperty(val spec: PropertySpec) extends Serializable {
+    private val evidence = spec.isEvidence
+    private val params: Array[Double] =
+      if (!evidence) Array.emptyDoubleArray
+      else Similarity.comparator(spec.comparator, s"property '${spec.name}': ")
+        .params(spec.params).toArray
     @transient private var fn0: (String, String, Array[Double]) => Double = _
     @transient private var chain0: String => String = _
-    private val params: Array[Double] = spec.params.toArray
     private def fn: (String, String, Array[Double]) => Double = {
-      if (fn0 == null) fn0 = Similarity.registry(spec.comparator)
+      if (fn0 == null) fn0 = Similarity.comparator(spec.comparator).fn
       fn0
     }
     // cleaner chain resolved once per task (compiled regexes / loaded dicts),
@@ -71,9 +56,38 @@ object Duke {
     def cleanedValues(raw: Seq[String]): Seq[String] =
       if (raw == null) Nil
       else raw.map(cleanChain).filter(v => v != null && v.nonEmpty)
-    /** factor over already-cleaned values */
-    def factor(v1: Seq[String], v2: Seq[String]): Option[Double] =
-      propertyFactor(v1, v2, spec, fn, params)
+
+    /** Best probability over the value cross product of already-cleaned
+      * values (A2 multi-value max, `[D Processor.java#compare]`). Null and
+      * empty values are skipped *before* the max (SURVEY.md §7.4 parity
+      * pitfall); with none left on a side — or for an id/ignore property —
+      * the result is `NoEvidence` (P3: the fold must not move).
+      */
+    def factor(a: Array[String], b: Array[String]): Double = {
+      var best = NoEvidence
+      if (evidence && a != null && b != null) {
+        val compare = fn
+        val low = spec.low
+        val high = spec.high
+        var i = 0
+        while (i < a.length) {
+          val x = a(i)
+          if (x != null && !x.isEmpty) {
+            var j = 0
+            while (j < b.length) {
+              val y = b(j)
+              if (y != null && !y.isEmpty) {
+                val p = propertyProbability(compare(x, y, params), low, high)
+                if (p > best) best = p
+              }
+              j += 1
+            }
+          }
+          i += 1
+        }
+      }
+      best
+    }
   }
 
   /** Compiled configuration — fixed property order for a deterministic fold. */
@@ -81,24 +95,40 @@ object Duke {
     val properties: Array[CompiledProperty] =
       config.properties.map(new CompiledProperty(_)).toArray
 
-    /** Score two records of already-cleaned values (prior 0.5, SURVEY.md §8.3). */
-    def score(a: Map[String, Seq[String]], b: Map[String, Seq[String]]): Double = {
+    /** The Duke fold (prior 0.5, SURVEY.md §8.3): `a(i)` / `b(i)` hold the
+      * cleaned values of property i in config order; a null or empty array is
+      * a missing property.
+      */
+    def score(a: Array[Array[String]], b: Array[Array[String]]): Double = {
       var acc = 0.5
       var i = 0
       while (i < properties.length) {
-        val p = properties(i)
-        // id/ignore properties are never evidence (`[D Property.java]` flags)
-        if (p.spec.isEvidence) {
-          p.factor(
-            a.getOrElse(p.spec.name, Nil),
-            b.getOrElse(p.spec.name, Nil)) match {
-            case Some(f) => acc = bayes(acc, f)
-            case None    =>
-          }
-        }
+        val f = properties(i).factor(a(i), b(i))
+        if (f != NoEvidence) acc = bayes(acc, f)
         i += 1
       }
       acc
+    }
+
+    /** `score` over records keyed by property name. */
+    def score(a: Map[String, Seq[String]], b: Map[String, Seq[String]]): Double =
+      score(values(a), values(b))
+
+    /** A record's values in config property order (null = missing). A plain
+      * loop: the mapPartitions scorer runs it twice per pair.
+      */
+    private def values(props: Map[String, Seq[String]]): Array[Array[String]] = {
+      val out = new Array[Array[String]](properties.length)
+      var i = 0
+      while (i < out.length) {
+        val v = props.getOrElse(properties(i).spec.name, null)
+        if (v != null) {
+          out(i) = new Array[String](v.length)
+          v.copyToArray(out(i))
+        }
+        i += 1
+      }
+      out
     }
 
     /** Clean a raw record once (map side, before the self-join — each record is

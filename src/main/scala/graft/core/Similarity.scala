@@ -123,17 +123,6 @@ object Similarity {
     1.0 - d.toDouble / lo.toDouble
   }
 
-  /** Max-length-normalized variant — the hedge for SURVEY.md §8.2's (med)
-    * uncertainty on Duke's normalization denominator: sim = 1 - d/max. Behind
-    * registry key "levenshtein-max"; swap in config if upstream parity ever
-    * demands it.
-    */
-  def levenshteinSimMax(s1: String, s2: String): Double = {
-    val hi = math.max(s1.length, s2.length)
-    if (hi == 0) return 1.0
-    1.0 - levenshtein(s1, s2).toDouble / hi.toDouble
-  }
-
   /** Banded variant for the pipeline hot path: identical result whenever
     * sim > 0.5; returns 0.0 (instead of the exact sub-0.5 value) when the band
     * proves sim <= 0.5 — replicating Duke's cutoff optimization
@@ -230,7 +219,7 @@ object Similarity {
 
   /** Double-parameter overloads: codegen emits literal double args uniformly
     * (`graft.expr.SimExpr#doGenCode`), so every parameterized comparator needs a
-    * (String, String, Double*) static entry point.
+    * (String, String, Double*) static entry point — its `method` in the table.
     */
   def qgramSimD(s1: String, s2: String, q: Double, formula: Double): Double =
     qgramSim(s1, s2, q.toInt, formula.toInt)
@@ -408,52 +397,86 @@ object Similarity {
     else jaroWinkler(a, b)
   }
 
-  // ---------------------------------------------------------------- registry
+  // ---------------------------------------------------------------- comparator table
 
-  /** Comparator registry: short names + Duke class-name aliases (config parity,
-    * SURVEY.md §1.2). Values: (s1, s2, params) => sim.
+  /** One comparator: `name` is its config short name and `dukeClass` the Duke
+    * class it mirrors (either "" when it has none); `method` is the static
+    * entry point generated code calls with one double per default param;
+    * `sqlName` is its `sim_*` SQL function ("" when unregistered); `fn` takes
+    * the filled params.
     */
-  val registry: Map[String, (String, String, Array[Double]) => Double] = {
-    val base: Map[String, (String, String, Array[Double]) => Double] = Map(
-      "exact" -> ((a, b, _) => exact(a, b)),
-      "jaro-winkler" -> ((a, b, _) => jaroWinkler(a, b)),
-      "jaro-winkler-tokenized" -> ((a, b, _) => jaroWinklerTokenized(a, b)),
-      "levenshtein" -> ((a, b, _) => levenshteinSim(a, b)),
-      "levenshtein-max" -> ((a, b, _) => levenshteinSimMax(a, b)),
-      "levenshtein-cutoff" -> ((a, b, _) => levenshteinSimCutoff(a, b)),
-      "weighted-levenshtein" -> ((a, b, p) =>
-        weightedLevenshteinSim(a, b, if (p.nonEmpty) p(0) else 2.0)),
-      "qgram" -> ((a, b, p) =>
-        qgramSim(a, b, if (p.nonEmpty) p(0).toInt else 2, if (p.length > 1) p(1).toInt else FormulaDice)),
-      "dice" -> ((a, b, _) => diceToken(a, b)),
-      "jaccard" -> ((a, b, _) => jaccardToken(a, b)),
-      "numeric" -> ((a, b, _) => numericSim(a, b)),
-      "geoposition" -> ((a, b, p) => geoSim(a, b, if (p.nonEmpty) p(0) else 1000.0)),
-      "soundex" -> ((a, b, _) => soundexEq(a, b)),
-      "metaphone" -> ((a, b, _) => metaphoneEq(a, b)),
-      "norphone" -> ((a, b, _) => norphoneEq(a, b)),
-      "person-name" -> ((a, b, _) => personNameSim(a, b)),
-      "longest-common-substring" -> ((a, b, _) => lcsSim(a, b)))
-    val dukeAliases = Map(
-      "no.priv.garshol.duke.comparators.ExactComparator" -> "exact",
-      "no.priv.garshol.duke.comparators.JaroWinkler" -> "jaro-winkler",
-      "no.priv.garshol.duke.comparators.JaroWinklerTokenized" -> "jaro-winkler-tokenized",
-      "no.priv.garshol.duke.comparators.Levenshtein" -> "levenshtein",
-      "no.priv.garshol.duke.comparators.WeightedLevenshtein" -> "weighted-levenshtein",
-      "no.priv.garshol.duke.comparators.QGramComparator" -> "qgram",
-      "no.priv.garshol.duke.comparators.DiceCoefficientComparator" -> "dice",
-      "no.priv.garshol.duke.comparators.JaccardIndexComparator" -> "jaccard",
-      "no.priv.garshol.duke.comparators.NumericComparator" -> "numeric",
-      "no.priv.garshol.duke.comparators.GeopositionComparator" -> "geoposition",
-      "no.priv.garshol.duke.comparators.SoundexComparator" -> "soundex",
-      "no.priv.garshol.duke.comparators.MetaphoneComparator" -> "metaphone",
-      "no.priv.garshol.duke.comparators.NorphoneComparator" -> "norphone",
-      "no.priv.garshol.duke.comparators.PersonNameComparator" -> "person-name",
-      "no.priv.garshol.duke.comparators.LongestCommonSubstring" -> "longest-common-substring")
-    base ++ dukeAliases.map { case (k, v) => k -> base(v) }
+  final case class Comparator(
+      name: String,
+      dukeClass: String,
+      method: String,
+      sqlName: String,
+      defaults: Seq[Double])(val fn: (String, String, Array[Double]) => Double) {
+
+    /** The supplied params with missing trailing ones taken from `defaults`;
+      * extra params are ignored.
+      */
+    def params(supplied: Seq[Double]): Seq[Double] =
+      supplied.take(defaults.length) ++ defaults.drop(supplied.length)
   }
 
-  /** Dispatch entry point for the interpreted (non-codegen) expression path. */
-  def dispatch(name: String, s1: String, s2: String, params: Array[Double]): Double =
-    registry(name)(s1, s2, params)
+  /** The comparator table — the one place a comparator name, its Duke class
+    * name (config parity, SURVEY.md §1.2), its codegen method, its SQL name
+    * and its default params are declared. The config registry, `SimExpr`,
+    * `functions.sim` and the SQL registration all read it.
+    */
+  val comparators: Seq[Comparator] = Seq(
+    Comparator("exact", "ExactComparator", "exact", "exact", Nil)((a, b, _) => exact(a, b)),
+    Comparator("", "", "jaro", "jaro", Nil)((a, b, _) => jaro(a, b)),
+    Comparator("jaro-winkler", "JaroWinkler", "jaroWinkler", "jaro_winkler", Nil)(
+      (a, b, _) => jaroWinkler(a, b)),
+    Comparator("jaro-winkler-tokenized", "JaroWinklerTokenized", "jaroWinklerTokenized",
+      "jaro_winkler_tokenized", Nil)((a, b, _) => jaroWinklerTokenized(a, b)),
+    Comparator("levenshtein", "Levenshtein", "levenshteinSim", "levenshtein_sim", Nil)(
+      (a, b, _) => levenshteinSim(a, b)),
+    Comparator("levenshtein-cutoff", "", "levenshteinSimCutoff", "", Nil)(
+      (a, b, _) => levenshteinSimCutoff(a, b)),
+    Comparator("weighted-levenshtein", "WeightedLevenshtein", "weightedLevenshteinSimD", "",
+      Seq(2.0))((a, b, p) => weightedLevenshteinSim(a, b, p(0))),
+    Comparator("qgram", "QGramComparator", "qgramSimD", "", Seq(2.0, FormulaDice.toDouble))(
+      (a, b, p) => qgramSim(a, b, p(0).toInt, p(1).toInt)),
+    Comparator("", "", "qgramDice", "qgram_dice", Nil)((a, b, _) => qgramDice(a, b)),
+    Comparator("dice", "DiceCoefficientComparator", "diceToken", "dice", Nil)(
+      (a, b, _) => diceToken(a, b)),
+    Comparator("jaccard", "JaccardIndexComparator", "jaccardToken", "jaccard", Nil)(
+      (a, b, _) => jaccardToken(a, b)),
+    Comparator("numeric", "NumericComparator", "numericSim", "numeric", Nil)(
+      (a, b, _) => numericSim(a, b)),
+    Comparator("geoposition", "GeopositionComparator", "geoSimD", "", Seq(1000.0))(
+      (a, b, p) => geoSim(a, b, p(0))),
+    Comparator("soundex", "SoundexComparator", "soundexEq", "", Nil)((a, b, _) => soundexEq(a, b)),
+    Comparator("metaphone", "MetaphoneComparator", "metaphoneEq", "", Nil)(
+      (a, b, _) => metaphoneEq(a, b)),
+    Comparator("norphone", "NorphoneComparator", "norphoneEq", "", Nil)(
+      (a, b, _) => norphoneEq(a, b)),
+    Comparator("person-name", "PersonNameComparator", "personNameSim", "person_name", Nil)(
+      (a, b, _) => personNameSim(a, b)),
+    Comparator("longest-common-substring", "LongestCommonSubstring", "lcsSim", "lcs", Nil)(
+      (a, b, _) => lcsSim(a, b)))
+
+  final val DukePackage = "no.priv.garshol.duke.comparators."
+
+  /** Config names: short names, full Duke class names and bare class names. */
+  val registry: Map[String, Comparator] = comparators.flatMap { c =>
+    val duke = if (c.dukeClass.isEmpty) Nil else Seq(c.dukeClass, DukePackage + c.dukeClass)
+    (c.name +: duke).filter(_.nonEmpty).map(_ -> c)
+  }.toMap
+
+  private val byMethod: Map[String, Comparator] = comparators.map(c => c.method -> c).toMap
+
+  /** Comparator by config name. An unknown name throws, naming `owner`
+    * (e.g. the property) and the known short names.
+    */
+  def comparator(name: String, owner: String = ""): Comparator =
+    registry.getOrElse(name, throw new IllegalArgumentException(
+      s"${owner}unknown comparator '$name' (known: " +
+        s"${comparators.map(_.name).filter(_.nonEmpty).mkString(", ")}; Duke class names also accepted)"))
+
+  /** Comparator by codegen method name (`SimExpr.method`). */
+  def forMethod(method: String): Comparator =
+    byMethod.getOrElse(method, throw new IllegalArgumentException(s"unknown sim method $method"))
 }

@@ -7,69 +7,19 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
-import graft.core.{Duke, Similarity}
+import graft.core.Duke
 import graft.model.MatchConfig
 
-/** Scoring kernel over Catalyst array data — the fused-expression fast path
-  * (SURVEY.md §7.2 M5): per property a pair of `array<string>` children
-  * holding the already-cleaned values; missing-value skip, multi-value max,
-  * probability curve and Bayes fold identical to `Duke.CompiledConfig.score`
-  * (pinned by DukeScoreExprSpec parity tests). Avoids the row -> Scala-Map
-  * materialization the typed mapPartitions path pays per row.
-  */
-final class DukeArrayKernel(val config: MatchConfig) extends Serializable {
-
-  @transient private lazy val fns: Array[(String, String, Array[Double]) => Double] =
-    config.properties.map(p => Similarity.registry(p.comparator)).toArray
-  private val lows: Array[Double] = config.properties.map(_.low).toArray
-  private val highs: Array[Double] = config.properties.map(_.high).toArray
-  private val params: Array[Array[Double]] = config.properties.map(_.params.toArray).toArray
-  // id/ignore properties contribute no evidence (Duke Property flags)
-  private val evidence: Array[Boolean] = config.properties.map(_.isEvidence).toArray
-
-  /** arrs(2i) / arrs(2i+1) = sides of property i; null entry = missing side. */
-  def score(arrs: Array[ArrayData]): Double = {
-    var acc = 0.5
-    var i = 0
-    val n = lows.length
-    while (i < n) {
-      val a = arrs(2 * i)
-      val b = arrs(2 * i + 1)
-      if (evidence(i) && a != null && b != null && a.numElements() > 0 && b.numElements() > 0) {
-        val fn = fns(i)
-        val p = params(i)
-        var best = Double.NegativeInfinity
-        var ai = 0
-        while (ai < a.numElements()) {
-          if (!a.isNullAt(ai)) {
-            val av = a.getUTF8String(ai).toString
-            if (av.nonEmpty) {
-              var bi = 0
-              while (bi < b.numElements()) {
-                if (!b.isNullAt(bi)) {
-                  val bv = b.getUTF8String(bi).toString
-                  if (bv.nonEmpty) {
-                    val pr = Duke.propertyProbability(fn(av, bv, p), lows(i), highs(i))
-                    if (pr > best) best = pr
-                  }
-                }
-                bi += 1
-              }
-            }
-          }
-          ai += 1
-        }
-        if (best > Double.NegativeInfinity) acc = Duke.bayes(acc, best)
-      }
-      i += 1
-    }
-    acc
-  }
-}
-
-/** children = [a_p0, b_p0, a_p1, b_p1, ...] (array<string>, pre-cleaned).
+/** The Duke record score as one Catalyst expression (SURVEY.md §7.2 M5):
+  * children = [a_p0, b_p0, a_p1, b_p1, ...], per property a pair of
+  * `array<string>` holding the already-cleaned values. Each child is turned
+  * into a `String` array once per row and the pair goes through
+  * `Duke.CompiledConfig.score`, the same fold the mapPartitions scorer runs.
   * Null children mean "property missing on that side" (P3 skip), so the
   * expression is null-TOLERANT and never returns null itself.
+  *
+  * The config is compiled here, on the driver: an unknown comparator name
+  * fails at construction, not inside an executor task.
   */
 case class DukeScoreExpr(children: Seq[Expression], config: MatchConfig)
     extends Expression {
@@ -77,24 +27,43 @@ case class DukeScoreExpr(children: Seq[Expression], config: MatchConfig)
   require(children.length == 2 * config.properties.length,
     s"need 2 children per property: ${children.length} vs ${config.properties.length} props")
 
+  private val compiled = Duke.compile(config)
+
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = false
   override def prettyName: String = "duke_score"
 
-  @transient private lazy val kernel = new DukeArrayKernel(config)
-
-  override def eval(input: InternalRow): Any = {
-    val arrs = new Array[ArrayData](children.length)
+  /** Score one row's evaluated children (null entry = missing side). */
+  def score(arrs: Array[ArrayData]): Double = {
+    val n = compiled.properties.length
+    val a = new Array[Array[String]](n)
+    val b = new Array[Array[String]](n)
     var i = 0
-    while (i < children.length) {
-      arrs(i) = children(i).eval(input).asInstanceOf[ArrayData]
+    while (i < n) {
+      a(i) = strings(arrs(2 * i))
+      b(i) = strings(arrs(2 * i + 1))
       i += 1
     }
-    kernel.score(arrs)
+    compiled.score(a, b)
   }
 
+  private def strings(d: ArrayData): Array[String] =
+    if (d == null) null
+    else {
+      val out = new Array[String](d.numElements())
+      var k = 0
+      while (k < out.length) {
+        if (!d.isNullAt(k)) out(k) = d.getUTF8String(k).toString
+        k += 1
+      }
+      out
+    }
+
+  override def eval(input: InternalRow): Any =
+    score(children.map(_.eval(input).asInstanceOf[ArrayData]).toArray)
+
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernelRef = ctx.addReferenceObj("dukeKernel", kernel, classOf[DukeArrayKernel].getName)
+    val self = ctx.addReferenceObj("dukeScore", this, classOf[DukeScoreExpr].getName)
     val arrs = ctx.freshName("arrs")
     val evals = children.zipWithIndex.map { case (c, i) =>
       val e = c.genCode(ctx)
@@ -108,7 +77,7 @@ case class DukeScoreExpr(children: Seq[Expression], config: MatchConfig)
         |org.apache.spark.sql.catalyst.util.ArrayData[] $arrs =
         |  new org.apache.spark.sql.catalyst.util.ArrayData[${children.length}];
         |${evals.mkString("\n")}
-        |double ${ev.value} = $kernelRef.score($arrs);
+        |double ${ev.value} = $self.score($arrs);
       """.stripMargin,
       isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
   }

@@ -16,10 +16,12 @@ import graft.core.{Cleaners, Phonetics, Similarity}
   * inside one WholeStageCodegen span (SURVEY.md §4 "codegen / vectorization").
   */
 
-/** Binary string-similarity expression. `method` is the static method name on
-  * `graft.core.Similarity`; `args` are trailing double parameters (q, formula,
-  * maxMeters, ...). Null-intolerant: any null side -> null similarity (the
-  * missing-value skip P3 is handled one level up, in the scoring fold).
+/** Binary string-similarity expression. `method` is a codegen method of
+  * `Similarity.comparators` (a static method on `graft.core.Similarity`);
+  * `args` are its trailing double parameters (q, formula, maxMeters, ...),
+  * missing trailing ones taken from the table's defaults. Null-intolerant:
+  * any null side -> null similarity (the missing-value skip P3 is handled one
+  * level up, in the scoring fold).
   */
 case class SimExpr(left: Expression, right: Expression, method: String, args: Seq[Double] = Nil)
     extends BinaryExpression with ExpectsInputTypes {
@@ -29,34 +31,14 @@ case class SimExpr(left: Expression, right: Expression, method: String, args: Se
   override def nullIntolerant: Boolean = true
   override def prettyName: String = s"sim_$method"
 
-  @transient private lazy val fn: (String, String) => Double = method match {
-    case "exact"                  => Similarity.exact
-    case "jaro"                   => Similarity.jaro
-    case "jaroWinkler"            => Similarity.jaroWinkler
-    case "jaroWinklerTokenized"   => Similarity.jaroWinklerTokenized
-    case "levenshteinSim"         => Similarity.levenshteinSim
-    case "levenshteinSimMax"      => Similarity.levenshteinSimMax
-    case "levenshteinSimCutoff"   => Similarity.levenshteinSimCutoff
-    case "weightedLevenshteinSimD" => (a, b) => Similarity.weightedLevenshteinSim(a, b, args(0))
-    case "qgramSimD"              => (a, b) => Similarity.qgramSim(a, b, args(0).toInt, args(1).toInt)
-    case "qgramDice"              => Similarity.qgramDice
-    case "diceToken"              => Similarity.diceToken
-    case "jaccardToken"           => Similarity.jaccardToken
-    case "numericSim"             => Similarity.numericSim
-    case "geoSimD"                => (a, b) => Similarity.geoSim(a, b, args(0))
-    case "soundexEq"              => Similarity.soundexEq
-    case "metaphoneEq"            => Similarity.metaphoneEq
-    case "norphoneEq"             => Similarity.norphoneEq
-    case "personNameSim"          => Similarity.personNameSim
-    case "lcsSim"                 => Similarity.lcsSim
-    case other => throw new IllegalArgumentException(s"unknown sim method $other")
-  }
+  @transient private lazy val comparator = Similarity.forMethod(method)
+  @transient private lazy val params: Array[Double] = comparator.params(args).toArray
 
   override protected def nullSafeEval(l: Any, r: Any): Any =
-    fn(l.toString, r.toString)
+    comparator.fn(l.toString, r.toString, params)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val argList = args.map(d => s", ${d}D").mkString
+    val argList = params.map(d => s", ${d}D").mkString
     defineCodeGen(ctx, ev, (a, b) =>
       s"graft.core.Similarity.$method($a.toString(), $b.toString()$argList)")
   }

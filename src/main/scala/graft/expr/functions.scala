@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.graftshim
 import org.apache.spark.sql.functions._
 
-import graft.model.{MatchConfig, PropertySpec}
+import graft.core.{Cleaners, Similarity}
+import graft.model.MatchConfig
 
 /** Column-level API over the custom expressions — the engine's `functions._`
   * (SURVEY.md §2.3/§2.4/§2.5). Everything composes as ordinary Columns, so
@@ -40,44 +41,25 @@ object functions {
   def sim_person_name(a: Column, b: Column): Column = col2(SimExpr(x(a), x(b), "personNameSim"))
   def sim_lcs(a: Column, b: Column): Column = col2(SimExpr(x(a), x(b), "lcsSim"))
 
-  /** Comparator by registry name (Duke class names accepted — SURVEY.md §1.2). */
+  /** Comparator by config name (short, Duke class, or bare class name —
+    * SURVEY.md §1.2); missing trailing params take the table's defaults.
+    */
   def sim(comparator: String, a: Column, b: Column, params: Seq[Double] = Nil): Column = {
-    val short = comparator.stripPrefix("no.priv.garshol.duke.comparators.") match {
-      case "ExactComparator" | "exact"                           => "exact"
-      case "JaroWinkler" | "jaro-winkler"                        => "jaroWinkler"
-      case "JaroWinklerTokenized" | "jaro-winkler-tokenized"     => "jaroWinklerTokenized"
-      case "Levenshtein" | "levenshtein"                         => "levenshteinSim"
-      case "levenshtein-max"                                     => "levenshteinSimMax"
-      case "levenshtein-cutoff"                                  => "levenshteinSimCutoff"
-      case "WeightedLevenshtein" | "weighted-levenshtein"        => "weightedLevenshteinSimD"
-      case "QGramComparator" | "qgram"                           => "qgramSimD"
-      case "DiceCoefficientComparator" | "dice"                  => "diceToken"
-      case "JaccardIndexComparator" | "jaccard"                  => "jaccardToken"
-      case "NumericComparator" | "numeric"                       => "numericSim"
-      case "GeopositionComparator" | "geoposition"               => "geoSimD"
-      case "SoundexComparator" | "soundex"                       => "soundexEq"
-      case "MetaphoneComparator" | "metaphone"                   => "metaphoneEq"
-      case "NorphoneComparator" | "norphone"                     => "norphoneEq"
-      case "PersonNameComparator" | "person-name"                => "personNameSim"
-      case "LongestCommonSubstring" | "longest-common-substring" => "lcsSim"
-      case other => throw new IllegalArgumentException(s"unknown comparator $other")
-    }
-    val defaults: Seq[Double] = short match {
-      case "qgramSimD" if params.isEmpty               => Seq(2.0, 1.0)
-      case "weightedLevenshteinSimD" if params.isEmpty => Seq(2.0)
-      case "geoSimD" if params.isEmpty                 => Seq(1000.0)
-      case _                                           => params
-    }
-    col2(SimExpr(x(a), x(b), short, defaults))
+    val c = Similarity.comparator(comparator)
+    col2(SimExpr(x(a), x(b), c.method, c.params(params)))
   }
 
   // -------- cleaners (C1-C9) --------
-  def clean(cleaner: String, c: Column): Column = {
-    val short = Cleaning.shortName(cleaner)
-    col2(CleanExpr(x(c), short))
-  }
+  def clean(cleaner: String, c: Column): Column = col2(CleanExpr(x(c), Cleaners.canonical(cleaner)))
   def clean_chain(cleaners: Seq[String], c: Column): Column =
     cleaners.foldLeft(c)((acc, n) => clean(n, acc))
+
+  /** Cleaned, non-empty values of an `array<string>` column: the chain on
+    * every element, then null / empty results dropped (the form the Duke fold
+    * takes — SURVEY.md §7.4).
+    */
+  def clean_values(cleaners: Seq[String], values: Column): Column =
+    filter(transform(values, v => clean_chain(cleaners, v)), v => v.isNotNull && v =!= "")
 
   // -------- text-dedup kernels --------
   def vec_dot(a: Column, b: Column): Column = col2(VecDotExpr(x(a), x(b)))
@@ -102,46 +84,24 @@ object functions {
   def bayes_combine(p: Column, q: Column): Column =
     p * q / (p * q + (lit(1.0) - p) * (lit(1.0) - q))
 
-  /** Per-property factor with missing-value skip (P3): null/empty on either side
-    * -> null (no evidence); the fold leaves the accumulator untouched on null.
-    */
-  def duke_factor(spec: PropertySpec, a: Column, b: Column): Column = {
-    val ca = clean_chain(spec.cleaners, a)
-    val cb = clean_chain(spec.cleaners, b)
-    when(a.isNull || b.isNull || ca === "" || cb === "", lit(null).cast("double"))
-      .otherwise(duke_probability(sim(spec.comparator, ca, cb, spec.params), spec.low, spec.high))
-  }
-
-  /** Multi-valued property factor (A2): arrays on both sides, max probability over
-    * the value cross product, empties excluded before the max (SURVEY.md §7.4).
-    */
-  def duke_factor_multi(spec: PropertySpec, a: Column, b: Column): Column = {
-    val ca = filter(transform(a, v => clean_chain(spec.cleaners, v)),
-      v => v.isNotNull && v =!= "")
-    val cb = filter(transform(b, v => clean_chain(spec.cleaners, v)),
-      v => v.isNotNull && v =!= "")
-    val probs = flatten(transform(ca, v1 => transform(cb, v2 =>
-      duke_probability(sim(spec.comparator, v1, v2, spec.params), spec.low, spec.high))))
-    when(a.isNull || b.isNull || size(ca) === 0 || size(cb) === 0,
-      lit(null).cast("double"))
-      .otherwise(array_max(probs))
-  }
-
-  /** A4/§8.3: full record score as one Column tree. `sides(name)` yields the
-    * (left, right) columns for a property; `multiValued` marks array columns.
-    * Fold from prior 0.5 in fixed property order (deterministic).
+  /** A4/§8.3: full record score as one `DukeScoreExpr` over cleaned value
+    * arrays. `sides(name)` yields the (left, right) raw columns of an evidence
+    * property; `multiValued` marks `array<string>` columns (the others are
+    * single strings). Cleaning runs per row through `clean_values`.
     */
   def duke_score(
       config: MatchConfig,
       sides: String => (Column, Column),
-      multiValued: Set[String] = Set.empty): Column =
-    config.properties.filter(_.isEvidence).foldLeft(lit(0.5)) { (acc, spec) =>
+      multiValued: Set[String] = Set.empty): Column = {
+    val evidence = config.copy(properties = config.properties.filter(_.isEvidence))
+    val kids = evidence.properties.flatMap { spec =>
       val (a, b) = sides(spec.name)
-      val f =
-        if (multiValued(spec.name)) duke_factor_multi(spec, a, b)
-        else duke_factor(spec, a, b)
-      when(f.isNull, acc).otherwise(bayes_combine(acc, f))
+      def values(c: Column) =
+        clean_values(spec.cleaners, if (multiValued(spec.name)) c else array(c))
+      Seq(values(a), values(b))
     }
+    col2(DukeScoreExpr(kids.map(x), evidence))
+  }
 
   /** Register the SQL surface (`sim_*`, `clean_*`, phonetic codes) so
     * `spark.sql` queries reach the same expressions (SURVEY.md §2.10).
@@ -151,17 +111,10 @@ object functions {
     def one(name: String, builder: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
         org.apache.spark.sql.catalyst.expressions.Expression): Unit =
       reg.createOrReplaceTempFunction(name, builder, "scala_udf")
-    Seq("exact" -> "exact", "jaro" -> "jaro", "jaro_winkler" -> "jaroWinkler",
-      "levenshtein_sim" -> "levenshteinSim", "qgram_dice" -> "qgramDice",
-      "dice" -> "diceToken", "jaccard" -> "jaccardToken", "numeric" -> "numericSim",
-      "person_name" -> "personNameSim", "lcs" -> "lcsSim",
-      "jaro_winkler_tokenized" -> "jaroWinklerTokenized")
-      .foreach { case (sqlName, m) =>
-        one(s"sim_$sqlName", es => SimExpr(es(0), es(1), m))
-      }
-    Seq("trim", "lowercase-normalize", "digits-only", "phone-number",
-      "family-comma-given", "company-name", "address-norwegian",
-      "person-name").foreach { c =>
+    Similarity.comparators.filter(_.sqlName.nonEmpty).foreach { c =>
+      one(s"sim_${c.sqlName}", es => SimExpr(es(0), es(1), c.method))
+    }
+    Cleaners.registry.keys.foreach { c =>
       one(s"clean_${c.replace('-', '_')}", es => CleanExpr(es.head, c))
     }
     Seq("soundex_code" -> "soundex", "metaphone_code" -> "metaphone",
@@ -169,22 +122,4 @@ object functions {
       one(n, es => PhoneticExpr(es.head, a))
     }
   }
-}
-
-private[expr] object Cleaning {
-  def shortName(cleaner: String): String =
-    graft.core.Cleaners.normalizeSpec(cleaner) match {
-      case "TrimCleaner" | "trim"                                   => "trim"
-      case "LowerCaseNormalizeCleaner" | "lowercase-normalize"      => "lowercase-normalize"
-      case "DigitsOnlyCleaner" | "digits-only"                      => "digits-only"
-      case "PhoneNumberCleaner" | "phone-number"                    => "phone-number"
-      case "FamilyCommaGivenCleaner" | "family-comma-given"         => "family-comma-given"
-      case "NorwegianCompanyNameCleaner" | "company-name"           => "company-name"
-      case "NorwegianAddressCleaner" | "address-norwegian"          => "address-norwegian"
-      case "PersonNameCleaner" | "person-name"                      => "person-name"
-      // parameterized specs pass through verbatim (CleanExpr resolves them)
-      case p if p.startsWith("regexp(") || p.startsWith("mapping(")
-        || p.startsWith("mapping-file(")                            => p
-      case other => throw new IllegalArgumentException(s"unknown cleaner $other")
-    }
 }

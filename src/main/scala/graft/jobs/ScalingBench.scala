@@ -19,7 +19,8 @@ import graft.pipeline.{ErPipeline, Fixtures}
   *      mapPartitions Duke scoring, count matches. Timed region = the scoring
   *      stage only (the metric is "scored pairs/sec" — BASELINE.md).
   *
-  * Run:
+  * Run (mode `prepare` or `score`; default dir /tmp/graft-scaling, default
+  * 60000 entities):
   *   SPARK_GRAFT_CPUS=8  sbt "runMain graft.jobs.ScalingBench prepare /tmp/sb 60000"
   *   SPARK_GRAFT_CPUS=8  sbt "runMain graft.jobs.ScalingBench score /tmp/sb"
   *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.jobs.ScalingBench score /tmp/sb"
@@ -64,7 +65,7 @@ object ScalingBench {
           s""""pairs":${spark.read.parquet(s"$dir/pairs").count()},""" +
           s""""salted_blocks":${stats.saltedBlocks},"dropped_blocks":${stats.droppedBlocks}}}""")
 
-      case "score" | "score-fused" =>
+      case "score" =>
         val records = spark.read.parquet(s"$dir/records").as[ErPipeline.CleanRecord]
         val pairs = spark.read.parquet(s"$dir/pairs").as[ErPipeline.PairIds]
         // warm the JVM + page cache once (JIT parity between runs), then time
@@ -72,18 +73,14 @@ object ScalingBench {
         // shared host whose delivered CPU varies over minutes, so a single
         // wall-clock sample is not meaningful
         val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-        val scoreFn: (org.apache.spark.sql.Dataset[ErPipeline.PairIds],
-            org.apache.spark.sql.Dataset[ErPipeline.CleanRecord],
-            MatchConfig) => org.apache.spark.sql.Dataset[ErPipeline.ScoredPair] =
-          if (mode == "score-fused") ErPipeline.scoreFused else ErPipeline.score
         val nPairs = pairs.count()
-        val warm = scoreFn(pairs.limit(50000), records, config)
+        val warm = ErPipeline.score(pairs.limit(50000), records, config)
         warm.filter($"score" >= config.threshold).count()
 
         var matches = 0L
         val times = (1 to reps).map { _ =>
           val t0 = System.nanoTime()
-          val scored = scoreFn(pairs, records, config)
+          val scored = ErPipeline.score(pairs, records, config)
           matches = scored.filter($"score" >= config.threshold).count()
           (System.nanoTime() - t0) / 1e9
         }

@@ -124,8 +124,8 @@ private[graft] object JsonLite {
     case m0 =>
       val m = m0.asInstanceOf[Map[String, Any]]
       val rawName = m("name").asInstanceOf[String]
-      rawName.stripPrefix("no.priv.garshol.duke.cleaners.") match {
-        case "RegexpCleaner" | "regexp" =>
+      graft.core.Cleaners.normalizeSpec(rawName) match {
+        case "regexp" =>
           val grp = m.get("group").map(_.asInstanceOf[Double].toInt).getOrElse(1)
           s"regexp(${m("pattern").asInstanceOf[String]},$grp)"
         case "mapping" =>
@@ -133,7 +133,7 @@ private[graft] object JsonLite {
           val body = dict.toSeq.sortBy(_._1)
             .map { case (k, v) => s"$k=${v.asInstanceOf[String]}" }.mkString("|")
           s"mapping($body)"
-        case "MappingFileCleaner" | "mapping-file" =>
+        case "mapping-file" =>
           s"mapping-file(${m("file").asInstanceOf[String]})"
         // parameterless cleaner written in object form: keep the name verbatim
         // (short or Duke class name — Cleaners.resolve handles both)

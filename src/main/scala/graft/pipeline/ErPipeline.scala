@@ -304,8 +304,9 @@ object ErPipeline {
   // ------------------------------------------------------------------ scoring
 
   /** Batched pairwise scoring in mapPartitions (mandated by BASELINE.json:6):
-    * the compiled config (cleaner chains + comparator dispatch resolved once)
-    * scores a whole partition's pairs in a tight JVM loop — the distributed
+    * the compiled config (comparators resolved once) scores a whole
+    * partition's pairs in a tight JVM loop through `Duke.CompiledConfig.score`
+    * — the one Duke fold, also behind `DukeScoreExpr` — the distributed
     * analog of `EntityResolutionScript.runAsDouble` over an ES shard's
     * candidate iterator (SURVEY.md §3.1).
     *
@@ -344,31 +345,6 @@ object ErPipeline {
         ScoredPair(aId, bId, key, cc.score(ap, bp))
       }
     }
-  }
-
-  /** Fused-expression scoring path (SURVEY.md M5): the whole clean-values ->
-    * probability -> Bayes fold runs inside one codegen'd Catalyst expression
-    * over the joined rows' array columns — no per-row Scala Map
-    * materialization. Value-identical to `score` (parity-tested); kept as the
-    * fast alternative beside the mandated mapPartitions path.
-    */
-  def scoreFused(
-      pairIds: Dataset[PairIds],
-      records: Dataset[CleanRecord],
-      config: MatchConfig): Dataset[ScoredPair] = {
-    val spark = pairIds.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.graftshim
-
-    val a = records.toDF("a_id", "a_props")
-    val b = records.toDF("b_id", "b_props")
-    val kids = config.properties.flatMap(p =>
-      Seq(col("a_props").getItem(p.name), col("b_props").getItem(p.name)))
-    val scoreCol = graftshim.column(
-      graft.expr.DukeScoreExpr(kids.map(graftshim.expression), config))
-    pairIds.toDF().join(a, "a_id").join(b, "b_id")
-      .select($"a_id", $"b_id", $"block_key", scoreCol.as("score"))
-      .as[ScoredPair]
   }
 
   /** Threshold classification (P4): match / maybe buckets. */

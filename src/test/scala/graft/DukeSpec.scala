@@ -41,19 +41,35 @@ class DukeSpec extends AnyFunSuite {
   }
 
   test("A2 multi-value max + P3 missing-value skip") {
-    val spec = PropertySpec("name", Nil, "exact", 0.1, 0.9)
-    val fn = Similarity.registry("exact")
+    val p = Duke.compile(MatchConfig(0.8, 0.6, Seq(
+      PropertySpec("name", Nil, "exact", 0.1, 0.9)))).properties(0)
     // best pair wins
-    val f = Duke.propertyFactor(Seq("a", "b"), Seq("x", "b"), spec, fn, Array.empty)
-    assert(f === Some(0.9))
+    assert(p.factor(Array("a", "b"), Array("x", "b")) === 0.9)
     // all-mismatch -> low
-    assert(Duke.propertyFactor(Seq("a"), Seq("x"), spec, fn, Array.empty) === Some(0.1))
-    // empty side -> None (no evidence, the fold must not move)
-    assert(Duke.propertyFactor(Nil, Seq("x"), spec, fn, Array.empty) === None)
+    assert(p.factor(Array("a"), Array("x")) === 0.1)
+    // empty or missing side -> no evidence (the fold must not move)
+    assert(p.factor(Array.empty, Array("x")) === Duke.NoEvidence)
+    assert(p.factor(null, Array("x")) === Duke.NoEvidence)
     // empty-after-cleaning values excluded BEFORE the max (§7.4 parity pitfall)
-    assert(Duke.propertyFactor(Seq("", "a"), Seq("a"), spec, fn, Array.empty) === Some(0.9))
-    assert(Duke.propertyFactor(Seq(""), Seq("a"), spec, fn, Array.empty) === None)
-    assert(Duke.propertyFactor(Seq(null, "a"), Seq("a"), spec, fn, Array.empty) === Some(0.9))
+    assert(p.factor(Array("", "a"), Array("a")) === 0.9)
+    assert(p.factor(Array(""), Array("a")) === Duke.NoEvidence)
+    assert(p.factor(Array(null, "a"), Array("a")) === 0.9)
+  }
+
+  test("unknown comparator names fail on the driver, naming the property") {
+    val bad = MatchConfig(0.8, 0.6, Seq(
+      PropertySpec("name", Nil, "jaro-winklr", 0.1, 0.9)))
+    for (build <- Seq[() => Any](
+        () => Duke.compile(bad),
+        () => graft.expr.DukeScoreExpr(Seq.fill(2)(
+          org.apache.spark.sql.catalyst.expressions.Literal(null)), bad))) {
+      val e = intercept[IllegalArgumentException](build())
+      assert(e.getMessage.contains("property 'name'"), e.getMessage)
+      assert(e.getMessage.contains("'jaro-winklr'"), e.getMessage)
+      assert(e.getMessage.contains("jaro-winkler"), e.getMessage) // the known names
+    }
+    // an id property is never compared: its comparator is not looked up
+    Duke.compile(bad.copy(properties = Seq(bad.properties(0).copy(idProperty = true))))
   }
 
   test("§8.3 record score: fold from 0.5 prior in fixed property order") {

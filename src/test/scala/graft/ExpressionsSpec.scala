@@ -1,9 +1,16 @@
 package graft
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedProjection}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.{Cleaners, Duke, Phonetics, Similarity}
+import graft.expr.{CleanExpr, SimExpr}
 import graft.expr.functions._
 import graft.model.MatchConfig
 
@@ -19,6 +26,28 @@ class ExpressionsSpec extends SparkSpec {
     val chars = "abcdefgh METAÅé 0123,.-'"
     (0 until n).map(_ => (0 until r.nextInt(14)).map(_ => chars(r.nextInt(chars.length))).mkString)
   }
+
+  private val boundA = BoundReference(0, StringType, nullable = true)
+  private val boundB = BoundReference(1, StringType, nullable = true)
+
+  /** Every comparator-table row as a SimExpr over (input 0, input 1), with
+    * the table function it must match: each config name of a row (short,
+    * Duke class, bare class) through `functions.sim`, and rows without one
+    * by method.
+    */
+  private lazy val tableExprs: Seq[(String, SimExpr, (String, String) => Double)] =
+    Similarity.comparators.flatMap { c =>
+      val p = c.defaults.toArray
+      val names = Similarity.registry.collect { case (n, r) if r eq c => n }.toSeq.sorted
+      val exprs =
+        if (names.isEmpty) Seq(c.method -> SimExpr(boundA, boundB, c.method))
+        else names.map(n => n -> graftshim.expression(sim(n, col("a"), col("b")))
+          .asInstanceOf[SimExpr].copy(left = boundA, right = boundB))
+      exprs.map { case (n, e) => (n, e, (x: String, y: String) => c.fn(x, y, p)) }
+    }
+
+  private def utf8Row(x: String, y: String) =
+    InternalRow(UTF8String.fromString(x), UTF8String.fromString(y))
 
   private lazy val pairDf = {
     val ws = words(23, 40)
@@ -55,6 +84,23 @@ class ExpressionsSpec extends SparkSpec {
       val want = fn(a, b)
       assert(got === want, s"$name('$a','$b'): expr=$got kernel=$want")
     }
+
+    // the whole comparator table, every alias: generated code (compiled
+    // directly — janino errors throw here instead of falling back to the
+    // interpreter) == the table function
+    val names = tableExprs.map(_._1).toSet
+    for (c <- Similarity.comparators; n <- Seq(c.name, c.dukeClass) if n.nonEmpty)
+      assert(names(n), s"table row $n not covered")
+    val proj = GenerateUnsafeProjection.generate(tableExprs.map(_._2))
+    val ws = words(23, 40)
+    for (x <- ws; y <- ws.take(20)) {
+      val row = proj(utf8Row(x, y))
+      for (((name, _, fn), ix) <- tableExprs.zipWithIndex)
+        assert(row.getDouble(ix) === fn(x, y), s"$name('$x','$y'): codegen vs table")
+    }
+    // aliases of a row build the same expression (prettyName, args)
+    for ((_, rows) <- tableExprs.groupBy(_._2.method))
+      assert(rows.map(_._2).distinct.size === 1, rows.map(_._1))
   }
 
   test("CleanExpr + PhoneticExpr match the kernel; nulls propagate") {
@@ -85,27 +131,47 @@ class ExpressionsSpec extends SparkSpec {
   test("interpreted (non-codegen) eval agrees with the codegen path") {
     // evaluate the raw expressions through catalyst's InterpretedProjection —
     // no session-wide codegen conf mutation (other suites share the session)
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedProjection}
-    import org.apache.spark.sql.types.StringType
-    import org.apache.spark.unsafe.types.UTF8String
-    import graft.expr.{CleanExpr, SimExpr}
-
-    val a = BoundReference(0, StringType, nullable = true)
-    val b = BoundReference(1, StringType, nullable = true)
     val proj = new InterpretedProjection(Seq(
-      SimExpr(a, b, "jaroWinkler"),
-      SimExpr(a, b, "qgramSimD", Seq(3.0, 2.0)),
-      CleanExpr(a, "lowercase-normalize")))
+      SimExpr(boundA, boundB, "jaroWinkler"),
+      SimExpr(boundA, boundB, "qgramSimD", Seq(3.0, 2.0)),
+      CleanExpr(boundA, "lowercase-normalize")))
     val ws = words(57, 30)
     for (x <- ws; y <- ws.take(10)) {
-      val row = proj(InternalRow(UTF8String.fromString(x), UTF8String.fromString(y)))
+      val row = proj(utf8Row(x, y))
       assert(row.getDouble(0) === Similarity.jaroWinkler(x, y))
       assert(row.getDouble(1) === Similarity.qgramSim(x, y, 3, Similarity.FormulaJaccard))
       assert(row.getUTF8String(2).toString === Cleaners.lowerCaseNormalize(x))
     }
     val nullRow = proj(InternalRow(null, UTF8String.fromString("x")))
     assert(nullRow.isNullAt(0) && nullRow.isNullAt(1) && nullRow.isNullAt(2))
+
+    // the whole comparator table, every alias: interpreted == codegen == table
+    val interp = new InterpretedProjection(tableExprs.map(_._2))
+    val gen = GenerateUnsafeProjection.generate(tableExprs.map(_._2))
+    for (x <- ws; y <- ws.take(10)) {
+      val i = interp(utf8Row(x, y))
+      val g = gen(utf8Row(x, y))
+      for (((name, _, fn), ix) <- tableExprs.zipWithIndex) {
+        assert(i.getDouble(ix) === fn(x, y), s"$name('$x','$y'): interpreted vs table")
+        assert(i.getDouble(ix) === g.getDouble(ix), s"$name('$x','$y'): interpreted vs codegen")
+      }
+    }
+  }
+
+  test("sim fills missing trailing params from the table's defaults") {
+    // q given, formula left out: Dice, the comparator's default formula —
+    // through the Column API, codegen and the interpreted fallback alike
+    def want(x: String, y: String) = Similarity.qgramSim(x, y, 3, Similarity.FormulaDice)
+    val out = pairDf.select(col("a"), col("b"), sim("qgram", col("a"), col("b"), Seq(3.0)))
+      .collect()
+    for (r <- out) assert(r.getDouble(2) === want(r.getString(0), r.getString(1)))
+    val partial = Seq(SimExpr(boundA, boundB, "qgramSimD", Seq(3.0)))
+    val gen = GenerateUnsafeProjection.generate(partial)
+    val interp = new InterpretedProjection(partial)
+    for (x <- words(61, 20); y <- words(62, 10)) {
+      assert(gen(utf8Row(x, y)).getDouble(0) === want(x, y))
+      assert(interp(utf8Row(x, y)).getDouble(0) === want(x, y))
+    }
   }
 
   test("SQL registration exposes sim_*/clean_* to spark.sql") {

@@ -144,11 +144,10 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("properties: bounds, identity, symmetry for all registry comparators") {
     val words = randomWords(11, 60)
-    val params = Map(
-      "qgram" -> Array(2.0, 1.0), "weighted-levenshtein" -> Array(2.0),
-      "geoposition" -> Array(1000.0))
-    for ((name, fn) <- registry if !name.contains("duke")) {
-      val p = params.getOrElse(name, Array.empty[Double])
+    for (c <- comparators) {
+      val name = c.method
+      val fn = c.fn
+      val p = c.defaults.toArray
       for (a <- words.take(25); b <- words.take(25)) {
         val s = fn(a, b, p)
         assert(s >= 0.0 - eps && s <= 1.0 + eps, s"$name($a,$b) = $s out of [0,1]")
@@ -158,18 +157,27 @@ class SimilaritySpec extends AnyFunSuite {
       for (a <- words) {
         val s = fn(a, a, p)
         // numeric/geo return 0.5 ("no evidence") on unparseable self-compare
-        assert(s === 1.0 || ((name == "numeric" || name == "geoposition") && s === 0.5),
+        assert(s === 1.0 || ((c.name == "numeric" || c.name == "geoposition") && s === 0.5),
           s"$name($a,$a) = $s != 1")
       }
     }
   }
 
   test("duke class-name aliases dispatch to the same functions") {
-    assert(dispatch("no.priv.garshol.duke.comparators.JaroWinkler", "MARTHA", "MARHTA", Array.empty)
-      === jaroWinkler("MARTHA", "MARHTA"))
-    assert(dispatch("no.priv.garshol.duke.comparators.Levenshtein", "kitten", "sitting", Array.empty)
+    def viaTable(name: String, a: String, b: String): Double = {
+      val c = comparator(name)
+      c.fn(a, b, c.params(Nil).toArray)
+    }
+    for (jw <- Seq("no.priv.garshol.duke.comparators.JaroWinkler", "JaroWinkler", "jaro-winkler"))
+      assert(viaTable(jw, "MARTHA", "MARHTA") === jaroWinkler("MARTHA", "MARHTA"))
+    assert(viaTable("no.priv.garshol.duke.comparators.Levenshtein", "kitten", "sitting")
       === levenshteinSim("kitten", "sitting"))
-    assert(dispatch("no.priv.garshol.duke.comparators.QGramComparator", "nelson", "neilsen", Array.empty)
+    assert(viaTable("no.priv.garshol.duke.comparators.QGramComparator", "nelson", "neilsen")
       === qgramSim("nelson", "neilsen", 2, FormulaDice))
+    // every Duke class resolves, with and without its package, to its row
+    for (c <- comparators if c.dukeClass.nonEmpty) {
+      assert(comparator(DukePackage + c.dukeClass) eq c)
+      assert(comparator(c.dukeClass) eq c)
+    }
   }
 }
