@@ -1117,9 +1117,10 @@ object SparkEntry {
         "CAST(length(text) AS BIGINT) AS n_chars")
     }),
 
-    /** Multimodal plumbing: opaque binary column + typed metadata; the decode
-      * step is a deterministic stub (no media libs in this container), the
-      * schema/partitioning/batching are real (see graft.pipeline.Media).
+    /** Media metadata over an opaque binary column: byte length, a coarse
+      * kind and placeholder dimensions derived from the length (no media
+      * codec is involved; media spans take part in matching only through
+      * exact comparators on `media_ref`).
       */
     "q_media_meta" -> ((s, dir) => {
       t(s, dir, "documents")

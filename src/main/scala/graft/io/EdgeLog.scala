@@ -17,7 +17,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * A long-lived stream accumulates one dir per batch; after 10⁵ micro-batches
   * the file LISTING dominates downstream reads — [[compact]] folds all batch
   * dirs EXCEPT the newest into a single `batch_id=-1` partition (crash-safe
-  * bak/rename swap, auto-recovering like `Tables.compactBucketed`). The
+  * bak/rename swap, auto-recovering like `Tables.compactBatchBucketed`). The
   * newest batch — the only one a crashed stream can have left uncommitted in
   * the checkpoint — is carried over untouched, so a restart's replay
   * overwrites it in place instead of duplicating rows the fold already
@@ -37,11 +37,10 @@ object EdgeLog {
     spark.read.parquet(dir).drop("batch_id")
 
   /** True once at least one batch dir has committed (its `_SUCCESS` marker
-    * landed) — the existence probe for downstream readers. Hadoop FS, not
-    * java.io: this probe runs every micro-batch and must work against
-    * HDFS/object-store paths, not just the local FS.
+    * landed). Hadoop FS, not java.io: the log may live on HDFS or an object
+    * store, not just the local FS.
     */
-  def hasData(spark: SparkSession, dir: String): Boolean = {
+  private def hasData(spark: SparkSession, dir: String): Boolean = {
     import org.apache.hadoop.fs.{FileSystem, Path => HPath}
     val p = new HPath(dir)
     val fs = FileSystem.get(p.toUri, spark.sessionState.newHadoopConf())

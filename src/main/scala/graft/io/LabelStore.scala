@@ -1,6 +1,6 @@
 package graft.io
 
-import java.nio.file.{Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -11,13 +11,14 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *
   *   - layout `c`: partitioned by `hash(cluster_id)` — a cluster's members
   *     co-locate, so a relabel commit rewrites only the partitions holding
-  *     affected clusters (the write path, unchanged from round 4's
-  *     [[HashPartitionedTable]]);
+  *     affected clusters (the write path);
   *   - layout `d`: partitioned by `hash(doc_id)` — the per-batch label
   *     LOOKUPS (edge-endpoint labels, new-doc existence) prune to the
   *     batch's doc partitions instead of scanning the full label table.
   *     At 10⁹ accumulated docs that read was the last O(corpus) cost left
   *     in the micro-batch loop.
+  *
+  * Both layouts hash into the same `nBuckets` partitions.
   *
   * One manifest + one CURRENT pointer swap commits BOTH layouts — they can
   * never diverge under a crash, which is what makes the replay reasoning of
@@ -29,12 +30,13 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * Layout: `data/s<k>/c/__part=i`, `data/s<k>/d/__part=j`; manifests and
   * pointer as in [[SnapshotIo]]. Storage doubles (each row stored twice) —
   * the standard index trade, bought once, vs a full-table scan per batch.
+  * This is the engine's one snapshot table: an offline stand-in for
+  * Iceberg's snapshot/manifest semantics (no Iceberg jars ship with the
+  * Spark distribution), whose manifest I/O runs on a driver-visible
+  * filesystem.
   */
-class LabelStore(val root: String, val nClusterBuckets: Int, val nDocBuckets: Int) {
-  require(nClusterBuckets > 0, s"nClusterBuckets must be positive, got $nClusterBuckets")
-  require(nDocBuckets > 0, s"nDocBuckets must be positive, got $nDocBuckets")
-
-  def this(root: String, nBuckets: Int) = this(root, nBuckets, nBuckets)
+class LabelStore(val root: String, val nBuckets: Int) {
+  require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
 
   private def rootP: Path = Paths.get(root)
 
@@ -43,10 +45,10 @@ class LabelStore(val root: String, val nClusterBuckets: Int, val nDocBuckets: In
   /** Partition of a `cluster_id` value in layout `c` (the writer's own
     * expression — callers derive affected partitions with it).
     */
-  def clusterPart(c: Column): Column = HashLayout.partExpr(c, nClusterBuckets)
+  def clusterPart(c: Column): Column = HashLayout.partExpr(c, nBuckets)
 
   /** Partition of a `doc_id` value in layout `d`. */
-  def docPart(c: Column): Column = HashLayout.partExpr(c, nDocBuckets)
+  def docPart(c: Column): Column = HashLayout.partExpr(c, nBuckets)
 
   private def snapshotDirs(k: Long): Seq[String] = SnapshotIo.dirs(rootP, k)
 
@@ -137,4 +139,133 @@ class LabelStore(val root: String, val nClusterBuckets: Int, val nDocBuckets: In
     */
   def expireSnapshots(keepLast: Int = 1): Unit =
     SnapshotMaintenance.expire(root, keepLast)
+}
+
+/** The snapshot-layout protocol (manifest format, pointer-swap commit).
+  * Layout:
+  *   root/data/s<k>/…                  (files/partition-dirs per snapshot)
+  *   root/snapshots/v<k>.json          ({"snapshot":k,"dirs":[...],"op":…})
+  *   root/CURRENT                      (latest k; atomically replaced)
+  */
+private[io] object SnapshotIo {
+  def current(rootP: Path): Option[Long] = {
+    val p = rootP.resolve("CURRENT")
+    if (Files.exists(p)) Some(Files.readString(p).trim.toLong) else None
+  }
+
+  /** Dirs composing snapshot `k` (stored as a JSON array of strings on one
+    * line); throws if the manifest is missing (expired or never committed).
+    */
+  def dirs(rootP: Path, k: Long): Seq[String] = {
+    val j = Files.readString(rootP.resolve(s"snapshots/v$k.json"))
+    "\"data/[^\"]+\"".r.findAllIn(j).map(_.stripPrefix("\"").stripSuffix("\"")).toSeq
+  }
+
+  /** Write manifest k then atomically swap the CURRENT pointer — the swap IS
+    * the commit (Iceberg's metadata-pointer semantics).
+    */
+  def commitManifest(rootP: Path, k: Long, op: String, dirList: Seq[String]): Unit = {
+    Files.createDirectories(rootP.resolve("snapshots"))
+    val manifest =
+      s"""{"snapshot":$k,"op":"$op","ts":${System.currentTimeMillis()},""" +
+        s""""dirs":[${dirList.map(d => "\"" + d + "\"").mkString(",")}]}"""
+    Files.writeString(rootP.resolve(s"snapshots/v$k.json"), manifest)
+    val tmp = rootP.resolve("CURRENT.tmp")
+    Files.writeString(tmp, k.toString)
+    Files.move(tmp, rootP.resolve("CURRENT"), StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
+  }
+}
+
+/** Iceberg `expireSnapshots` analog for the snapshot layout: drop
+  * manifests older than the newest `keepLast` snapshots and physically delete
+  * every data dir that NO retained snapshot references. Without expiry a
+  * long-running stream accumulates one data dir per commit forever — at 10⁹
+  * accumulated docs the file listing itself becomes the read bottleneck; with
+  * expiry storage is bounded by keepLast × live data (time travel is
+  * correspondingly limited to the retained window — the standard Iceberg
+  * trade, and why this is an explicit maintenance call, not automatic).
+  */
+object SnapshotMaintenance {
+  def expire(root: String, keepLast: Int): Unit = {
+    require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
+    val rootP = Paths.get(root)
+    val currentP = rootP.resolve("CURRENT")
+    if (!Files.exists(currentP)) return
+    val current = Files.readString(currentP).trim.toLong
+    val cutoff = current - keepLast + 1
+    def dirsOf(k: Long): Seq[String] =
+      if (!Files.exists(rootP.resolve(s"snapshots/v$k.json"))) Seq.empty
+      else SnapshotIo.dirs(rootP, k)
+    val retained = (cutoff to current).flatMap(dirsOf).toSet
+    // expire [OLDEST, cutoff): the low-water mark bounds per-call work to
+    // O(newly expired) instead of rescanning every snapshot id since 1 on
+    // each per-batch call — and unlike a stop-at-first-gap walk, a crash
+    // mid-loop self-heals (the mark only advances AFTER the sweep, so the
+    // next call re-covers the crashed range; re-deleting is a no-op)
+    val oldestP = rootP.resolve("OLDEST")
+    val oldest =
+      if (Files.exists(oldestP)) Files.readString(oldestP).trim.toLong else 1L
+    for (k <- oldest until cutoff) {
+      dirsOf(k).filterNot(retained).foreach(d => LocalFs.deleteTree(rootP.resolve(d)))
+      Files.deleteIfExists(rootP.resolve(s"snapshots/v$k.json"))
+    }
+    if (cutoff > oldest) Files.writeString(oldestP, cutoff.toString)
+    // prune dirs left empty after partition-dir deletion, bottom-up — a
+    // data/s<k> whose nested layout dirs (LabelStore's c/ and d/) emptied
+    // collapses entirely. "Empty" includes dirs whose only remaining entries
+    // are `_`/`.`-prefixed marker files (partitionBy writes a `_SUCCESS` at
+    // the layout root that would otherwise keep one dead s<k> dir pair alive
+    // per expired snapshot, forever); dirs a retained manifest references are
+    // never touched (an empty-frame commit legitimately produces a
+    // marker-only dir that readSnapshot must still be able to open)
+    val retainedAbs = retained.map(d => rootP.resolve(d).normalize)
+    val dataP = rootP.resolve("data")
+    if (Files.exists(dataP)) {
+      val walk = Files.walk(dataP)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+        .filter(p => p != dataP && Files.isDirectory(p) &&
+          !retainedAbs.contains(p.normalize))
+        .forEach { p =>
+          val inner = p.toFile.listFiles()
+          val onlyMarkers = inner != null && inner.forall(f =>
+            f.isFile && (f.getName.startsWith("_") || f.getName.startsWith(".")))
+          if (inner == null || inner.isEmpty) Files.deleteIfExists(p)
+          else if (onlyMarkers) {
+            inner.foreach(f => Files.deleteIfExists(f.toPath))
+            Files.deleteIfExists(p)
+          }
+        }
+      finally walk.close()
+    }
+  }
+}
+
+/** The hash-partitioned dir layout of [[LabelStore]]: one `__part=i` dir per
+  * `pmod(xxhash64(key), n)` bucket. Single definition so the writer's
+  * partition expression, the dir-name parser, and the post-write listing can
+  * never diverge.
+  */
+private[io] object HashLayout {
+  import org.apache.spark.sql.functions.{lit, pmod, xxhash64}
+
+  /** The partition a key value belongs to (the writer's own expression —
+    * callers derive affected partitions with it).
+    */
+  def partExpr(c: Column, nBuckets: Int): Column =
+    pmod(xxhash64(c), lit(nBuckets.toLong)).cast("int")
+
+  /** Partition index encoded in a `__part=i` dir path. */
+  def partOf(dir: String): Int =
+    dir.substring(dir.lastIndexOf("__part=") + "__part=".length).toInt
+
+  /** Relative `__part=` dirs now present under `rootP/dataDir` (the listing
+    * a commit records in its manifest; empty partitions create no dir).
+    */
+  def listPartDirs(rootP: Path, dataDir: String): Seq[String] = {
+    val d = rootP.resolve(dataDir).toFile.listFiles()
+    if (d == null) Seq.empty
+    else d.filter(f => f.isDirectory && f.getName.startsWith("__part="))
+      .map(f => s"$dataDir/${f.getName}").toSeq.sorted
+  }
 }

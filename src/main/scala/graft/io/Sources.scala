@@ -9,6 +9,8 @@ import graft.expr.functions.clean_chain
   * the Spark analog of `[D datasources/CsvDataSource.java]` (SURVEY.md §2.1
   * S4/S5): a source yields cleaned Duke records, cleaning happens once at
   * ingest, declaratively (inside the scan's codegen stage), never per pair.
+  * Duke's N-Triples and SPARQL sources are out of scope (S5): read those
+  * with Spark and clean the columns with `clean_chain`.
   */
 object Sources {
 
@@ -64,149 +66,6 @@ object Sources {
     withCleaners(reader.load(), cleaners)
   }
 
-  /** N-Triples source (Duke `[D datasources/NTriplesDataSource.java]` analog):
-    * parses `<subj> <pred> obj .` lines (IRI or quoted-literal objects, with
-    * `^^type` / `@lang` suffixes and standard escapes), keeps the mapped
-    * predicates, and pivots to one row per subject — `doc_id` plus one
-    * `array<string>` column per mapped predicate (Duke records are
-    * multi-valued). Line parsing is a per-row pure function (`NTriples
-    * .parseLine`, golden-tested); the pivot is a single hash aggregation on
-    * subject. SparqlDataSource stays out of scope (needs a live endpoint —
-    * SURVEY.md §2.1).
-    *
-    * `predicates`: full predicate IRI -> output column name.
-    */
-  def ntriples(
-      spark: SparkSession,
-      path: String,
-      predicates: Map[String, String],
-      cleaners: Map[String, Seq[String]] = Map.empty): DataFrame = {
-    import spark.implicits._
-    require(predicates.nonEmpty, "ntriples needs at least one mapped predicate")
-    val parsed = spark.read.textFile(path)
-      .flatMap(NTriples.parseLine)
-      .toDF("subject", "predicate", "object")
-    val wanted = predicates.keySet
-    val aggs = predicates.toSeq.sortBy(_._2).map { case (iri, name) =>
-      collect_list(when(col("predicate") === iri, col("object"))).as(name)
-    }
-    val pivoted = parsed
-      .where(col("predicate").isInCollection(wanted))
-      .groupBy(col("subject").as("doc_id"))
-      .agg(aggs.head, aggs.tail: _*)
-    withCleaners(pivoted, cleaners)
-  }
-
-  /** SPARQL source (Duke `[D datasources/SparqlDataSource.java]` analog):
-    * execute a SELECT against an HTTP endpoint speaking the W3C
-    * `application/sparql-results+json` protocol and pivot the bindings to
-    * multi-valued records.
-    *
-    *  - **tabular mode** (Duke triple-mode=false): every result variable in
-    *    `variables` is a property; rows group by `idVar`, values collect per
-    *    variable.
-    *  - **triple mode** (Duke's default): the query returns (id, property,
-    *    value) bindings named by `idVar`/`propVar`/`valueVar`; property IRIs
-    *    map to record properties through `variables`.
-    *
-    * Paging mirrors Duke's page-size loop — `LIMIT pageSize OFFSET k` per
-    * page until a short page returns — but the page fetches are DISTRIBUTED
-    * (VERDICT r3 "What's wrong #3"): offsets go out as a Dataset in rounds of
-    * `pagesPerRound`, each executor task fetches its page over HTTP and
-    * emits that page's triples, and the driver sees only per-page row COUNTS
-    * (to decide when the stream is exhausted) — never the result set itself.
-    * `pageSize <= 0` keeps the single unpaged driver-side request
-    * (config/reference-shaped result sets). Tested against an in-process
-    * loopback HTTP server incl. a multi-round distributed fetch (SourcesSpec)
-    * — no external endpoint required.
-    */
-  def sparql(
-      spark: SparkSession,
-      endpoint: String,
-      query: String,
-      idVar: String,
-      variables: Map[String, String],
-      tripleMode: Boolean = false,
-      propVar: String = "p",
-      valueVar: String = "o",
-      pageSize: Int = 0,
-      cleaners: Map[String, Seq[String]] = Map.empty,
-      pagesPerRound: Int = 32): DataFrame = {
-    import spark.implicits._
-    // a ramp width of min(width*2, 0) would pin every round to zero offsets
-    // and spin forever (no round can ever contain the short page)
-    require(pagesPerRound >= 1, s"pagesPerRound must be >= 1, got $pagesPerRound")
-    // binding rows -> (subject, key, value, ord) triples; runs executor-side
-    // in the paged path (captures only small serializable config values).
-    // `ord` is the row's global position in the endpoint's result stream
-    // (page offset + within-page index): the distributed paged fetch unions
-    // per-round frames, so without an explicit order key the multi-valued
-    // collect_list below would depend on partition/union layout instead of
-    // the page order the driver-side loop used to preserve (ADVICE r4)
-    val wantedVars = variables.keySet
-    def toTriples(rows: Seq[Map[String, String]], baseOrd: Long): Seq[(String, String, String, Long)] =
-      if (tripleMode)
-        rows.zipWithIndex.flatMap { case (r, i) => for {
-          s <- r.get(idVar); p <- r.get(propVar); o <- r.get(valueVar)
-        } yield (s, p, o, baseOrd + i) }
-      else
-        rows.zipWithIndex.flatMap { case (r, i) => r.get(idVar).toSeq.flatMap(s =>
-          wantedVars.toSeq.sorted.flatMap(v => r.get(v).map(o => (s, v, o, baseOrd + i)))) }
-
-    val keyed: DataFrame =
-      if (pageSize <= 0)
-        toTriples(Sparql.fetch(endpoint, query), 0L)
-          .toDF("subject", "key", "object", "ord")
-      else {
-        val rounds = scala.collection.mutable.ArrayBuffer[DataFrame]()
-        var off = 0L
-        var width = 1
-        var exhausted = false
-        while (!exhausted) {
-          // geometric ramp 1, 2, 4, … capped at pagesPerRound: a one-page
-          // result set costs one request (not a full round of guaranteed-
-          // empty fetches), while long streams still reach full parallelism;
-          // wasted tail fetches are bounded by the final round's width
-          val offsets = (0 until width).map(i => off + i.toLong * pageSize)
-          // pin each round: the HTTP fetches run exactly once, then both the
-          // count read and the triple union serve from stored blocks
-          // coalesce-then-round-robin: width rows in ONE input partition
-          // round-robin to exactly one offset per task, with no range-
-          // sampling job (repartitionByRange runs one per round)
-          val fetched = Persist.truncate(offsets.toDS()
-            .coalesce(1).repartition(width)
-            .map { o =>
-              val rows = Sparql.fetch(endpoint, s"$query LIMIT $pageSize OFFSET $o")
-              (o, rows.size, toTriples(rows, o))
-            }.toDF("offset", "n", "triples"))
-          rounds += fetched
-            .select(explode(col("triples")).as("t"))
-            .select(col("t._1").as("subject"), col("t._2").as("key"),
-              col("t._3").as("object"), col("t._4").as("ord"))
-          // a short (or empty) page means the result stream ended this round
-          exhausted = fetched.select(col("n")).as[Int].collect().exists(_ < pageSize)
-          off += width.toLong * pageSize
-          width = math.min(width * 2, pagesPerRound)
-        }
-        rounds.reduce(_ unionByName _)
-      }
-
-    // order-carrying aggregation: collect (ord, value) structs, sort by the
-    // global row order, strip the key — multi-valued property order is the
-    // endpoint's result order regardless of partition layout
-    val aggs = variables.toSeq.sortBy(_._2).map { case (k, name) =>
-      sort_array(collect_list(when(col("key") === k,
-        struct(col("ord").as("o1"), col("object").as("v"))))).as(name)
-    }
-    val pivoted0 = keyed
-      .where(col("key").isInCollection(variables.keySet))
-      .groupBy(col("subject").as("doc_id"))
-      .agg(aggs.head, aggs.tail: _*)
-    val pivoted = variables.values.foldLeft(pivoted0)((df, name) =>
-      df.withColumn(name, expr(s"transform(`$name`, x -> x.v)")))
-    withCleaners(pivoted, cleaners)
-  }
-
   private def withCleaners(df: DataFrame, cleaners: Map[String, Seq[String]]): DataFrame =
     cleaners.foldLeft(df) { case (acc, (column, chain)) =>
       val isArray = df.schema(column).dataType.typeName == "array"
@@ -215,96 +74,4 @@ object Sources {
         else clean_chain(chain, col(column))
       acc.withColumn(column, cleaned)
     }
-}
-
-/** SPARQL protocol plumbing (driver-side, unit-testable): HTTP GET with the
-  * standard `query` parameter + JSON results parsing via the same minimal
-  * JSON parser the config loader uses (graft.model.JsonLite).
-  */
-private[io] object Sparql {
-
-  /** One page: GET endpoint?query=<urlencoded> with the results+json Accept
-    * header; returns the bindings as var->lexical-value maps (the `value`
-    * field of each W3C binding object — IRIs and literals keep their lexical
-    * form, matching the NTriples reader's treatment).
-    */
-  def fetch(endpoint: String, query: String): Seq[Map[String, String]] = {
-    val url = endpoint + (if (endpoint.contains("?")) "&" else "?") +
-      "query=" + java.net.URLEncoder.encode(query, "UTF-8")
-    val client = java.net.http.HttpClient.newHttpClient()
-    val req = java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
-      .header("Accept", "application/sparql-results+json")
-      .GET().build()
-    val resp = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
-    require(resp.statusCode() == 200, s"sparql endpoint returned ${resp.statusCode()}")
-    parseResults(resp.body())
-  }
-
-  def parseResults(json: String): Seq[Map[String, String]] = {
-    val root = graft.model.JsonLite.parse(json)._1.asInstanceOf[Map[String, Any]]
-    val results = root.getOrElse("results", Map.empty).asInstanceOf[Map[String, Any]]
-    val bindings = results.getOrElse("bindings", Nil).asInstanceOf[List[Any]]
-    bindings.map { b =>
-      b.asInstanceOf[Map[String, Any]].map { case (v, cell) =>
-        v -> cell.asInstanceOf[Map[String, Any]].getOrElse("value", "").toString
-      }
-    }
-  }
-}
-
-/** Pure N-Triples line parser (unit-testable without a session). Supports the
-  * subset Duke consumes: IRI subjects/predicates, IRI or literal objects,
-  * literal `^^<type>` / `@lang` suffixes, `\t \n \r \" \\ \uXXXX` escapes,
-  * comment and blank lines.
-  */
-private[io] object NTriples {
-
-  def parseLine(line0: String): Option[(String, String, String)] = {
-    val line = line0.trim
-    if (line.isEmpty || line.startsWith("#")) return None
-    try {
-      if (!line.startsWith("<")) return None
-      val sEnd = line.indexOf('>')
-      val subject = line.substring(1, sEnd)
-      var i = skipWs(line, sEnd + 1)
-      if (line.charAt(i) != '<') return None
-      val pEnd = line.indexOf('>', i)
-      val predicate = line.substring(i + 1, pEnd)
-      i = skipWs(line, pEnd + 1)
-      val obj = line.charAt(i) match {
-        case '<' =>
-          line.substring(i + 1, line.indexOf('>', i))
-        case '"' =>
-          // closing quote = first unescaped "
-          var j = i + 1
-          val sb = new StringBuilder
-          while (line.charAt(j) != '"') {
-            if (line.charAt(j) == '\\') {
-              line.charAt(j + 1) match {
-                case 't'  => sb.append('\t'); j += 2
-                case 'n'  => sb.append('\n'); j += 2
-                case 'r'  => sb.append('\r'); j += 2
-                case '"'  => sb.append('"'); j += 2
-                case '\\' => sb.append('\\'); j += 2
-                case 'u' =>
-                  sb.append(Integer.parseInt(line.substring(j + 2, j + 6), 16).toChar)
-                  j += 6
-                case c => sb.append(c); j += 2
-              }
-            } else { sb.append(line.charAt(j)); j += 1 }
-          }
-          sb.toString // ^^type / @lang suffixes ignored (Duke keeps the lexical value)
-        case _ => return None // blank nodes out of the consumed subset
-      }
-      Some((subject, predicate, obj))
-    } catch {
-      case _: IndexOutOfBoundsException | _: NumberFormatException => None
-    }
-  }
-
-  private def skipWs(s: String, from: Int): Int = {
-    var i = from
-    while (i < s.length && s.charAt(i).isWhitespace) i += 1
-    i
-  }
 }

@@ -1,323 +1,50 @@
 package graft.io
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.execution.datasources.BucketingUtils
+import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
-/** Iceberg-layout storage for the offline sandbox (SURVEY.md §7.4): snapshot
-  * manifests over partitioned Parquet with append/overwrite and
-  * time-travel-by-snapshot-id. The real `spark.read.format("iceberg")` binding
-  * is one implementation away (no Iceberg jars ship in /opt/spark/jars —
-  * verified); the engine's sinks speak this trait so swapping in Iceberg later
-  * is a constructor change, not a pipeline change.
-  */
-trait IcebergLikeTable {
-  def append(df: DataFrame): Long
-  def overwrite(df: DataFrame): Long
-  def read(spark: SparkSession): DataFrame
-  def readSnapshot(spark: SparkSession, snapshotId: Long): DataFrame
-  def currentSnapshot: Option[Long]
-}
-
-/** The snapshot-layout protocol shared by both table classes (manifest
-  * format, pointer-swap commit) — one definition, so the layouts cannot
-  * silently diverge. Layout:
-  *   root/data/s<k>/…                  (files/partition-dirs per snapshot)
-  *   root/snapshots/v<k>.json          ({"snapshot":k,"dirs":[...],"op":…})
-  *   root/CURRENT                      (latest k; atomically replaced)
-  */
-private[io] object SnapshotIo {
-  def current(rootP: Path): Option[Long] = {
-    val p = rootP.resolve("CURRENT")
-    if (Files.exists(p)) Some(Files.readString(p).trim.toLong) else None
-  }
-
-  /** Dirs composing snapshot `k` (stored as a JSON array of strings on one
-    * line); throws if the manifest is missing (expired or never committed).
-    */
-  def dirs(rootP: Path, k: Long): Seq[String] = {
-    val j = Files.readString(rootP.resolve(s"snapshots/v$k.json"))
-    "\"data/[^\"]+\"".r.findAllIn(j).map(_.stripPrefix("\"").stripSuffix("\"")).toSeq
-  }
-
-  /** Write manifest k then atomically swap the CURRENT pointer — the swap IS
-    * the commit (Iceberg's metadata-pointer semantics).
-    */
-  def commitManifest(rootP: Path, k: Long, op: String, dirList: Seq[String]): Unit = {
-    Files.createDirectories(rootP.resolve("snapshots"))
-    val manifest =
-      s"""{"snapshot":$k,"op":"$op","ts":${System.currentTimeMillis()},""" +
-        s""""dirs":[${dirList.map(d => "\"" + d + "\"").mkString(",")}]}"""
-    Files.writeString(rootP.resolve(s"snapshots/v$k.json"), manifest)
-    val tmp = rootP.resolve("CURRENT.tmp")
-    Files.writeString(tmp, k.toString)
-    Files.move(tmp, rootP.resolve("CURRENT"), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-}
-
-class PartitionedParquetTable(val root: String) extends IcebergLikeTable {
-  private def rootP: Path = Paths.get(root)
-
-  def currentSnapshot: Option[Long] = SnapshotIo.current(rootP)
-
-  private def snapshotDirs(k: Long): Seq[String] = SnapshotIo.dirs(rootP, k)
-
-  private def commit(df: DataFrame, op: String): Long = {
-    val k = currentSnapshot.getOrElse(0L) + 1
-    val dataDir = s"data/s$k"
-    df.write.mode("overwrite").parquet(s"$root/$dataDir")
-    val dirs =
-      if (op == "append") currentSnapshot.map(snapshotDirs).getOrElse(Nil) :+ dataDir
-      else Seq(dataDir)
-    SnapshotIo.commitManifest(rootP, k, op, dirs)
-    k
-  }
-
-  def append(df: DataFrame): Long = commit(df, "append")
-  def overwrite(df: DataFrame): Long = commit(df, "overwrite")
-
-  def read(spark: SparkSession): DataFrame =
-    readSnapshot(spark, currentSnapshot.getOrElse(
-      throw new IllegalStateException(s"empty table $root")))
-
-  def readSnapshot(spark: SparkSession, snapshotId: Long): DataFrame = {
-    val dirs = snapshotDirs(snapshotId).map(d => s"$root/$d")
-    spark.read.parquet(dirs: _*)
-  }
-
-  /** Iceberg `expireSnapshots` analog — see [[SnapshotMaintenance.expire]]. */
-  def expireSnapshots(keepLast: Int = 1): Unit =
-    SnapshotMaintenance.expire(root, keepLast)
-}
-
-/** Iceberg `expireSnapshots` analog for the offline snapshot layout: drop
-  * manifests older than the newest `keepLast` snapshots and physically delete
-  * every data dir that NO retained snapshot references. Without expiry a
-  * long-running stream accumulates one data dir per commit forever — at 10⁹
-  * accumulated docs the file listing itself becomes the read bottleneck; with
-  * expiry storage is bounded by keepLast × live data (time travel is
-  * correspondingly limited to the retained window — the standard Iceberg
-  * trade, and why this is an explicit maintenance call, not automatic).
-  */
-object SnapshotMaintenance {
-  def expire(root: String, keepLast: Int): Unit = {
-    require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val rootP = Paths.get(root)
-    val currentP = rootP.resolve("CURRENT")
-    if (!Files.exists(currentP)) return
-    val current = Files.readString(currentP).trim.toLong
-    val cutoff = current - keepLast + 1
-    def dirsOf(k: Long): Seq[String] =
-      if (!Files.exists(rootP.resolve(s"snapshots/v$k.json"))) Seq.empty
-      else SnapshotIo.dirs(rootP, k)
-    val retained = (cutoff to current).flatMap(dirsOf).toSet
-    // expire [OLDEST, cutoff): the low-water mark bounds per-call work to
-    // O(newly expired) instead of rescanning every snapshot id since 1 on
-    // each per-batch call — and unlike a stop-at-first-gap walk, a crash
-    // mid-loop self-heals (the mark only advances AFTER the sweep, so the
-    // next call re-covers the crashed range; re-deleting is a no-op)
-    val oldestP = rootP.resolve("OLDEST")
-    val oldest =
-      if (Files.exists(oldestP)) Files.readString(oldestP).trim.toLong else 1L
-    for (k <- oldest until cutoff) {
-      dirsOf(k).filterNot(retained).foreach(d => LocalFs.deleteTree(rootP.resolve(d)))
-      Files.deleteIfExists(rootP.resolve(s"snapshots/v$k.json"))
-    }
-    if (cutoff > oldest) Files.writeString(oldestP, cutoff.toString)
-    // prune dirs left empty after partition-dir deletion, bottom-up — a
-    // data/s<k> whose nested layout dirs (LabelStore's c/ and d/) emptied
-    // collapses entirely. "Empty" includes dirs whose only remaining entries
-    // are `_`/`.`-prefixed marker files (partitionBy writes a `_SUCCESS` at
-    // the layout root that would otherwise keep one dead s<k> dir pair alive
-    // per expired snapshot, forever); dirs a retained manifest references are
-    // never touched (an empty-frame commit legitimately produces a
-    // marker-only dir that readSnapshot must still be able to open)
-    val retainedAbs = retained.map(d => rootP.resolve(d).normalize)
-    val dataP = rootP.resolve("data")
-    if (Files.exists(dataP)) {
-      val walk = Files.walk(dataP)
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .filter(p => p != dataP && Files.isDirectory(p) &&
-          !retainedAbs.contains(p.normalize))
-        .forEach { p =>
-          val inner = p.toFile.listFiles()
-          val onlyMarkers = inner != null && inner.forall(f =>
-            f.isFile && (f.getName.startsWith("_") || f.getName.startsWith(".")))
-          if (inner == null || inner.isEmpty) Files.deleteIfExists(p)
-          else if (onlyMarkers) {
-            inner.foreach(f => Files.deleteIfExists(f.toPath))
-            Files.deleteIfExists(p)
-          }
-        }
-      finally walk.close()
-    }
-  }
-}
-
-/** The hash-partitioned dir layout shared by [[HashPartitionedTable]] and
-  * [[LabelStore]]: one `__part=i` dir per `pmod(xxhash64(key), n)` bucket.
-  * Single definition so the writer's partition expression, the dir-name
-  * parser, and the post-write listing can never diverge between the two
-  * table classes.
-  */
-private[io] object HashLayout {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.functions.{lit, pmod, xxhash64}
-
-  /** The partition a key value belongs to (the writer's own expression —
-    * callers derive affected partitions with it).
-    */
-  def partExpr(c: Column, nBuckets: Int): Column =
-    pmod(xxhash64(c), lit(nBuckets.toLong)).cast("int")
-
-  /** Partition index encoded in a `__part=i` dir path. */
-  def partOf(dir: String): Int =
-    dir.substring(dir.lastIndexOf("__part=") + "__part=".length).toInt
-
-  /** Relative `__part=` dirs now present under `rootP/dataDir` (the listing
-    * a commit records in its manifest; empty partitions create no dir).
-    */
-  def listPartDirs(rootP: Path, dataDir: String): Seq[String] = {
-    val d = rootP.resolve(dataDir).toFile.listFiles()
-    if (d == null) Seq.empty
-    else d.filter(f => f.isDirectory && f.getName.startsWith("__part="))
-      .map(f => s"$dataDir/${f.getName}").toSeq.sorted
-  }
-}
-
-/** Hash-partitioned variant of [[PartitionedParquetTable]]: rows land in
-  * `nBuckets` partitions by `pmod(xxhash64(partCol), nBuckets)` and each
-  * snapshot's manifest lists ONE dir per live partition — so a commit can
-  * replace a SUBSET of partitions while untouched partitions keep pointing at
-  * their previous snapshot's files (`overwritePartitions`). This is the
-  * streaming cluster-label shape (VERDICT r3 "What's wrong #2"): a micro-batch
-  * that relabels a few clusters rewrites only the partitions holding those
-  * labels, never the whole corpus labeling — O(batch) write amplification,
-  * with every batch still committed as an atomic, time-travelable snapshot.
-  *
-  * Partitioning key choice matters: partitioning cluster labels by
-  * `cluster_id` co-locates every member of a cluster, so the affected
-  * partition set is computable from the relabel map alone; partitioning by
-  * doc_id would scatter each affected cluster across all partitions and
-  * finding them would cost a corpus scan per batch.
-  *
-  * Like the manifest I/O of every class in this file, the partition-dir
-  * listing runs on a driver-visible filesystem — the standing assumption of
-  * this offline Iceberg stand-in (real Iceberg replaces all of it with
-  * catalog metadata; the trait boundary is the swap point).
-  */
-class HashPartitionedTable(val root: String, val partCol: String, val nBuckets: Int)
-    extends IcebergLikeTable {
-  require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
-  private def rootP: Path = Paths.get(root)
-
-  def currentSnapshot: Option[Long] = SnapshotIo.current(rootP)
-
-  /** The partition a value of `partCol` belongs to (same expression the
-    * writer uses — callers compute affected partitions with it).
-    */
-  def partitionExpr(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    HashLayout.partExpr(c, nBuckets)
-
-  private def snapshotDirs(k: Long): Seq[String] = SnapshotIo.dirs(rootP, k)
-
-  private def partOf(dir: String): Int = HashLayout.partOf(dir)
-
-  private def commit(df: DataFrame, op: String, replaced: Option[Set[Int]]): Long = {
-    val k = currentSnapshot.getOrElse(0L) + 1
-    val dataDir = s"data/s$k"
-    df.withColumn("__part", partitionExpr(df(partCol)))
-      .write.mode("overwrite").partitionBy("__part").parquet(s"$root/$dataDir")
-    val newDirs = HashLayout.listPartDirs(rootP, dataDir)
-    val dirs = (op, replaced) match {
-      case ("overwrite", None) => newDirs
-      case ("append", None) => currentSnapshot.map(snapshotDirs).getOrElse(Nil) ++ newDirs
-      case (_, Some(parts)) => // replace only the listed partitions
-        currentSnapshot.map(snapshotDirs).getOrElse(Nil)
-          .filterNot(d => parts.contains(partOf(d))) ++ newDirs
-    }
-    SnapshotIo.commitManifest(rootP, k, op, dirs)
-    k
-  }
-
-  def append(df: DataFrame): Long = commit(df, "append", None)
-  def overwrite(df: DataFrame): Long = commit(df, "overwrite", None)
-
-  /** Replace the listed partitions with `df`'s rows, leaving every other
-    * partition's files untouched. `df` must contain ONLY rows whose partition
-    * (by `partitionExpr`) is in `parts` — rows outside would silently shadow
-    * live data in the new snapshot.
-    */
-  def overwritePartitions(df: DataFrame, parts: Set[Int]): Long =
-    commit(df, "overwrite_partitions", Some(parts))
-
-  def read(spark: SparkSession): DataFrame =
-    readSnapshot(spark, currentSnapshot.getOrElse(
-      throw new IllegalStateException(s"empty table $root")))
-
-  /** Read only the listed partitions of the current snapshot (partition
-    * pruning by manifest — no other partition's files are listed or opened).
-    * Partitions with no live dir contribute nothing; all-absent yields an
-    * empty frame with the table schema.
-    */
-  def readPartitions(spark: SparkSession, parts: Set[Int]): DataFrame = {
-    val k = currentSnapshot.getOrElse(
-      throw new IllegalStateException(s"empty table $root"))
-    val dirs = snapshotDirs(k).filter(d => parts.contains(partOf(d)))
-    if (dirs.isEmpty) read(spark).limit(0)
-    else spark.read.parquet(dirs.map(d => s"$root/$d"): _*)
-  }
-
-  def readSnapshot(spark: SparkSession, snapshotId: Long): DataFrame = {
-    val dirs = snapshotDirs(snapshotId).map(d => s"$root/$d")
-    spark.read.parquet(dirs: _*)
-  }
-
-  /** Relative dirs first written by snapshot `k` (diagnostics/tests: how much
-    * did this commit physically rewrite?).
-    */
-  def dirsWrittenBy(snapshotId: Long): Seq[String] =
-    snapshotDirs(snapshotId).filter(_.startsWith(s"data/s$snapshotId/"))
-
-  /** Iceberg `expireSnapshots` analog — see [[SnapshotMaintenance.expire]].
-    * Partition dirs still referenced by retained snapshots survive even when
-    * the snapshot that WROTE them expires (partial rewrites keep old
-    * partitions live across many commits).
-    */
-  def expireSnapshots(keepLast: Int = 1): Unit =
-    SnapshotMaintenance.expire(root, keepLast)
-}
-
-/** Bucketed-table helpers (SURVEY.md §4 / builder mandate "bucketing for
-  * co-located joins"): records written `bucketBy(doc_id)` join pair ids (or
-  * each other) WITHOUT a shuffle on the bucketed side — at 100 TB the
-  * pre-bucketed corpus turns every per-round scoring join from
-  * corpus-shuffle + join into scan + join. BucketedJoinSpec asserts the
-  * exchange really disappears from the physical plan.
+/** Batch-partitioned bucketed tables: the streaming corpus layout
+  * (SURVEY.md §4, "bucketing for co-located joins"). `linkStream` and
+  * `nearDupStream` append each micro-batch's records, blocks and
+  * fingerprints through [[Tables.writeBatchBucketed]] and read the
+  * accumulated corpus back through [[Tables.readBatchesBefore]]: buckets span
+  * the batch partitions, so a per-batch join on the bucket key leaves the
+  * whole accumulated table in place instead of shuffling it (BucketedJoinSpec
+  * and BucketedCorpusSpec assert the exchange is absent from the plan).
   */
 object Tables {
 
-  /** Write as a bucketed external table (path-backed, so nothing lands in the
-    * session warehouse); sorted within buckets for merge-friendly reads.
+  /** The catalog name a stream's corpus tables use when the caller names
+    * none: `graft_corpus_` plus 16 hex digits of the SHA-256 of the
+    * normalized `corpusDir`. A pure function of the path, so every JVM (and
+    * every restart) derives the same name for the same directory, and always
+    * a valid unquoted identifier.
     */
-  def writeBucketed(
-      df: DataFrame,
-      table: String,
-      path: String,
-      bucketCol: String,
-      nBuckets: Int): Unit =
-    df.write.mode("overwrite")
-      .option("path", path)
-      .bucketBy(nBuckets, bucketCol)
-      .sortBy(bucketCol)
-      .format("parquet")
-      .saveAsTable(table)
+  def corpusTableName(corpusDir: String): String = {
+    val normalized = new org.apache.hadoop.fs.Path(corpusDir).toUri.normalize.toString
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(normalized.getBytes(StandardCharsets.UTF_8))
+    "graft_corpus_" + digest.take(8).map(b => f"${b & 0xff}%02x").mkString
+  }
+
+  /** The rows of every batch before `batchId`, without the layout's
+    * `batch_id` column — a stream's accumulated corpus. The refresh drops the
+    * catalog's cached file listing, which predates the previous batch's
+    * append (without it that batch's rows silently drop out of the read); the
+    * `batch_id < batchId` filter prunes partitions, which also excludes the
+    * batch's own rows on an at-least-once replay.
+    */
+  def readBatchesBefore(spark: SparkSession, table: String, batchId: Long): DataFrame = {
+    spark.catalog.refreshTable(table)
+    spark.table(table).where(col("batch_id") < batchId).drop("batch_id")
+  }
 
   /** Replay-idempotent per-batch append to a bucketed external table: rows
     * land in the batch's own `batch_id=<k>` partition (partitioned AND
@@ -345,7 +72,6 @@ object Tables {
       bucketCol: String,
       nBuckets: Int,
       batchId: Long): Unit = {
-    import org.apache.spark.sql.functions.lit
     val spark = df.sparkSession
     val withB = df.withColumn("batch_id", lit(batchId))
     // reconcile=false: the stream's read gate already reconciled this table
@@ -401,11 +127,16 @@ object Tables {
     * the caller owns first-write semantics. Streams call this both before
     * READING the accumulated corpus and before writing, so a restart in a
     * fresh JVM (fresh in-memory catalog) neither loses history nor scores
-    * against an "empty" corpus that is actually on disk. `bucketCol`/`nBuckets` must
-    * match the original writer's spec — Spark trusts the recreated bucket
-    * DDL against the existing file layout, so a mismatch silently breaks
-    * the exchange-free join guarantee (callers pass the same constants the
-    * stream was configured with).
+    * against an "empty" corpus that is actually on disk.
+    *
+    * `bucketCol`/`nBuckets` must match the original writer's spec: Spark
+    * trusts a table's bucket DDL against its file layout, so a mismatch
+    * would silently break the exchange-free join guarantee (or, through
+    * `compactBatchBucketed`, re-bucket old batches beside a newest batch
+    * still in the old spec). Before any read or write the spec is checked
+    * against the catalog entry's bucket spec, or, when the entry is rebuilt
+    * from disk, against the bucket ids in the committed data file names; a
+    * mismatch throws an IllegalArgumentException naming both specs.
     */
   def ensureBatchTable(
       spark: SparkSession,
@@ -429,6 +160,18 @@ object Tables {
       fs.listStatus(s.getPath).exists(f => f.isFile &&
         !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
     if (spark.catalog.tableExists(table)) {
+      val meta = spark.sessionState.catalog.getTableMetadata(
+        spark.sessionState.sqlParser.parseTableIdentifier(table))
+      meta.bucketSpec match {
+        case Some(b) if b.numBuckets == nBuckets &&
+            b.bucketColumnNames.map(_.toLowerCase) == Seq(bucketCol.toLowerCase) =>
+        case other =>
+          val have = other.fold("not bucketed")(b =>
+            s"(${b.bucketColumnNames.mkString(", ")}) INTO ${b.numBuckets} BUCKETS")
+          throw new IllegalArgumentException(
+            s"ensureBatchTable: table $table is $have, but the caller's spec is " +
+              s"($bucketCol) INTO $nBuckets BUCKETS")
+      }
       // The catalog entry can be STALE, not just missing: a maintenance run
       // in a DIFFERENT JVM (spark-submit MaintenanceJob compact-corpus while
       // this driver idles between stream restarts) folds batch_id dirs on
@@ -473,6 +216,20 @@ object Tables {
       val leaves = diskParts().filter(committed)
       if (leaves.isEmpty) false
       else {
+        // the writer's bucket count is not recorded on disk, but every data
+        // file names its bucket id: an id >= nBuckets (or none at all) means
+        // the files were written under another spec
+        val ids = leaves.toSeq.flatMap(l => fs.listStatus(l.getPath))
+          .map(_.getPath.getName)
+          .filterNot(n => n.startsWith("_") || n.startsWith("."))
+          .map(n => n -> BucketingUtils.getBucketId(n))
+        val unbucketed = ids.collect { case (n, None) => n }
+        val maxId = ids.flatMap(_._2).maxOption
+        require(unbucketed.isEmpty && maxId.forall(_ < nBuckets),
+          s"ensureBatchTable: $path holds data files outside the caller's spec " +
+            s"($bucketCol) INTO $nBuckets BUCKETS: " +
+            (if (unbucketed.nonEmpty) s"no bucket id in ${unbucketed.take(3).mkString(", ")}"
+            else s"bucket ids up to ${maxId.get}"))
         // schema from a COMMITTED leaf dir's files — the raw data carries
         // everything but the partition column
         val dataSchema = spark.read.parquet(leaves.minBy(_.getPath.getName).getPath.toString).schema
@@ -537,10 +294,13 @@ object Tables {
     * checkpoint is the newest, and the restart's replay dynamically
     * overwrites that partition in place (folding it first would let the
     * replay re-add its rows beside the folded copy, re-creating the
-    * duplicate-corpus-row bug this layout exists to prevent). Same
-    * small-file motivation and pause-writers constraint as
-    * [[compactBucketed]]; the swap additionally recreates the catalog entry
-    * (partition metadata must forget the folded `batch_id` values).
+    * duplicate-corpus-row bug this layout exists to prevent). Every
+    * micro-batch adds one file per bucket per writing task, so a long-running
+    * stream accumulates small files until the file LISTING, not the data,
+    * dominates each per-batch join; the fold leaves one file per bucket.
+    * Maintenance op: pause writers while it runs (readers race the directory
+    * swap). The swap recreates the catalog entry (partition metadata must
+    * forget the folded `batch_id` values).
     * Readers' `batch_id < currentBatch` pruning still works: -1 is below
     * every real batch id. Crash-safe: data is fully staged at a tmp path
     * before any destructive step; a crash between the renames auto-recovers
@@ -553,7 +313,6 @@ object Tables {
       bucketCol: String,
       nBuckets: Int): Unit = {
     import org.apache.hadoop.fs.{FileSystem, FileUtil, Path => HPath}
-    import org.apache.spark.sql.functions.{col, lit}
     val tmpTable = table + "_compact_tmp"
     val tmpPath = path + "_compact_tmp"
     val bakPath = path + "_compact_bak"
@@ -576,9 +335,14 @@ object Tables {
     require(ids.nonEmpty, s"compactBatchBucketed: no batch partitions at $path")
     val maxId = ids.max
     if (ids.length == 1) return // one batch only: nothing to fold
-    val schemaDdl = spark.table(table).schema.toDDL
-    val folded = spark.table(table).where(col("batch_id") =!= maxId)
-      .drop("batch_id")
+    val schema = spark.table(table).schema
+    // read the FILES, not the catalog table: over the bucketed table scan
+    // the planner drops this repartition (the scan already reports the
+    // bucket partitioning) and then un-buckets the scan, so the fold wrote
+    // one file per (bucket x task); a plain scan + repartition on the bucket
+    // column gives one task, hence one file, per bucket
+    val folded = spark.read.schema(StructType(schema.filterNot(_.name == "batch_id")))
+      .parquet(ids.filter(_ != maxId).map(i => s"$path/batch_id=$i").toIndexedSeq: _*)
       .repartition(nBuckets, col(bucketCol))
       .withColumn("batch_id", lit(-1L))
     fs.delete(new HPath(tmpPath), true)
@@ -607,69 +371,7 @@ object Tables {
     require(fs.rename(new HPath(tmpPath), new HPath(path)),
       s"compactBatchBucketed: rename $tmpPath -> $path failed (original at $bakPath)")
     fs.delete(new HPath(bakPath), true)
-    createBatchTableEntry(spark, table, path, bucketCol, nBuckets, schemaDdl)
-  }
-
-  /** Compact a bucketed external table in place: every micro-batch append
-    * (`IncrementalLink` / `IncrementalDedup` corpus tables) adds one file per
-    * bucket per writing task, so a long-running stream accumulates thousands
-    * of small files per bucket — eventually the FILE LISTING, not the data,
-    * dominates every per-batch join. One compaction pass rewrites the table
-    * to one file per bucket (same bucket spec, so joins stay exchange-free)
-    * and re-registers it at the SAME path. Maintenance op: pause writers
-    * while it runs (readers of the old files race the directory swap).
-    *
-    * Mechanics: rewrite through a temp bucketed table (bucket-id file naming
-    * must come from a real bucketed write), then swap directories under the
-    * UNCHANGED catalog entry (same schema, bucket spec and location, so no
-    * drop/re-create) — renaming a dir preserves the bucket-id file suffixes
-    * Spark maps buckets with. Crash safety: the original dir is renamed
-    * aside to `<path>_compact_bak` before the compacted dir moves in, and
-    * only deleted after — no window where the corpus exists nowhere. A crash
-    * between the two renames leaves the data only in the _bak dir; the next
-    * compaction auto-recovers by renaming it back into place before reading
-    * (ADVICE r4), and a leftover _tmp dir is simply overwritten.
-    */
-  def compactBucketed(
-      spark: SparkSession,
-      table: String,
-      path: String,
-      bucketCol: String,
-      nBuckets: Int): Unit = {
-    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-    val tmpTable = table + "_compact_tmp"
-    val tmpPath = path + "_compact_tmp"
-    val bakPath = path + "_compact_bak"
-    // auto-recovery from a crash between the two renames below: the live dir
-    // is gone but the original survives at _bak — restore it before reading
-    // (without this, the spark.read below fails and recovery is manual)
-    locally {
-      val fs0 = FileSystem.get(new java.net.URI(path), spark.sessionState.newHadoopConf())
-      val (live, bak) = (new HPath(path), new HPath(bakPath))
-      if (!fs0.exists(live) && fs0.exists(bak)) {
-        require(fs0.rename(bak, live),
-          s"compactBucketed: crash recovery rename $bakPath -> $path failed")
-      }
-    }
-    spark.catalog.refreshTable(table)
-    // read the FILES, not the catalog table: a bucketed-table scan carries
-    // its own output partitioning, which let the planner produce one file
-    // per (bucket × task) on rewrite; a plain scan + repartition on the
-    // bucket column aligns tasks with bucket ids exactly
-    val df = spark.read.parquet(path)
-    df.repartition(nBuckets, df(bucketCol)) // one task per bucket -> one file per bucket
-      .write.mode("overwrite")
-      .bucketBy(nBuckets, bucketCol).sortBy(bucketCol)
-      .option("path", tmpPath).format("parquet").saveAsTable(tmpTable)
-    spark.sql(s"DROP TABLE $tmpTable") // external: metadata only, files stay
-    val fs = FileSystem.get(new java.net.URI(path), spark.sessionState.newHadoopConf())
-    fs.delete(new HPath(bakPath), true)
-    require(fs.rename(new HPath(path), new HPath(bakPath)),
-      s"compactBucketed: rename $path -> $bakPath failed")
-    require(fs.rename(new HPath(tmpPath), new HPath(path)),
-      s"compactBucketed: rename $tmpPath -> $path failed (original preserved at $bakPath)")
-    fs.delete(new HPath(bakPath), true)
-    spark.catalog.refreshTable(table)
+    createBatchTableEntry(spark, table, path, bucketCol, nBuckets, schema.toDDL)
   }
 }
 

@@ -6,28 +6,26 @@ import graft.io.{EdgeLog, SnapshotMaintenance, Tables}
 
 /** Operations CLI for the storage-maintenance passes a long-lived stream
   * needs (VERDICT r4 directive 7): small-file compaction for the edge log
-  * and corpus tables, snapshot expiry for the label store — without writing
-  * Scala. One subcommand per op:
+  * and the streaming corpus tables, snapshot expiry for the label store —
+  * without writing Scala. One subcommand per op:
   *
   * {{{
   * MaintenanceJob compact-edges    <edgesDir> [targetFiles=1]
   * MaintenanceJob compact-corpus   <table> <path> <bucketCol> <nBuckets>
-  * MaintenanceJob compact-bucketed <table> <path> <bucketCol> <nBuckets>
   * MaintenanceJob expire-snapshots <rootDir> [keepLast=1]
   * }}}
   *
-  * `compact-corpus` is for the batch-partitioned bucketed tables the
-  * streaming paths write ([[Tables.writeBatchBucketed]] layout);
-  * `compact-bucketed` for the plain bucketed tables of batch jobs.
-  * `expire-snapshots` works on any snapshot root ([[graft.io.LabelStore]],
-  * [[graft.io.PartitionedParquetTable]], `IcebergLikeTable` — same manifest
-  * format).
+  * `compact-edges` folds an [[EdgeLog]]; `compact-corpus` folds one of the
+  * batch-partitioned bucketed corpus tables the streams write
+  * ([[Tables.writeBatchBucketed]] layout), and refuses a `bucketCol` /
+  * `nBuckets` other than the table's own; `expire-snapshots` expires a
+  * [[graft.io.LabelStore]] root.
   *
-  * ALL compaction subcommands require their writers stopped (documented on
-  * each op — readers race the directory swap; real Iceberg's atomic rewrite
-  * replaces this once bindable). Crash-safe: every op stages to `_tmp`,
-  * keeps the original at `_bak` until the swap lands, and auto-recovers a
-  * half-finished previous run at entry.
+  * Both compaction subcommands require their writers stopped (readers race
+  * the directory swap; real Iceberg's atomic rewrite replaces this once
+  * bindable). Crash-safe: each stages to `_tmp`, keeps the original at
+  * `_bak` until the swap lands, and auto-recovers a half-finished previous
+  * run at entry.
   */
 object MaintenanceJob {
 
@@ -38,8 +36,6 @@ object MaintenanceJob {
       EdgeLog.compact(spark, dir, target.toInt)
     case Seq("compact-corpus", table, path, bucketCol, nBuckets) =>
       Tables.compactBatchBucketed(spark, table, path, bucketCol, nBuckets.toInt)
-    case Seq("compact-bucketed", table, path, bucketCol, nBuckets) =>
-      Tables.compactBucketed(spark, table, path, bucketCol, nBuckets.toInt)
     case Seq("expire-snapshots", root) =>
       SnapshotMaintenance.expire(root, 1)
     case Seq("expire-snapshots", root, keep) =>
@@ -47,7 +43,7 @@ object MaintenanceJob {
     case other =>
       throw new IllegalArgumentException(
         s"unknown maintenance command: ${other.mkString(" ")} " +
-          "(expected compact-edges | compact-corpus | compact-bucketed | expire-snapshots)")
+          "(expected compact-edges | compact-corpus | expire-snapshots)")
   }
 
   def main(args: Array[String]): Unit = {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
+import graft.io.Tables
 import graft.model.{Doc, MatchConfig}
 import graft.pipeline.ErPipeline
 
@@ -305,16 +306,24 @@ object IncrementalLink {
         col("window.end").as("window_end"), col("bucket"), col("n"))
 
   /** Incremental linkage: every micro-batch links its docs against the corpus
-    * accumulated so far (parquet-backed, the Duke Database analog) and appends
-    * edges. Returns the started query; caller owns lifecycle.
+    * accumulated so far (the Duke Database analog) and appends edges.
+    * Returns the started query; caller owns lifecycle.
     *
     * Scale shape: only the NEW docs are extracted and blocked each batch; a
     * persistent blocks table stands in for the inverted index, so per-batch
     * work is new-vs-new (triangular self-join) + new-vs-corpus (A-vs-B
     * linkPairs against stored blocks) — never a re-block or re-scan of the
     * whole corpus' pair space.
-    */
-  /** @param clustersDir when set, a complete (doc_id, cluster_id) labeling is
+    *
+    * @param corpusDir   the corpus lives here as two batch-partitioned
+    *                    bucketed tables ([[graft.io.Tables.writeBatchBucketed]]):
+    *                    `records` bucketed on doc_id and `blocks` bucketed on
+    *                    key, each into `nBuckets`, so the per-batch score join
+    *                    and key join leave the accumulated corpus in place
+    * @param corpusTable catalog name of the records table (the blocks table
+    *                    is `<name>_blocks`); None derives one from `corpusDir`
+    *                    ([[graft.io.Tables.corpusTableName]])
+    * @param clustersDir when set, a complete (doc_id, cluster_id) labeling is
     *                     maintained under this path across micro-batches via
     *                     `Cluster.mergeDelta` — each batch's match edges fold
     *                     into the existing labels at DELTA cost (contracted
@@ -369,6 +378,10 @@ object IncrementalLink {
     val gateSeen = scala.collection.mutable.Set[String]()
     def gated(key: String)(check: => Boolean): Boolean =
       gateSeen.contains(key) || { val ok = check; if (ok) gateSeen += key; ok }
+    val recordsDir = s"$corpusDir/records"
+    val blocksDir = s"$corpusDir/blocks"
+    val recordsTable = corpusTable.getOrElse(Tables.corpusTableName(corpusDir))
+    val blocksTable = recordsTable + "_blocks"
 
     stream.writeStream
       .outputMode(OutputMode.Append())
@@ -389,41 +402,21 @@ object IncrementalLink {
           // lazy pin: materialized by the pair generation's skew-stats job
           val newBlocks = graft.io.Persist.pinLazy(
             ErPipeline.block(newRecords, keyers).toDF()).as[ErPipeline.BlockRow]
-          val recordsDir = s"$corpusDir/records"
-          val blocksDir = s"$corpusDir/blocks"
           // ensureBatchTable, not tableExists: the catalog is per-JVM, so a
           // restart in a fresh JVM must rebuild the entries from the on-disk
-          // layout rather than score against a falsely "empty" corpus
-          val hasCorpus = corpusTable match {
-            case Some(tn) =>
-              gated(tn)(graft.io.Tables.ensureBatchTable(spark, tn, recordsDir, "doc_id", nBuckets)) &&
-                gated(tn + "_blocks")(graft.io.Tables.ensureBatchTable(spark, tn + "_blocks", blocksDir, "key", nBuckets))
-            case None =>
-              // BOTH dirs must have a committed batch: a crash between the
-              // records write and the blocks write would otherwise leave
-              // hasCorpus true with the blocks read below failing forever
-              gated(recordsDir)(graft.io.EdgeLog.hasData(spark, recordsDir)) &&
-                gated(blocksDir)(graft.io.EdgeLog.hasData(spark, blocksDir))
-          }
-          // the accumulated corpus records: scoring's b-side. Every corpus
-          // read prunes to `batch_id < batchId` — previous batches only,
-          // which both matches the old append semantics AND excludes the
-          // batch's own rows on an at-least-once replay (scoring a replayed
-          // doc against itself would fabricate self-pairs). doc_id-bucketed
-          // when a table name is configured, so the score join leaves it in
-          // place (buckets span the batch partitions).
+          // layout rather than score against a falsely "empty" corpus. BOTH
+          // tables must have a committed batch: a crash between the records
+          // write and the blocks write must not leave the blocks read failing
+          val hasCorpus =
+            gated(recordsTable)(Tables.ensureBatchTable(spark, recordsTable, recordsDir, "doc_id", nBuckets)) &&
+              gated(blocksTable)(Tables.ensureBatchTable(spark, blocksTable, blocksDir, "key", nBuckets))
+          // the accumulated corpus records: scoring's b-side, previous
+          // batches only (see Tables.readBatchesBefore). doc_id-bucketed, so
+          // the score join leaves it in place (buckets span the batch
+          // partitions).
           val corpusRecs: Option[Dataset[ErPipeline.CleanRecord]] =
             if (!hasCorpus) None
-            else Some((corpusTable match {
-              case Some(tn) =>
-                // the catalog caches the relation's file listing across
-                // micro-batches; without a refresh the read misses the
-                // previous batch's append and its pairs silently drop at
-                // the inner props join
-                spark.catalog.refreshTable(tn)
-                spark.table(tn) // doc_id-bucketed: b-join is exchange-free
-              case None => spark.read.parquet(recordsDir)
-            }).where(col("batch_id") < batchId).drop("batch_id")
+            else Some(Tables.readBatchesBefore(spark, recordsTable, batchId)
               .as[ErPipeline.CleanRecord])
 
           // new-vs-new pairs score against the (small, pinned) batch records;
@@ -436,14 +429,9 @@ object IncrementalLink {
           val scored = corpusRecs match {
             case None => scoredNew
             case Some(corpus) =>
-              val rawOldBlocks = (corpusTable match {
-                case Some(tn) =>
-                  // blocks bucketed on key: the per-batch linkPairs groupBy
-                  // and key-join read the corpus blocks pre-clustered
-                  spark.catalog.refreshTable(tn + "_blocks")
-                  spark.table(tn + "_blocks")
-                case None => spark.read.parquet(blocksDir)
-              }).where(col("batch_id") < batchId).drop("batch_id")
+              // blocks bucketed on key: the per-batch linkPairs groupBy and
+              // key-join read the corpus blocks pre-clustered
+              val rawOldBlocks = Tables.readBatchesBefore(spark, blocksTable, batchId)
               val keyHint = ProbePrune.keyList(newBlocks.toDF(), "key")
               val oldBlocks = keyHint.fold(rawOldBlocks)(ks =>
                 rawOldBlocks.where(col("key").isin(ks: _*))).as[ErPipeline.BlockRow]
@@ -489,23 +477,13 @@ object IncrementalLink {
           // one cached-block scan of the pinned edges
           BatchMetrics.write(spark, s"$corpusDir/metrics", batchId,
             nDocs, batchEdges.count())
-          // grow the corpus + its blocks table (Database.index analog);
-          // bucketed-by-doc_id when a table name is configured, so every later
-          // batch's score join leaves the accumulated records in place. Each
+          // grow the corpus + its blocks table (Database.index analog). Each
           // batch lands in its own batch_id partition, which a replay
           // OVERWRITES instead of appending duplicate rows (VERDICT r4 #1)
-          corpusTable match {
-            case Some(tn) =>
-              graft.io.Tables.writeBatchBucketed(
-                newRecords.toDF(), tn, recordsDir, "doc_id", nBuckets, batchId)
-              graft.io.Tables.writeBatchBucketed(
-                newBlocks.toDF(), tn + "_blocks", blocksDir, "key", nBuckets, batchId)
-            case None =>
-              newRecords.toDF().write.mode("overwrite")
-                .parquet(s"$recordsDir/batch_id=$batchId")
-              newBlocks.toDF().write.mode("overwrite")
-                .parquet(s"$blocksDir/batch_id=$batchId")
-          }
+          Tables.writeBatchBucketed(
+            newRecords.toDF(), recordsTable, recordsDir, "doc_id", nBuckets, batchId)
+          Tables.writeBatchBucketed(
+            newBlocks.toDF(), blocksTable, blocksDir, "key", nBuckets, batchId)
         }
         onBatchComplete(batchId)
       }

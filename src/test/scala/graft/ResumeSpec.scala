@@ -4,15 +4,15 @@ import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.functions._
 
-import graft.io.{PartitionedParquetTable, StageManifest}
+import graft.io.{LabelStore, StageManifest}
 import graft.jobs.LinkJob
 import graft.model.MatchConfig
 import graft.pipeline.Fixtures
 
 /** Checkpoint/resume semantics (BASELINE north_rule "resumable from checkpoint
   * with per-partition lineage + metrics"): a killed run resumed mid-pipeline
-  * must equal a clean run; the Iceberg-layout table must support append /
-  * overwrite / time-travel by snapshot id.
+  * must equal a clean run; the snapshot label store must support overwrite
+  * and time-travel by snapshot id.
   */
 class ResumeSpec extends SparkSpec {
 
@@ -133,22 +133,27 @@ class ResumeSpec extends SparkSpec {
     assert(mtimeBefore === mtimeAfter) // no stage recomputed or re-recorded
   }
 
-  test("IcebergLikeTable: append, overwrite, time-travel by snapshot id") {
+  test("LabelStore: overwrite, time-travel by snapshot id") {
     import spark.implicits._
     val root = tmpDir("graft-tbl").toString
-    val tbl = new PartitionedParquetTable(root)
-    assert(tbl.currentSnapshot === None)
+    val store = new LabelStore(root, 4)
+    assert(store.currentSnapshot === None)
+    intercept[IllegalStateException](store.read(spark))
+    def labels(rows: (String, String)*) = rows.toDF("doc_id", "cluster_id")
+    def read(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getString(1))).toSet
 
-    val s1 = tbl.append(Seq((1, "a"), (2, "b")).toDF("id", "v"))
-    val s2 = tbl.append(Seq((3, "c")).toDF("id", "v"))
-    assert(tbl.read(spark).count() === 3)
-    assert(tbl.readSnapshot(spark, s1).count() === 2)
+    val s1 = store.overwrite(labels(("a", "a"), ("b", "a")))
+    val s2 = store.overwrite(labels(("a", "a"), ("b", "a"), ("c", "c")))
+    assert(read(store.read(spark)) === Set(("a", "a"), ("b", "a"), ("c", "c")))
+    assert(store.readSnapshot(spark, s1).count() === 2)
 
-    val s3 = tbl.overwrite(Seq((9, "z")).toDF("id", "v"))
-    assert(tbl.currentSnapshot === Some(s3))
-    assert(tbl.read(spark).collect().map(r => (r.getInt(0), r.getString(1))).toSet === Set((9, "z")))
+    val s3 = store.overwrite(labels(("z", "z")))
+    assert(store.currentSnapshot === Some(s3))
+    assert(Seq(s1, s2, s3) === Seq(1L, 2L, 3L))
+    assert(read(store.read(spark)) === Set(("z", "z")))
     // time travel still sees the pre-overwrite snapshots
-    assert(tbl.readSnapshot(spark, s2).count() === 3)
-    assert(tbl.readSnapshot(spark, s1).count() === 2)
+    assert(read(store.readSnapshot(spark, s2)) === Set(("a", "a"), ("b", "a"), ("c", "c")))
+    assert(read(store.readSnapshot(spark, s1)) === Set(("a", "a"), ("b", "a")))
   }
 }

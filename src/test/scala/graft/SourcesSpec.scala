@@ -40,40 +40,6 @@ class SourcesSpec extends SparkSpec {
     assert(got(2L) === "acme as")
   }
 
-  test("ntriples source: parse, pivot by subject, multi-values, cleaners") {
-    val dir = Files.createTempDirectory("graft-src3").toString
-    val nt =
-      """# people
-        |<http://ex.org/p1> <http://xmlns.com/foaf/0.1/name> " Lars  Holm "@no .
-        |<http://ex.org/p1> <http://ex.org/phone> "0047 22 11 33" .
-        |<http://ex.org/p1> <http://ex.org/phone> "555-1234"^^<http://www.w3.org/2001/XMLSchema#string> .
-        |<http://ex.org/p2> <http://xmlns.com/foaf/0.1/name> "Kari \"KK\" Berg" .
-        |<http://ex.org/p2> <http://ex.org/homepage> <http://ex.org/kari> .
-        |<http://ex.org/p2> <http://ex.org/ignored> "dropped" .
-        |
-        |""".stripMargin
-    Files.writeString(java.nio.file.Paths.get(dir, "in.nt"), nt)
-    val df = Sources.ntriples(spark, s"$dir/in.nt",
-      predicates = Map(
-        "http://xmlns.com/foaf/0.1/name" -> "name",
-        "http://ex.org/phone" -> "phone",
-        "http://ex.org/homepage" -> "homepage"),
-      cleaners = Map(
-        "name" -> Seq("trim", "lowercase-normalize"),
-        "phone" -> Seq("phone-number")))
-    val rows = df.collect().map { r =>
-      r.getAs[String]("doc_id") ->
-        ((r.getSeq[String](r.fieldIndex("name")).toSet,
-          r.getSeq[String](r.fieldIndex("phone")).toSet,
-          r.getSeq[String](r.fieldIndex("homepage")).toSet))
-    }.toMap
-    assert(rows.keySet === Set("http://ex.org/p1", "http://ex.org/p2"))
-    assert(rows("http://ex.org/p1") ===
-      ((Set("lars holm"), Set("47221133", "5551234"), Set.empty[String])))
-    assert(rows("http://ex.org/p2") ===
-      ((Set("kari kk berg"), Set.empty[String], Set("http://ex.org/kari"))))
-  }
-
   test("jdbc source reads through Spark's JDBC reader with cleaners (embedded Derby)") {
     val url = "jdbc:derby:memory:graftsrc;create=true"
     val conn = java.sql.DriverManager.getConnection(url)
@@ -93,148 +59,6 @@ class SourcesSpec extends SparkSpec {
       conn.close()
       try java.sql.DriverManager.getConnection("jdbc:derby:memory:graftsrc;drop=true")
       catch { case _: java.sql.SQLException => } // drop always "fails" with 08006
-    }
-  }
-
-  test("sparql source: loopback endpoint, tabular + triple mode, paging, cleaners") {
-    import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-
-    def cell(v: String) = s"""{"type":"literal","value":"$v"}"""
-    def body(rows: String*) =
-      s"""{"head":{"vars":["id","name","phone","p","o"]},
-         |"results":{"bindings":[${rows.mkString(",")}]}}""".stripMargin
-
-    val tabularRows = Seq(
-      s"""{"id":${cell("http://ex.org/p1")},"name":${cell(" Lars  HOLM ")},"phone":${cell("(47) 22-11-33")}}""",
-      s"""{"id":${cell("http://ex.org/p1")},"name":${cell("L. Holm")}}""",
-      s"""{"id":${cell("http://ex.org/p2")},"name":${cell("Kari Berg")},"phone":${cell("555 1234")}}""")
-    val triplePages = Seq(
-      Seq(
-        s"""{"id":${cell("a")},"p":${cell("name")},"o":${cell("ANNA")}}""",
-        s"""{"id":${cell("a")},"p":${cell("phone")},"o":${cell("111-22")}}"""),
-      Seq(s"""{"id":${cell("b")},"p":${cell("name")},"o":${cell("BO")}}"""),
-      Seq())
-
-    val server = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
-    val seenQueries = new java.util.concurrent.CopyOnWriteArrayList[String]()
-    server.createContext("/sparql", new HttpHandler {
-      def handle(x: HttpExchange): Unit = {
-        val q = java.net.URLDecoder.decode(
-          x.getRequestURI.getRawQuery.stripPrefix("query="), "UTF-8")
-        seenQueries.add(q)
-        val resp =
-          if (!q.contains("LIMIT")) body(tabularRows: _*)
-          else {
-            val off = q.split("OFFSET ")(1).trim.toInt
-            body(triplePages.lift(off / 2).getOrElse(Seq()): _*)
-          }
-        val bytes = resp.getBytes("UTF-8")
-        x.getResponseHeaders.add("Content-Type", "application/sparql-results+json")
-        x.sendResponseHeaders(200, bytes.length)
-        x.getResponseBody.write(bytes); x.close()
-      }
-    })
-    server.start()
-    val ep = s"http://127.0.0.1:${server.getAddress.getPort}/sparql"
-    try {
-      // tabular: variables are properties; multi-valued collect per subject
-      val tab = Sources.sparql(spark, ep, "SELECT ?id ?name ?phone WHERE {...}",
-        idVar = "id",
-        variables = Map("name" -> "name", "phone" -> "phone"),
-        cleaners = Map("name" -> Seq("trim", "lowercase-normalize"),
-          "phone" -> Seq("digits-only")))
-      val rows = tab.collect().map { r =>
-        r.getString(0) -> ((r.getSeq[String](1).toSet, r.getSeq[String](2).toSet))
-      }.toMap
-      assert(rows("http://ex.org/p1") === ((Set("lars holm", "l holm"), Set("47221133"))))
-      assert(rows("http://ex.org/p2") === ((Set("kari berg"), Set("5551234"))))
-
-      // triple mode with Duke-style paging (LIMIT 2 OFFSET 0/2/4)
-      val tri = Sources.sparql(spark, ep, "SELECT ?id ?p ?o WHERE {...}",
-        idVar = "id", variables = Map("name" -> "nm", "phone" -> "ph"),
-        tripleMode = true, pageSize = 2, pagesPerRound = 3)
-      val triRows = tri.collect().map { r =>
-        r.getString(0) -> ((r.getSeq[String](1).toSet, r.getSeq[String](2).toSet))
-      }.toMap
-      assert(triRows === Map(
-        "a" -> ((Set("ANNA"), Set("111-22"))),
-        "b" -> ((Set("BO"), Set.empty[String]))))
-      assert(seenQueries.toArray.count(_.toString.contains("LIMIT")) === 3) // 2 pages + empty stop
-    } finally server.stop(0)
-  }
-
-  test("sparql distributed paging: multi-round executor-side fetch (VERDICT r3 #3)") {
-    import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-    // 9 bindings served LIMIT/OFFSET-faithfully; pageSize=2, pagesPerRound=2
-    // with the geometric ramp -> rounds of widths 1,2,2 (offsets 0 | 2,4 |
-    // 6,8), the last page short. The driver only ever collects per-page
-    // COUNTS; page bodies flow through executor map tasks into the triples
-    // frame.
-    def cell(v: String) = s"""{"type":"literal","value":"$v"}"""
-    val all = (0 until 9).map(i =>
-      s"""{"id":${cell(s"s$i")},"p":${cell("name")},"o":${cell(s"N$i")}}""")
-    val server = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
-    val seen = new java.util.concurrent.CopyOnWriteArrayList[String]()
-    server.createContext("/sparql", new HttpHandler {
-      def handle(x: HttpExchange): Unit = {
-        val q = java.net.URLDecoder.decode(
-          x.getRequestURI.getRawQuery.stripPrefix("query="), "UTF-8")
-        seen.add(q)
-        val (lim, off) =
-          (q.split("LIMIT ")(1).trim.split(" ")(0).toInt, q.split("OFFSET ")(1).trim.toInt)
-        val page = all.slice(off, off + lim)
-        val resp = s"""{"head":{"vars":["id","p","o"]},
-          |"results":{"bindings":[${page.mkString(",")}]}}""".stripMargin
-        val bytes = resp.getBytes("UTF-8")
-        x.getResponseHeaders.add("Content-Type", "application/sparql-results+json")
-        x.sendResponseHeaders(200, bytes.length)
-        x.getResponseBody.write(bytes); x.close()
-      }
-    })
-    server.start()
-    val ep = s"http://127.0.0.1:${server.getAddress.getPort}/sparql"
-    try {
-      val df = Sources.sparql(spark, ep, "SELECT ?id ?p ?o WHERE {...}",
-        idVar = "id", variables = Map("name" -> "nm"),
-        tripleMode = true, pageSize = 2, pagesPerRound = 2)
-      val got = df.collect().map(r => r.getString(0) -> r.getSeq[String](1).toSet).toMap
-      assert(got === (0 until 9).map(i => s"s$i" -> Set(s"N$i")).toMap)
-      // exactly 5 page fetches (ramp 1+2+2) — no re-fetch on the count read
-      // vs the triple union (the round pin makes each page one HTTP request),
-      // and no guaranteed-empty full first round for small result sets
-      assert(seen.size === 5, s"expected 5 page fetches, saw: ${seen.size}")
-    } finally server.stop(0)
-  }
-
-  test("JDBC link store: links round-trip; verdicts feed LinkJob overrides") {
-    import spark.implicits._
-    val url = "jdbc:derby:memory:graftlinks;create=true"
-    try {
-      val classified = Seq(
-        ("d2", "d1", "match", 0.97),
-        ("d3", "d4", "maybe", 0.72),
-        ("d5", "d6", "no-match", 0.2)).toDF("a_id", "b_id", "bucket", "score")
-      val links = graft.io.Links.toLinks(classified, runTs = 1723939200000L)
-      graft.io.Links.writeJdbc(links, url, "links")
-      val back = graft.io.Links.readJdbc(spark, url, "LINKS").collect()
-        .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getDouble(3))).toSet
-      // no-match absent; pair orientation normalized to (min, max)
-      assert(back === Set(("d1", "d2", "match", 0.97), ("d3", "d4", "maybe", 0.72)))
-
-      // review tooling writes verdicts; they come back as LinkJob overrides
-      val conn = java.sql.DriverManager.getConnection(url)
-      try {
-        val st = conn.createStatement()
-        st.execute("CREATE TABLE verdicts (a_id VARCHAR(32), b_id VARCHAR(32), status VARCHAR(16))")
-        st.execute("INSERT INTO verdicts VALUES ('d3', 'd4', 'VERIFIED'), ('d1', 'd2', 'retracted')")
-        st.close()
-      } finally conn.close()
-      val ov = graft.io.Links.readOverrides(spark, url, "verdicts").collect()
-        .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-      assert(ov === Set(("d3", "d4", "VERIFIED"), ("d1", "d2", "retracted")))
-    } finally {
-      try java.sql.DriverManager.getConnection("jdbc:derby:memory:graftlinks;drop=true")
-      catch { case _: java.sql.SQLException => }
     }
   }
 }

@@ -6,11 +6,10 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.model.{Doc, MatchConfig, Span}
-import graft.pipeline.{Fixtures, Media}
 import graft.streaming.IncrementalLink
 
-/** Structured Streaming incremental linkage (SURVEY.md §2.9 optional mapping)
-  * and the multimodal media plumbing (opaque binary + batched decode).
+/** Structured Streaming incremental linkage (SURVEY.md §2.9 optional
+  * mapping): exact-dedup state, windowed counts and corpus growth.
   */
 class StreamingMediaSpec extends SparkSpec {
 
@@ -130,60 +129,5 @@ class StreamingMediaSpec extends SparkSpec {
       val blocks = spark.read.parquet(s"$base/corpus/blocks")
       assert(blocks.count() > 0) // persistent blocks table grows alongside
     } finally q.stop()
-  }
-
-  test("media plumbing: spans -> payload rows -> batched features, deterministic") {
-    import spark.implicits._
-    val docs = Fixtures.docs(spark, 60)
-    val media = Media.mediaTable(docs)
-    val nRefs = docs.collect().map(_.spans.count(_.kind == "media")).sum
-    assert(media.count() === nRefs.toLong)
-
-    val feats = Media.extractFeatures(media, batchSize = 7)
-    val rows = feats.collect()
-    assert(rows.length === nRefs)
-    rows.foreach { f =>
-      assert(f.n_bytes >= 64 && f.n_bytes < 256)
-      assert(f.embedding.length === 8)
-      assert(f.embedding.forall(v => v >= -1.0f && v <= 1.0f))
-      assert(Set("image", "audio", "video").contains(f.kind))
-    }
-    // deterministic: same refs -> same fingerprints, regardless of batch size
-    val again = Media.extractFeatures(media, batchSize = 64).collect()
-    assert(rows.map(f => f.media_ref -> f.fingerprint).toMap ===
-      again.map(f => f.media_ref -> f.fingerprint).toMap)
-
-    // shared refs across duplicate docs collapse in fingerprint dedup
-    val dedup = Media.dedupByFingerprint(feats).collect()
-    assert(dedup.map(_._2).sum === nRefs.toLong)
-    assert(dedup.exists(_._2 > 1), "fixture shares media refs within entities")
-  }
-
-  test("media resize + frame sampling: typed batched plumbing, deterministic stubs") {
-    val feats = Media.extractFeatures(Media.mediaTable(Fixtures.docs(spark, 40)))
-    val resized = Media.resize(feats, maxW = 64, maxH = 48).collect()
-    assert(resized.length === feats.count())
-    resized.foreach { r =>
-      assert(r.width >= 1 && r.width <= 64)
-      assert(r.height >= 1 && r.height <= 48)
-    }
-    // aspect preserved within integer truncation for the downscaled ones
-    val byRef = feats.collect().map(f => f.media_ref -> f).toMap
-    resized.filter(r => byRef(r.media_ref).width > 64).foreach { r =>
-      val f = byRef(r.media_ref)
-      val expScale = math.min(64.0 / math.max(1, f.width), 48.0 / math.max(1, f.height))
-      assert(r.width === math.max(1, (math.max(1, f.width) * expScale).toInt))
-    }
-
-    val frames = Media.sampleFrames(feats, everyN = 8).collect()
-    val nVideos = feats.filter(_.kind == "video").count()
-    if (nVideos > 0) {
-      assert(frames.nonEmpty)
-      assert(frames.forall(_.frame_ix % 8 === 0))
-      // deterministic across runs
-      val again = Media.sampleFrames(feats, everyN = 8).collect()
-      assert(frames.map(f => (f.media_ref, f.frame_ix, f.frame_fingerprint)).toSet ===
-        again.map(f => (f.media_ref, f.frame_ix, f.frame_fingerprint)).toSet)
-    }
   }
 }

@@ -1,0 +1,79 @@
+package graft.jobs
+
+import java.io.File
+import java.nio.file.Files
+
+import graft.SparkSpec
+import graft.io.Tables
+
+/** The operations CLI and the bucket-spec contract its corpus compaction
+  * relies on: a batch-partitioned bucketed table is only ever read, written
+  * or compacted under the `(bucketCol, nBuckets)` it was written with.
+  */
+class MaintenanceJobSpec extends SparkSpec {
+
+  /** Every file under `dir` with its size, relative to `dir`. */
+  private def listing(dir: String): Map[String, Long] = {
+    val root = new File(dir).toPath
+    val walk = Files.walk(root)
+    try walk.filter(p => Files.isRegularFile(p)).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .map(p => root.relativize(p).toString -> Files.size(p)).toMap
+    finally walk.close()
+  }
+
+  test("compact-corpus with another bucket spec throws and leaves files and rows unchanged") {
+    import spark.implicits._
+    val path = Files.createTempDirectory("graft-mj").toString + "/t"
+    val t = "graft_mj_t"
+    def docs() = spark.table(t).select("doc_id", "v").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+    def rows() = spark.table(t).select("doc_id", "v", "batch_id").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq.sorted
+    try {
+      for (b <- 0L to 2L)
+        Tables.writeBatchBucketed(
+          (1 to 40).map(i => (b * 100 + i, s"v$i")).toDF("doc_id", "v"), t, path, "doc_id", 8, b)
+      val files = listing(path)
+      val before = rows()
+
+      // the catalog entry says 8 buckets on doc_id: another count, or another
+      // column, is refused before anything is read or written
+      val wrongCount = intercept[IllegalArgumentException] {
+        MaintenanceJob.run(spark, Seq("compact-corpus", t, path, "doc_id", "4"))
+      }
+      assert(wrongCount.getMessage.contains("(doc_id) INTO 8 BUCKETS") &&
+        wrongCount.getMessage.contains("(doc_id) INTO 4 BUCKETS"), wrongCount.getMessage)
+      val wrongCol = intercept[IllegalArgumentException] {
+        MaintenanceJob.run(spark, Seq("compact-corpus", t, path, "v", "8"))
+      }
+      assert(wrongCol.getMessage.contains("(v) INTO 8 BUCKETS"), wrongCol.getMessage)
+      assert(listing(path) === files)
+      assert(rows() === before)
+
+      // a fresh JVM has no catalog entry: the entry is rebuilt from disk, and
+      // the data files' bucket ids (up to 7) refuse a 4-bucket spec
+      spark.sql(s"DROP TABLE $t")
+      val fromDisk = intercept[IllegalArgumentException] {
+        MaintenanceJob.run(spark, Seq("compact-corpus", t, path, "doc_id", "4"))
+      }
+      assert(fromDisk.getMessage.contains("(doc_id) INTO 4 BUCKETS") &&
+        fromDisk.getMessage.contains("bucket ids up to 7"), fromDisk.getMessage)
+      assert(!spark.catalog.tableExists(t))
+      assert(listing(path) === files)
+
+      // the right spec still compacts, and keeps every row
+      val beforeDocs = before.map { case (d, v, _) => (d, v) }
+      MaintenanceJob.run(spark, Seq("compact-corpus", t, path, "doc_id", "8"))
+      assert(docs() === beforeDocs)
+    } finally spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
+  test("the CLI has three subcommands; compact-bucketed is rejected") {
+    val e = intercept[IllegalArgumentException] {
+      MaintenanceJob.run(spark, Seq("compact-bucketed", "t", "/nowhere", "doc_id", "4"))
+    }
+    assert(e.getMessage ===
+      "unknown maintenance command: compact-bucketed t /nowhere doc_id 4 " +
+        "(expected compact-edges | compact-corpus | expire-snapshots)")
+  }
+}

@@ -7,47 +7,6 @@ import graft.SparkSpec
 import graft.model.{Doc, MatchConfig}
 import graft.streaming.IncrementalLink
 
-class MediaSpec extends SparkSpec {
-  import spark.implicits._
-
-  test("media table extracts one row per media span with payload bytes") {
-    val docs = Fixtures.docs(spark, 100)
-    val media = Media.mediaTable(docs)
-    val nSpans = docs.selectExpr("size(filter(spans, s -> s.kind = 'media'))")
-      .as[Int].collect().sum
-    assert(media.count() == nSpans)
-    val row = media.head()
-    assert(row.bytes.nonEmpty && row.media_ref.startsWith("m://"))
-    assert(Set("image", "audio", "video").contains(row.kind))
-  }
-
-  test("batched feature extraction is deterministic and batch-size-invariant") {
-    val docs = Fixtures.docs(spark, 60)
-    val media = Media.mediaTable(docs)
-    val f1 = Media.extractFeatures(media, batchSize = 4).collect()
-      .sortBy(r => (r.doc_id, r.media_ref))
-    val f2 = Media.extractFeatures(media.repartition(5), batchSize = 17).collect()
-      .sortBy(r => (r.doc_id, r.media_ref))
-    assert(f1.length == f2.length && f1.length > 0)
-    f1.zip(f2).foreach { case (a, b) =>
-      assert(a.fingerprint == b.fingerprint && a.n_bytes == b.n_bytes)
-      assert(a.embedding.toSeq == b.embedding.toSeq)
-      assert(a.embedding.length == 8)
-      assert(a.width >= 0 && a.width < 640 && a.height >= 0 && a.height < 480)
-    }
-  }
-
-  test("shared media_ref across duplicate docs yields shared fingerprints (dedup signal)") {
-    val docs = Fixtures.docs(spark, 80)
-    val feats = Media.extractFeatures(Media.mediaTable(docs))
-    val groups = Media.dedupByFingerprint(feats).collect()
-    assert(groups.exists(_._2 > 1), "expected at least one shared media payload")
-    // same ref => same fingerprint (payload fetch is ref-deterministic)
-    val byRef = feats.collect().groupBy(_.media_ref)
-    byRef.values.foreach(g => assert(g.map(_.fingerprint).distinct.length == 1))
-  }
-}
-
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 

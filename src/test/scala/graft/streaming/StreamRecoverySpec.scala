@@ -111,6 +111,12 @@ class StreamRecoverySpec extends SparkSpec {
     val docsSeen = spark.read.parquet(s"$crashed/corpus/records")
       .select("doc_id").collect().map(_.getString(0)).toSeq
     assert(docsSeen.distinct.size === docsSeen.size, "duplicate corpus docs")
+    // the default corpusTable keeps the bucketed layout, under the name
+    // derived from corpusDir
+    val corpusTable = graft.io.Tables.corpusTableName(s"$crashed/corpus")
+    spark.catalog.refreshTable(corpusTable)
+    assert(rows(spark.table(corpusTable).drop("batch_id")) ===
+      rows(spark.read.parquet(s"$crashed/corpus/records").drop("batch_id")))
 
     // labels: equal, and the doc-layout mirror intact
     val sc = new LabelStore(s"$crashed/clusters", 8)
