@@ -236,9 +236,9 @@ object SparkEntry {
       // two sort-merge joins to pair each order with its successor, which
       // lag() produces inside the one window sort. Same edge set, and the
       // output is ALREADY custkey-partitioned, so every chain stays
-      // partition-local for CC's union-find pre-contraction and the star
-      // loop converges in one iteration (the query KNOWS its component key —
-      // generic CC cannot).
+      // partition-local for CC's union-find pre-contraction, which yields
+      // the star forest outright: zero star iterations (the query KNOWS its
+      // component key — generic CC cannot).
       val w = Window.partitionBy(col("o_custkey")).orderBy(col("o_orderkey"))
       val edges = t(s, dir, "orders")
         .select(col("o_custkey"), col("o_orderkey"))

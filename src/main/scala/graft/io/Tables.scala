@@ -63,7 +63,9 @@ object Tables {
     * [[ensureBatchTable]] recreates the entry from the on-disk layout
     * instead of destroying it; only a path with NO committed batch dir
     * (genuine first write, or a first attempt that crashed mid-write and
-    * left just staging files) is cleared and created fresh.
+    * left just staging files) is cleared and created fresh. The first write
+    * also records its bucket spec at the table root (`_bucket_spec`), which
+    * a later rebuild of the catalog entry compares exactly.
     */
   def writeBatchBucketed(
       df: DataFrame,
@@ -112,6 +114,7 @@ object Tables {
         .bucketBy(nBuckets, bucketCol).sortBy(bucketCol)
         .option("path", path).option("partitionOverwriteMode", "dynamic")
         .format("parquet").saveAsTable(table)
+      writeMarker(fs, s"$path/_bucket_spec", s"$bucketCol\t$nBuckets")
     } else {
       withB.write.mode("overwrite").insertInto(table)
     }
@@ -135,8 +138,10 @@ object Tables {
     * `compactBatchBucketed`, re-bucket old batches beside a newest batch
     * still in the old spec). Before any read or write the spec is checked
     * against the catalog entry's bucket spec, or, when the entry is rebuilt
-    * from disk, against the bucket ids in the committed data file names; a
-    * mismatch throws an IllegalArgumentException naming both specs.
+    * from disk, against the writer's `_bucket_spec` record (a table written
+    * before the record existed falls back to the bucket ids in the committed
+    * data file names, which only bound the count from below); a mismatch
+    * throws an IllegalArgumentException naming both specs.
     */
   def ensureBatchTable(
       spark: SparkSession,
@@ -216,20 +221,27 @@ object Tables {
       val leaves = diskParts().filter(committed)
       if (leaves.isEmpty) false
       else {
-        // the writer's bucket count is not recorded on disk, but every data
-        // file names its bucket id: an id >= nBuckets (or none at all) means
-        // the files were written under another spec
-        val ids = leaves.toSeq.flatMap(l => fs.listStatus(l.getPath))
-          .map(_.getPath.getName)
-          .filterNot(n => n.startsWith("_") || n.startsWith("."))
-          .map(n => n -> BucketingUtils.getBucketId(n))
-        val unbucketed = ids.collect { case (n, None) => n }
-        val maxId = ids.flatMap(_._2).maxOption
-        require(unbucketed.isEmpty && maxId.forall(_ < nBuckets),
-          s"ensureBatchTable: $path holds data files outside the caller's spec " +
-            s"($bucketCol) INTO $nBuckets BUCKETS: " +
-            (if (unbucketed.nonEmpty) s"no bucket id in ${unbucketed.take(3).mkString(", ")}"
-            else s"bucket ids up to ${maxId.get}"))
+        readBucketSpec(fs, path) match {
+          case Some((col0, n)) =>
+            require(n == nBuckets && col0.toLowerCase == bucketCol.toLowerCase,
+              s"ensureBatchTable: $path was written as ($col0) INTO $n BUCKETS, " +
+                s"but the caller's spec is ($bucketCol) INTO $nBuckets BUCKETS")
+          case None =>
+            // a table without the record: every data file still names its
+            // bucket id, and an id >= nBuckets (or none at all) means the
+            // files were written under another spec
+            val ids = leaves.toSeq.flatMap(l => fs.listStatus(l.getPath))
+              .map(_.getPath.getName)
+              .filterNot(n => n.startsWith("_") || n.startsWith("."))
+              .map(n => n -> BucketingUtils.getBucketId(n))
+            val unbucketed = ids.collect { case (n, None) => n }
+            val maxId = ids.flatMap(_._2).maxOption
+            require(unbucketed.isEmpty && maxId.forall(_ < nBuckets),
+              s"ensureBatchTable: $path holds data files outside the caller's spec " +
+                s"($bucketCol) INTO $nBuckets BUCKETS: " +
+                (if (unbucketed.nonEmpty) s"no bucket id in ${unbucketed.take(3).mkString(", ")}"
+                else s"bucket ids up to ${maxId.get}"))
+        }
         // schema from a COMMITTED leaf dir's files — the raw data carries
         // everything but the partition column
         val dataSchema = spark.read.parquet(leaves.minBy(_.getPath.getName).getPath.toString).schema
@@ -246,23 +258,35 @@ object Tables {
     * the -1 dir itself is gone — in which case NO removal is accounted for).
     */
   private[io] def readFoldedIds(
-      fs: org.apache.hadoop.fs.FileSystem, root: String): Set[String] = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val m = new HPath(s"$root/batch_id=-1/_folded_ids")
-    if (!fs.exists(m)) Set.empty
+      fs: org.apache.hadoop.fs.FileSystem, root: String): Set[String] =
+    readMarker(fs, s"$root/batch_id=-1/_folded_ids")
+      .fold(Set.empty[String])(_.split('\n').map(_.trim).filter(_.nonEmpty).toSet)
+
+  /** The writer's bucket spec, `<bucketCol>TAB<nBuckets>` in `_bucket_spec`
+    * at the table root: written by the first [[writeBatchBucketed]] and
+    * carried over by [[compactBatchBucketed]].
+    */
+  private def readBucketSpec(
+      fs: org.apache.hadoop.fs.FileSystem, root: String): Option[(String, Int)] =
+    readMarker(fs, s"$root/_bucket_spec").map { t =>
+      val Array(c, n) = t.trim.split('\t')
+      (c, n.toInt)
+    }
+
+  /** The layout's `_`-prefixed marker files, which table scans never list. */
+  private def readMarker(fs: org.apache.hadoop.fs.FileSystem, file: String): Option[String] = {
+    val m = new org.apache.hadoop.fs.Path(file)
+    if (!fs.exists(m)) None
     else {
       val in = fs.open(m)
-      try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().map(_.trim).filter(_.nonEmpty).toSet
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
       finally in.close()
     }
   }
 
-  private[io] def writeFoldedIds(
-      fs: org.apache.hadoop.fs.FileSystem, root: String, ids: Set[String]): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val out = fs.create(new HPath(s"$root/batch_id=-1/_folded_ids"), true)
-    try out.write(ids.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
+  private def writeMarker(fs: org.apache.hadoop.fs.FileSystem, file: String, text: String): Unit = {
+    val out = fs.create(new org.apache.hadoop.fs.Path(file), true)
+    try out.write(text.getBytes("UTF-8"))
     finally out.close()
   }
 
@@ -363,7 +387,8 @@ object Tables {
     // data: the marker lands inside the tmp dir before any destructive step.
     val absorbed = readFoldedIds(fs, path) ++
       ids.filter(i => i != maxId && i != -1L).map(i => s"batch_id=$i")
-    writeFoldedIds(fs, tmpPath, absorbed)
+    writeMarker(fs, s"$tmpPath/batch_id=-1/_folded_ids", absorbed.toSeq.sorted.mkString("\n"))
+    readMarker(fs, s"$path/_bucket_spec").foreach(writeMarker(fs, s"$tmpPath/_bucket_spec", _))
     spark.sql(s"DROP TABLE $table")
     fs.delete(new HPath(bakPath), true)
     require(fs.rename(new HPath(path), new HPath(bakPath)),

@@ -15,7 +15,8 @@ import graft.pipeline.{Blocking, Cluster, ErPipeline, Fixtures}
   *
   * Every stage lands as parquet under `outDir` and is recorded in the stage
   * manifest, so a killed run resumes mid-pipeline (including per-iteration CC
-  * checkpoints) and produces byte-identical outputs (BASELINE north_rule).
+  * checkpoints `cc_iter_<i>` — none when the contraction already yields the
+  * star forest) and produces byte-identical outputs (BASELINE north_rule).
   * Lineage rows (stage, partition, row count) and stage metrics are persisted
   * alongside the data (BASELINE.json:6).
   */
@@ -26,7 +27,10 @@ object LinkJob {
       matches: Long, maybes: Long, clusters: Long,
       droppedBlocks: Long, saltedBlocks: Long)
 
-  /** @param overrides Duke LinkDatabase analog (`[D Link.java, LinkDatabase
+  /** `Summary.docs` is the `records` stage's row total: extract is 1:1 (its
+    * invariant gate throws, never filters), so the docs get no scan of their own.
+    *
+    * @param overrides Duke LinkDatabase analog (`[D Link.java, LinkDatabase
     *                   .java]`, SURVEY §2.1 S7): human link decisions that
     *                   override inference — rows (a_id, b_id, status) with
     *                   status `verified` (forced edge, Duke ASSERTED/OWNSAME)
@@ -153,10 +157,10 @@ object LinkJob {
         .select(regexp_extract($"file", "([^/]+)/[^/]+$", 1).as("stage"), $"file", $"rows")
     }
 
-    // every summary count but `docs` was observed on a stage write and is
-    // read back from the manifest, on fresh and resumed runs alike
-    val counts = Seq("lineage", "classified", "clusters").map(m.counters).reduce(_ ++ _) +
-      ("docs" -> docs.count())
+    // every summary count was observed on a stage write and is read back
+    // from the manifest, on fresh and resumed runs alike (docs = records)
+    val observed = Seq("lineage", "classified", "clusters").map(m.counters).reduce(_ ++ _)
+    val counts = observed + ("docs" -> observed("records"))
     counts.foreach { case (k, v) => metrics += (("job", k, v.toDouble)) }
 
     m.stage(spark, "metrics") {

@@ -25,8 +25,8 @@ import org.apache.spark.sql.types._
   *    scans its input three times (direction, min-agg, join); without
   *    truncation those scans re-ran the whole large-star union+agg+join each
   *    time (the round-1 158 s plan).
-  *  - **convergence probe reads the just-materialized edges** (cached/
-  *    checkpointed blocks), one cheap agg — not a recompute of the iteration.
+  *  - **the loop stops at the first star forest** (`isStarForest`, tested on
+  *    the contraction and after each iteration): no pass confirms a fixed point.
   */
 object Cluster {
 
@@ -39,14 +39,11 @@ object Cluster {
 
   /** Result: (doc_id, cluster_id) for every node that appears in `edges`;
     * callers union in singletons (docs with no edge) with cluster_id = doc_id.
-    */
-  /** Default per-iteration pin is LAZY (optimization r6, guide §1.2): the
-    * convergence signature right after it is the first action, so one job
-    * both materializes the iteration's edges and probes the fixed point —
-    * the old eager checkpoint ran a separate materialization job per
-    * iteration (and one more upfront) that computed nothing the signature
-    * job would not. Callers that stage iterations to durable storage
-    * (LinkJob resume) keep passing their own eager `onIteration`.
+    *
+    * The default per-iteration pin is LAZY (optimization r6, guide §1.2): the
+    * star-forest test right after it is the first action, so one job both
+    * materializes and tests the iteration's edges. LinkJob passes an eager
+    * `onIteration` (durable stages); it runs only for iterations that run.
     */
   def connectedComponents(
       edges0: DataFrame,
@@ -72,10 +69,9 @@ object Cluster {
     var edges = graft.io.Persist.pinLazy(
       if (preContract) localContract(normalized) else normalized.distinct())
 
-    var converged = false
     var iter = 0
-    var sig = signature(edges) // materializes the lazy pin in the same job
-    while (!converged && iter < maxIter) {
+    var forest = isStarForest(edges) // materializes the lazy pin in the same job
+    while (!forest && iter < maxIter) {
       iter += 1
       // large-star output is CACHED lazily, not eagerly checkpointed
       // (optimization r6, guide §5 "caching"): small-star scans it three
@@ -88,18 +84,15 @@ object Cluster {
       // truncate lineage every iteration (iterative joins grow the plan
       // exponentially otherwise — SURVEY.md §4 "CC lineage explosion")
       edges = onIteration(iter, ss)
-      val s2 = signature(edges)
+      forest = isStarForest(edges)
       ls.unpersist(false)
-      converged = s2 == sig
-      sig = s2
     }
-    require(converged, s"connected components did not converge in $maxIter iterations")
+    require(forest, s"connected components did not converge in $maxIter iterations")
 
     // Final edge set is a star forest rooted at component minima — the
     // FIXED POINTS of the large-star/small-star iteration are exactly such
-    // forests (Kiveris et al. §3), and convergence just verified edges is
-    // one. Labeling therefore reads off directly (optimization r6, guide
-    // §2.3 "aggregate before you shuffle"): every b is a member appearing
+    // forests (Kiveris et al. §3), and the loop only exits on one. Labeling
+    // reads off directly (guide §2.3): every b is a member appearing
     // exactly once with its root a, so members need NO aggregation at all;
     // only the roots dedup (|components| rows), where the old shape
     // symmetrized to 2|E| rows and ran a corpus-wide min-aggregate.
@@ -279,14 +272,15 @@ object Cluster {
       .distinct()
   }
 
-  /** Cheap fixed-point signature: (|E|, xor of row hashes) — order-independent.
-    * Always evaluated against edges that `truncate`/`onIteration` just
-    * materialized, so this is one scan of cached blocks, not a plan recompute.
+  /** Exact fixed-point test: an `a < b` edge set is a star forest (the unique
+    * fixed point of both star steps for its components) iff every `b` occurs
+    * once and no node is both an `a` and a `b` — i.e. no node seen as a `b`
+    * (posexplode position 1) is seen twice. One scan of the pinned edges.
     */
-  private def signature(edges: DataFrame): (Long, Long) = {
-    val r = edges.agg(
-      count("*").as("n"),
-      coalesce(bit_xor(xxhash64(col("a"), col("b"))), lit(0L)).as("h")).collect()(0)
-    (r.getLong(0), r.getLong(1))
-  }
+  private[pipeline] def isStarForest(edges: DataFrame): Boolean =
+    edges.select(posexplode(array(col("a"), col("b"))).as(Seq("isB", "node")))
+      .groupBy(col("node"))
+      .agg(sum(col("isB")).as("asB"), count(lit(1)).as("n"))
+      .where(col("asB") > 0 && col("n") > 1)
+      .isEmpty
 }

@@ -154,10 +154,10 @@ private[streaming] object LabelCommit {
         // exact for both
         // LAZY pins throughout this commit (optimization r6 / VERDICT r5 #2):
         // each pinned frame's first consumer is one of the bounded
-        // partition-set collects (or the delta CC's signature), so the frame
-        // materializes inside that job — the old eager pins serialized one
-        // dedicated materialization job per frame onto the per-trigger
-        // driver floor
+        // partition-set collects (or the delta CC's star-forest test), so
+        // the frame materializes inside that job — the old eager pins
+        // serialized one dedicated materialization job per frame onto the
+        // per-trigger driver floor
         val probeIds = graft.io.Persist.pinLazy(
           batchEdges.select(col(batchEdges.columns(0)).as("doc_id"))
             .union(batchEdges.select(col(batchEdges.columns(1)).as("doc_id")))

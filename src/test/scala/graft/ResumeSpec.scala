@@ -122,6 +122,39 @@ class ResumeSpec extends SparkSpec {
     assert(clusterMap(resumeOut) === clusterMap(cleanOut))
   }
 
+  test("an outDir holding a cc_iter_1 stage from an older run resumes to the same result") {
+    val cleanOut = tmpDir("graft-cc-clean").toString
+    val oldOut = tmpDir("graft-cc-old").toString
+    val docs = Fixtures.docs(spark, 250)
+    val cleanSummary = LinkJob.run(spark, docs, MatchConfig.fixture, cleanOut)
+    // the fixture's contraction already yields the star forest: a fresh run
+    // stages no CC iteration
+    assert(!new StageManifest(cleanOut).completed.keys.exists(_.startsWith("cc_iter_")))
+    assert(!new java.io.File(cleanOut).list().exists(_.startsWith("cc_iter_")))
+
+    // an older run confirmed that forest in one staged iteration and was
+    // killed before `clusters` landed: its outDir holds the stages up to
+    // `edges` plus `cc_iter_1`, the star forest (root a < member b)
+    LinkJob.run(spark, docs, MatchConfig.fixture, oldOut)
+    val forest = spark.read.parquet(s"$oldOut/clusters")
+      .where(col("doc_id") =!= col("cluster_id"))
+      .select(col("cluster_id").as("a"), col("doc_id").as("b"))
+    forest.write.parquet(s"$oldOut/cc_iter_1")
+    val manifestPath = java.nio.file.Paths.get(oldOut, "_graft_manifest.tsv")
+    val downstream = Set("clusters", "lineage", "metrics")
+    val kept = new java.util.ArrayList[String]()
+    Files.readAllLines(manifestPath).forEach { l =>
+      if (!downstream.contains(l.split('\t')(0))) kept.add(l)
+    }
+    kept.add(s"cc_iter_1\t$oldOut/cc_iter_1\t${forest.count()}")
+    Files.write(manifestPath, kept)
+    downstream.foreach(d => graft.io.LocalFs.deleteTree(java.nio.file.Paths.get(oldOut, d)))
+
+    val resumed = LinkJob.run(spark, docs, MatchConfig.fixture, oldOut)
+    assert(resumed === cleanSummary)
+    assert(clusterMap(oldOut) === clusterMap(cleanOut))
+  }
+
   test("a second run over a completed outDir is a pure no-op read") {
     val out = tmpDir("graft-noop").toString
     val docs = Fixtures.docs(spark, 120)

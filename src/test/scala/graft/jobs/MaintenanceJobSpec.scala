@@ -51,13 +51,13 @@ class MaintenanceJobSpec extends SparkSpec {
       assert(rows() === before)
 
       // a fresh JVM has no catalog entry: the entry is rebuilt from disk, and
-      // the data files' bucket ids (up to 7) refuse a 4-bucket spec
+      // the writer's recorded spec refuses a 4-bucket spec
       spark.sql(s"DROP TABLE $t")
       val fromDisk = intercept[IllegalArgumentException] {
         MaintenanceJob.run(spark, Seq("compact-corpus", t, path, "doc_id", "4"))
       }
       assert(fromDisk.getMessage.contains("(doc_id) INTO 4 BUCKETS") &&
-        fromDisk.getMessage.contains("bucket ids up to 7"), fromDisk.getMessage)
+        fromDisk.getMessage.contains("written as (doc_id) INTO 8 BUCKETS"), fromDisk.getMessage)
       assert(!spark.catalog.tableExists(t))
       assert(listing(path) === files)
 
@@ -65,6 +65,46 @@ class MaintenanceJobSpec extends SparkSpec {
       val beforeDocs = before.map { case (d, v, _) => (d, v) }
       MaintenanceJob.run(spark, Seq("compact-corpus", t, path, "doc_id", "8"))
       assert(docs() === beforeDocs)
+    } finally spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
+  test("a table rebuilt from disk is adopted only under its writer's exact bucket spec") {
+    import spark.implicits._
+    val path = Files.createTempDirectory("graft-mj-spec").toString + "/t"
+    val t = "graft_mj_spec"
+    def docs() = spark.table(t).select("doc_id", "v").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+    def readopt(n: Int) = {
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      Tables.ensureBatchTable(spark, t, path, "doc_id", n)
+    }
+    try {
+      for (b <- 0L to 2L)
+        Tables.writeBatchBucketed(
+          (1 to 40).map(i => (b * 100 + i, s"v$i")).toDF("doc_id", "v"), t, path, "doc_id", 8, b)
+      val before = docs()
+
+      // a LARGER count passes a bucket-id bound (ids stay below 16), but the
+      // files were hashed into 8 buckets: adopting them under 16 would plan
+      // exchange-free joins that miss rows
+      val larger = intercept[IllegalArgumentException](readopt(16))
+      assert(larger.getMessage.contains("written as (doc_id) INTO 8 BUCKETS") &&
+        larger.getMessage.contains("(doc_id) INTO 16 BUCKETS"), larger.getMessage)
+      assert(!spark.catalog.tableExists(t))
+
+      // compaction carries the record over
+      assert(readopt(8))
+      MaintenanceJob.run(spark, Seq("compact-corpus", t, path, "doc_id", "8"))
+      intercept[IllegalArgumentException](readopt(16))
+      assert(readopt(8))
+      assert(docs() === before)
+
+      // a table written before the record existed keeps the bucket-id check
+      java.nio.file.Files.delete(java.nio.file.Paths.get(path, "_bucket_spec"))
+      val legacy = intercept[IllegalArgumentException](readopt(4))
+      assert(legacy.getMessage.contains("bucket ids up to 7"), legacy.getMessage)
+      assert(readopt(8))
+      assert(docs() === before)
     } finally spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 

@@ -61,6 +61,20 @@ class FixtureSpec extends SparkSpec {
 class ClusterSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Union-find oracle: every node of `edges` -> its component's minimum. */
+  private def oracle[T](edges: Seq[(T, T)])(implicit ord: Ordering[T]): Map[T, T] = {
+    val parent = scala.collection.mutable.Map[T, T]()
+    def find(x: T): T = {
+      val p = parent.getOrElse(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(ord.max(ra, rb)) = ord.min(ra, rb)
+    }
+    edges.flatMap(e => Seq(e._1, e._2)).distinct.map(n => n -> find(n)).toMap
+  }
+
   private def cc(edges: Seq[(String, String)]): Map[String, String] =
     Cluster.connectedComponents(edges.toDF("a", "b"))
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
@@ -78,24 +92,50 @@ class ClusterSpec extends SparkSpec {
       val n = 60
       val edges = (1 to 80).map(_ => (s"v${rnd.nextInt(n)}", s"v${rnd.nextInt(n)}"))
         .filter(e => e._1 != e._2)
-      val labels = cc(edges)
-      // oracle
-      val parent = scala.collection.mutable.Map[String, String]()
-      def find(x: String): String = {
-        val p = parent.getOrElse(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(if (ra < rb) rb else ra) = if (ra < rb) ra else rb
-      }
-      val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
-      // canonical label = min member of the component
-      val oracle = nodes.groupBy(find).flatMap { case (_, members) =>
-        val m = members.min; members.map(_ -> m)
-      }
-      assert(labels == oracle, s"edges=$edges")
+      assert(cc(edges) == oracle(edges), s"edges=$edges")
     }
+  }
+
+  test("star-forest test: exact on a < b edge sets") {
+    def forest(edges: (String, String)*) = Cluster.isStarForest(edges.toDF("a", "b"))
+    assert(forest())
+    assert(forest("a" -> "b", "a" -> "c", "x" -> "y"))
+    assert(!forest("a" -> "c", "b" -> "c"), "node with two parents")
+    assert(!forest("a" -> "b", "b" -> "c"), "two-hop chain a<b<c")
+    assert(!forest("a" -> "b", "a" -> "b"), "duplicated edge")
+  }
+
+  test("every component in one partition: the contraction is final, no iteration runs") {
+    val rnd = new scala.util.Random(5)
+    val edges = (1 to 200).map(_ => (rnd.nextInt(150).toLong, rnd.nextInt(150).toLong))
+      .filter(e => e._1 != e._2)
+    var iterations = 0
+    val got = Cluster.connectedComponents(edges.toDF("x", "y").coalesce(1),
+        onIteration = (_, df) => { iterations += 1; graft.io.Persist.truncate(df) })
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(iterations === 0)
+    assert(got === oracle(edges))
+  }
+
+  test("long chains over 13 partitions: every iteration changes the edge set") {
+    // three chains of length 80, dealt round-robin: components span
+    // partitions, so iterations run — and each must move something, i.e.
+    // the loop never spends an iteration confirming a fixed point
+    val edges = (0 until 3).flatMap(c => (0 until 80).map(i => (c * 1000L + i, c * 1000L + i + 1)))
+    val df = edges.toDF("x", "y").repartition(13)
+    def edgeSet(f: org.apache.spark.sql.DataFrame) =
+      f.collect().map(r => (r.getLong(0), r.getLong(1))).toList.sorted
+    val contracted = edgeSet(Cluster.localContract(
+      df.select(least($"x", $"y").as("a"), greatest($"x", $"y").as("b"))))
+    val frames = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.DataFrame]()
+    val got = Cluster.connectedComponents(df,
+        onIteration = (_, f) => { val p = graft.io.Persist.truncate(f); frames += p; p })
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(frames.nonEmpty)
+    val sets = contracted +: frames.map(edgeSet).toSeq
+    sets.sliding(2).foreach { case Seq(in, out) => assert(in !== out) }
+    assert(Cluster.isStarForest(frames.last))
+    assert(got === oracle(edges))
   }
 }
 
