@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.expr.functions._
 import graft.model.MatchConfig
@@ -36,18 +37,23 @@ object SparkEntry {
   private[graft] def cosMicro(qv: String, cv: String, qn: String, cn: String): Column =
     floor(vec_dot(col(qv), col(cv)) / (col(qn) * col(cn)) * lit(1e6) + lit(0.5)).cast("long")
 
-  /** Table reads memoized per (session, path): bench/verify construct every
-    * query fresh each rep, and an unmemoized `read.parquet` re-lists the
-    * directory and re-infers the schema (a footer-read job) on every
-    * construction — pure metadata overhead that a catalog table would cache
-    * (guide §6 "file listing"). Only PLAN metadata (file index + schema) is
-    * reused; every action still scans the parquet files — no data or results
-    * are cached.
+  /** Table schemas memoized per (session, path): bench/verify construct every
+    * query fresh each rep, and an unmemoized `read.parquet` re-infers the
+    * schema (a footer-read job) on every construction — pure metadata
+    * overhead that a catalog table would cache (guide §6 "file listing").
+    * Only the schema is kept, never a DataFrame: a DataFrame references its
+    * session, which would keep every session that ever ran a query alive.
+    * Sessions are weak keys, so a dropped session and its entries are
+    * reclaimed. Every action still lists and scans the parquet files — no
+    * data or results are cached.
     */
-  private val tableCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    tableCache.computeIfAbsent((s, s"$dir/$name.parquet"), k => s.read.parquet(k._2))
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, java.util.Map[String, StructType]]())
+  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val bySession = schemas.computeIfAbsent(s, _ => new java.util.concurrent.ConcurrentHashMap())
+    s.read.schema(bySession.computeIfAbsent(path, p => s.read.parquet(p).schema)).parquet(path)
+  }
 
   // deterministic order for nickname planting + the oracle CASE chain (C6)
   private val nickKeys: Seq[String] = graft.core.Cleaners.nicknames.keys.toSeq.sorted

@@ -14,9 +14,14 @@ import graft.pipeline.{Blocking, Cluster, ErPipeline, Fixtures}
   *   score -> threshold -> large-star/small-star CC -> clusters
   *
   * Every stage lands as parquet under `outDir` and is recorded in the stage
-  * manifest, so a killed run resumes mid-pipeline (including per-iteration CC
-  * checkpoints `cc_iter_<i>` — none when the contraction already yields the
-  * star forest) and produces byte-identical outputs (BASELINE north_rule).
+  * manifest: `records`, `blocks`, `scored` (the candidate pairs with their
+  * score and `bucket`, written where they are generated), `edges`,
+  * `clusters`, `lineage` and `metrics`. A killed run resumes mid-pipeline
+  * (including per-iteration CC checkpoints `cc_iter_<i>` — none when the
+  * contraction already yields the star forest) and produces byte-identical
+  * outputs (BASELINE north_rule). An outDir from an older run that also
+  * staged `pairs` and `classified` resumes too: its counter-less `scored`
+  * line is recomputed, and the two old dirs are never read.
   * Lineage rows (stage, partition, row count) and stage metrics are persisted
   * alongside the data (BASELINE.json:6).
   */
@@ -41,10 +46,11 @@ object LinkJob {
     *                   outDir: re-running with a changed overrides table
     *                   serves the old edge set from the resume manifest. New
     *                   decisions need a fresh outDir (or deleting the
-    *                   edges/clusters/cc_iter_* manifest lines). Ids that are
-    *                   not in `docs` join the graph but get no `clusters`
-    *                   row; a cluster whose minimum id is such an id is not
-    *                   counted in `Summary.clusters`.
+    *                   edges, cc_iter_*, clusters, lineage and metrics
+    *                   manifest lines). Ids that are not in `docs` join the
+    *                   graph but get no `clusters` row; a cluster whose
+    *                   minimum id is such an id is not counted in
+    *                   `Summary.clusters`.
     */
   def run(
       spark: SparkSession,
@@ -72,38 +78,33 @@ object LinkJob {
     }
     val blocks = blocksDf.as[ErPipeline.BlockRow]
 
-    // ③ candidate pairs (salted triangular self-join, skew-capped)
+    // ③ candidate pairs (salted triangular self-join, skew-capped), scored
+    //    (mapPartitions) and classified where they are generated: the pair
+    //    set is written once, with its score and bucket, and the match/maybe
+    //    counts are observed on that write
     var pairStats = ErPipeline.PairStats(0, 0, 0)
-    val pairsDf = m.stage(spark, "pairs") {
+    val scored = m.stage(spark, "scored",
+        "matches" -> count(when($"bucket" === "match", 1)),
+        "maybes" -> count(when($"bucket" === "maybe", 1))) {
       val (p, st) = ErPipeline.pairs(blocks, pairCfg)
       pairStats = st
       metrics += (("pairs", "dropped_blocks", st.droppedBlocks.toDouble))
       metrics += (("pairs", "dropped_pairs_mass", st.droppedPairsMass))
       metrics += (("pairs", "salted_blocks", st.saltedBlocks.toDouble))
-      p.toDF()
+      ErPipeline.classify(ErPipeline.score(p, records, config), config)
     }
 
-    // ④ batched pairwise scoring (mapPartitions)
-    val scoredDf = m.stage(spark, "scored") {
-      ErPipeline.score(pairsDf.as[ErPipeline.PairIds], records, config).toDF()
-    }
-    val scored = scoredDf.as[ErPipeline.ScoredPair]
-
-    // ⑤ classification + match edges
-    val classified = m.stage(spark, "classified",
-        "matches" -> count(when($"bucket" === "match", 1)),
-        "maybes" -> count(when($"bucket" === "maybe", 1))) {
-      ErPipeline.classify(scored, config)
-    }
-    // normalize override orientation once (cached for its two reads inside
-    // the edges stage, released right after the stage materializes — ADVICE
-    // r3: a leaked cache entry pins executor memory for the whole job)
+    // ④ match edges: a pushed-down `bucket = 'match'` filter of `scored`,
+    //    with the overrides applied. Their orientation is normalized once
+    //    (cached for its two reads inside the edges stage, released right
+    //    after the stage materializes — ADVICE r3: a leaked cache entry pins
+    //    executor memory for the whole job)
     val normOverrides = overrides.map(ov => ov.select(
       least($"a_id", $"b_id").as("a_id"),
       greatest($"a_id", $"b_id").as("b_id"),
       lower($"status").as("status")).cache())
     val edges = m.stage(spark, "edges") {
-      val inferred = classified.where($"bucket" === "match").select($"a_id", $"b_id")
+      val inferred = scored.where($"bucket" === "match").select($"a_id", $"b_id")
       normOverrides match {
         case None => inferred
         case Some(norm) =>
@@ -119,7 +120,7 @@ object LinkJob {
     }
     normOverrides.foreach(_.unpersist())
 
-    // ⑥ connected components with per-iteration parquet checkpoints:
+    // ⑤ connected components with per-iteration parquet checkpoints:
     //    resume continues from the latest cc_iter_<i> present in the manifest.
     val ccDone = m.completed.keys.filter(_.startsWith("cc_iter_"))
       .map(_.stripPrefix("cc_iter_").toInt)
@@ -141,15 +142,17 @@ object LinkJob {
         .select($"doc_id", coalesce($"cluster_id", $"doc_id").as("cluster_id"))
     }
 
-    // ⑦ lineage: per written FILE row counts of every persisted stage. Each
+    // ⑥ lineage: per written FILE row counts of every persisted stage. Each
     //    writer task emits exactly one part file, so file-level counts ARE
     //    writer-side provenance — reader-side spark_partition_id() would
     //    reflect the re-read split, not the task that wrote the data. All
-    //    seven stage dirs are read in one column-less scan (a file's stage is
+    //    five stage dirs are read in one column-less scan (a file's stage is
     //    its parent dir), and the summary's stage totals are observed on the
-    //    lineage write. An empty stage has no lineage rows; its total is 0.
-    val stages = Seq("records", "blocks", "pairs", "scored", "classified", "edges", "clusters")
-    val totals = Seq("records", "blocks", "pairs").map(s => s -> sum(when($"stage" === s, $"rows")))
+    //    lineage write; the `pairs` total is the `scored` row count. An empty
+    //    stage has no lineage rows; its total is 0.
+    val stages = Seq("records", "blocks", "scored", "edges", "clusters")
+    val totals = Seq("records" -> "records", "blocks" -> "blocks", "pairs" -> "scored")
+      .map { case (k, s) => k -> sum(when($"stage" === s, $"rows")) }
     m.stage(spark, "lineage", totals: _*) {
       spark.read.schema(new StructType()).parquet(stages.map(s => s"$outDir/$s"): _*)
         .groupBy(input_file_name().as("file"))
@@ -159,7 +162,7 @@ object LinkJob {
 
     // every summary count was observed on a stage write and is read back
     // from the manifest, on fresh and resumed runs alike (docs = records)
-    val observed = Seq("lineage", "classified", "clusters").map(m.counters).reduce(_ ++ _)
+    val observed = Seq("lineage", "scored", "clusters").map(m.counters).reduce(_ ++ _)
     val counts = observed + ("docs" -> observed("records"))
     counts.foreach { case (k, v) => metrics += (("job", k, v.toDouble)) }
 

@@ -162,43 +162,26 @@ object ErPipeline {
     val spark = blocks.sparkSession
     import spark.implicits._
 
-    // Only the HEAVY TAIL is broadcast (dropped keys: at most |blocks|/max
-    // of them; hot keys: at most |blocks|/threshold) — normal keys default to
-    // salts=1 via the left join, so driver/executor memory never scales with
-    // the number of DISTINCT blocking keys (O(corpus) at the 10^12-doc design
-    // point; broadcasting all of them was the scale bug).
+    // Only the HEAVY TAIL leaves the executors (dropped keys: at most
+    // |blocks|/max of them; hot keys: at most |blocks|/threshold) — normal
+    // keys default to salts=1 via the left join, so driver/executor memory
+    // never scales with the number of DISTINCT blocking keys (O(corpus) at
+    // the 10^12-doc design point; broadcasting all of them was the scale bug).
     //
-    // The tail is materialized ONCE: stats collect, salted count, and the two
-    // broadcast exchanges below all read the checkpointed tail instead of
-    // each re-running the full groupBy over the blocks table (4 corpus-scale
-    // aggregations -> 1).
-    // LAZY pin (optimization r6): the fused stats collect right below is the
-    // first consumer and materializes the tail inside its own job; the two
-    // broadcast builds then read the pinned blocks — the old eager pin spent
-    // a dedicated job on the same computation.
-    val skewTail = graft.io.Persist.pinLazy(
-      blocks.groupBy($"key").agg(count("*").as("n"))
-        .filter($"n" > cfg.saltThreshold))
-    // ONE driver action for the whole skew report (optimization r6, guide
-    // §1.2/§5 "the driver"): dropped-block stats and the salted count were
-    // two sequential jobs over the pinned tail; a single conditional
-    // aggregate reads it once.
-    val st = skewTail.agg(
-      count(when($"n" > cfg.maxBlockSize, 1)).as("blocks"),
-      coalesce(sum(when($"n" > cfg.maxBlockSize, ($"n" * ($"n" - 1) / 2).cast("double"))),
-        lit(0.0)).as("mass"),
-      count(when($"n" <= cfg.maxBlockSize, 1)).as("salted"))
-      .collect()(0)
-    val stats0 = (st.getLong(0), st.getDouble(1))
-
-    // ONE broadcast for the whole tail (optimization r6, guide §2.4): drop
-    // flags and salt counts ride the same tiny frame, so the two broadcast
-    // builds + two left joins collapse to one of each; normal keys still
-    // default to salts=1 when they miss the join.
-    val tailInfo = skewTail.select($"key",
-      ($"n" > cfg.maxBlockSize).as("__drop"),
-      ceil($"n" / cfg.saltThreshold).cast("int").as("salts"))
-    val nSalted = st.getLong(2)
+    // The tail is bounded, so it is collected ONCE: the skew report is
+    // computed on the driver, and the drop flags and salt counts go out as
+    // one small local frame, broadcast for the single left join below. No
+    // pin: under AQE a checkpoint of an aggregate runs its map stage as an
+    // execution of its own, so the collect is the only job of this step.
+    val tail = blocks.groupBy($"key").agg(count("*").as("n"))
+      .filter($"n" > cfg.saltThreshold)
+      .as[(String, Long)].collect().toSeq
+    val dropped = tail.filter(_._2 > cfg.maxBlockSize)
+    val stats = PairStats(dropped.size,
+      dropped.map { case (_, n) => (n * (n - 1)).toDouble / 2 }.sum, tail.size - dropped.size)
+    val tailInfo = tail.map { case (k, n) =>
+      (k, n > cfg.maxBlockSize, saltsFor(n, cfg))
+    }.toDF("key", "__drop", "salts")
 
     val withSalt = blocks
       .join(broadcast(tailInfo), Seq("key"), "left")
@@ -220,7 +203,7 @@ object ErPipeline {
         $"key")
     val deduped = joined.groupBy($"a_id", $"b_id").agg(min($"key").as("block_key"))
       .as[PairIds]
-    (deduped, PairStats(stats0._1, stats0._2, nSalted))
+    (deduped, stats)
   }
 
   /** Record-linkage mode (J2, `[D Processor.java#link]`): candidate pairs
@@ -254,30 +237,18 @@ object ErPipeline {
     val spark = blocksA.sparkSession
     import spark.implicits._
 
-    // heavy tail only, as in `pairs` (broadcast never scales with distinct
-    // keys); the tail is materialized ONCE so stats collect, salted count and
-    // both broadcasts don't each re-run the two corpus-scale groupBys
-    // lazy pin, materialized by the fused stats collect — see `pairs` above
-    val skewTail = graft.io.Persist.pinLazy(
-      blocksA.groupBy($"key").agg(count("*").as("na"))
-        .join(blocksB.groupBy($"key").agg(count("*").as("nb")), "key")
-        .withColumn("n", greatest($"na", $"nb"))
-        .filter($"n" > cfg.saltThreshold))
-    // ONE driver action for the whole skew report (optimization r6) — see
-    // `pairs` above.
-    val st = skewTail.agg(
-      count(when($"n" > cfg.maxBlockSize, 1)).as("blocks"),
-      coalesce(sum(when($"n" > cfg.maxBlockSize, ($"na" * $"nb").cast("double"))),
-        lit(0.0)).as("mass"),
-      count(when($"n" <= cfg.maxBlockSize, 1)).as("salted"))
-      .collect()(0)
-
-    // ONE broadcast for the whole tail (optimization r6) — see `pairs` above
-    val tailInfo = skewTail.select($"key",
-      ($"n" > cfg.maxBlockSize).as("__drop"),
-      ceil($"na" / cfg.saltThreshold).cast("int").as("sa"),
-      ceil($"nb" / cfg.saltThreshold).cast("int").as("sb"))
-    val nSalted = st.getLong(2)
+    // heavy tail only, collected once and broadcast as a local frame — see
+    // `pairs` above; only keys present in both corpora can be hot
+    val tail = blocksA.groupBy($"key").agg(count("*").as("na"))
+      .join(blocksB.groupBy($"key").agg(count("*").as("nb")), "key")
+      .filter(greatest($"na", $"nb") > cfg.saltThreshold)
+      .as[(String, Long, Long)].collect().toSeq
+    val dropped = tail.filter { case (_, na, nb) => math.max(na, nb) > cfg.maxBlockSize }
+    val stats = PairStats(dropped.size,
+      dropped.map { case (_, na, nb) => (na * nb).toDouble }.sum, tail.size - dropped.size)
+    val tailInfo = tail.map { case (k, na, nb) =>
+      (k, math.max(na, nb) > cfg.maxBlockSize, saltsFor(na, cfg), saltsFor(nb, cfg))
+    }.toDF("key", "__drop", "sa", "sb")
 
     def salted(blocks: Dataset[BlockRow]) = blocks
       .join(broadcast(tailInfo), Seq("key"), "left")
@@ -298,8 +269,12 @@ object ErPipeline {
       (if (uniqueKeys) joined.select($"a_id", $"b_id", $"key".as("block_key"))
        else joined.groupBy($"a_id", $"b_id").agg(min($"key").as("block_key")))
         .as[PairIds]
-    (pairs, PairStats(st.getLong(0), st.getDouble(1), nSalted))
+    (pairs, stats)
   }
+
+  /** Salt buckets of a hot block of `n` rows: ceil(n / saltThreshold). */
+  private def saltsFor(n: Long, cfg: PairConfig): Int =
+    math.ceil(n.toDouble / cfg.saltThreshold).toInt
 
   // ------------------------------------------------------------------ scoring
 

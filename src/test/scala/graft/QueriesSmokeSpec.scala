@@ -42,4 +42,23 @@ class QueriesSmokeSpec extends SparkSpec {
     }
     assert(failures.isEmpty, failures.mkString("\n"))
   }
+
+  test("a dropped session that planned catalog queries is reclaimed") {
+    assume(available, s"$sfDir not present")
+    var session = spark.newSession()
+    // construction reads the table schemas into the memo; planning alone,
+    // because an action's new pool threads inherit the session as their
+    // active one and hold it until they idle out (60 s)
+    Seq("q_cleaner_chain", "q_pair_levenshtein").foreach { q =>
+      assert(SparkEntry.queries(q)(session, sfDir).queryExecution.executedPlan != null)
+    }
+    val ref = new java.lang.ref.WeakReference(session)
+    session = null
+    val deadline = System.nanoTime() + 20L * 1000 * 1000 * 1000
+    while (ref.get != null && System.nanoTime() < deadline) {
+      System.gc()
+      Thread.sleep(50)
+    }
+    assert(ref.get == null, "the session is still strongly reachable")
+  }
 }

@@ -43,10 +43,14 @@ class ResumeSpec extends SparkSpec {
     // lineage rows exist for every stage
     val lineage = spark.read.parquet(s"$out/lineage")
     val stages = lineage.select("stage").distinct().collect().map(_.getString(0)).toSet
-    assert(stages === Set("records", "blocks", "pairs", "scored", "classified", "edges", "clusters"))
+    assert(stages === Set("records", "blocks", "scored", "edges", "clusters"))
+    // pairs are scored and classified where they are generated: no stage
+    // of their own before or after `scored`
+    assert(Seq("pairs", "classified").forall(d => !new java.io.File(s"$out/$d").exists()))
     // lineage row counts reconcile with the manifest's stage totals
     val manifest = new StageManifest(out)
-    assert(manifest.completed.keySet.contains("clusters"))
+    assert(manifest.completed.keySet ===
+      Set("records", "blocks", "scored", "edges", "clusters", "lineage", "metrics"))
     val recRows = lineage.where(col("stage") === "records")
       .agg(sum("rows")).collect()(0).getLong(0)
     assert(recRows === s.records)
@@ -97,11 +101,11 @@ class ResumeSpec extends SparkSpec {
     val cleanSummary = LinkJob.run(spark, docs, MatchConfig.fixture, cleanOut)
 
     // simulate a killed run: run fully, then strip the manifest + outputs back
-    // to the first three stages (records/blocks/pairs) — as if the crash hit
-    // during scoring — and resume.
+    // to the first two stages (records/blocks) — as if the crash hit during
+    // pair scoring — and resume.
     LinkJob.run(spark, docs, MatchConfig.fixture, resumeOut)
     val manifestPath = java.nio.file.Paths.get(resumeOut, "_graft_manifest.tsv")
-    val keep = Set("records", "blocks", "pairs")
+    val keep = Set("records", "blocks")
     val lines = Files.readAllLines(manifestPath)
     val kept = new java.util.ArrayList[String]()
     lines.forEach { l => if (keep.contains(l.split('\t')(0))) kept.add(l) }
@@ -153,6 +157,45 @@ class ResumeSpec extends SparkSpec {
     val resumed = LinkJob.run(spark, docs, MatchConfig.fixture, oldOut)
     assert(resumed === cleanSummary)
     assert(clusterMap(oldOut) === clusterMap(cleanOut))
+  }
+
+  test("an outDir with the older pairs/scored/classified stages resumes to the same result") {
+    import spark.implicits._
+    val cleanOut = tmpDir("graft-old-clean").toString
+    val oldOut = tmpDir("graft-old-stages").toString
+    val docs = Fixtures.docs(spark, 250)
+    val cleanSummary = LinkJob.run(spark, docs, MatchConfig.fixture, cleanOut)
+
+    // an older run staged the pair ids, their scores and the classified
+    // pairs separately, recorded `scored` without counters, and was killed
+    // after `edges`: rebuild that layout from a fresh run's stages
+    LinkJob.run(spark, docs, MatchConfig.fixture, oldOut)
+    val classified = spark.read.parquet(s"$oldOut/scored")
+    classified.write.parquet(s"$oldOut/classified")
+    classified.select($"a_id", $"b_id", $"block_key").write.parquet(s"$oldOut/pairs")
+    classified.drop("bucket").write.parquet(s"$oldOut/scored_old")
+    graft.io.LocalFs.deleteTree(java.nio.file.Paths.get(oldOut, "scored"))
+    Files.move(java.nio.file.Paths.get(oldOut, "scored_old"), java.nio.file.Paths.get(oldOut, "scored"))
+    val manifestPath = java.nio.file.Paths.get(oldOut, "_graft_manifest.tsv")
+    val fresh = new StageManifest(oldOut).entries
+    val n = fresh("scored").rows
+    val counters = fresh("scored").counters.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(";")
+    val lines = new java.util.ArrayList[String]()
+    Seq("records", "blocks").foreach(st => lines.add(s"$st\t${fresh(st).path}\t${fresh(st).rows}"))
+    lines.add(s"pairs\t$oldOut/pairs\t$n")
+    lines.add(s"scored\t$oldOut/scored\t$n")
+    lines.add(s"classified\t$oldOut/classified\t$n\t$counters")
+    lines.add(s"edges\t${fresh("edges").path}\t${fresh("edges").rows}")
+    Files.write(manifestPath, lines)
+    Seq("clusters", "lineage", "metrics")
+      .foreach(d => graft.io.LocalFs.deleteTree(java.nio.file.Paths.get(oldOut, d)))
+
+    val resumed = LinkJob.run(spark, docs, MatchConfig.fixture, oldOut)
+    assert(resumed === cleanSummary)
+    assert(clusterMap(oldOut) === clusterMap(cleanOut))
+    // the counter-less `scored` line was recomputed with its bucket
+    assert(new StageManifest(oldOut).counters("scored") === new StageManifest(cleanOut).counters("scored"))
+    assert(spark.read.parquet(s"$oldOut/scored").columns.contains("bucket"))
   }
 
   test("a second run over a completed outDir is a pure no-op read") {

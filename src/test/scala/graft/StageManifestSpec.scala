@@ -9,7 +9,8 @@ import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ListenerBusShim
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -21,7 +22,9 @@ import graft.pipeline.{ErPipeline, Fixtures}
 /** The stage manifest's bookkeeping: row counts and counters observed on the
   * stage write equal what the parquet holds, read-backs carry the schema a
   * parquet read infers, counters survive a rerun, legacy 3-field lines still
-  * resume, and a fresh stage costs its write's jobs and no other.
+  * resume, and a fresh stage costs its write's jobs and no other. A fresh
+  * LinkJob writes no `pairs` or `classified` stage, and before its `scored`
+  * write it runs one SQL execution that writes nothing.
   */
 class StageManifestSpec extends SparkSpec {
 
@@ -58,14 +61,14 @@ class StageManifestSpec extends SparkSpec {
 
     def read(out: String, s: String) = spark.read.parquet(s"$out/$s")
     val lm = new StageManifest(link)
-    val classified = read(link, "classified")
-    assert(lm.counters("classified") === Map(
-      "matches" -> classified.where($"bucket" === "match").count(),
-      "maybes" -> classified.where($"bucket" === "maybe").count()))
+    val scored = read(link, "scored")
+    assert(lm.counters("scored") === Map(
+      "matches" -> scored.where($"bucket" === "match").count(),
+      "maybes" -> scored.where($"bucket" === "maybe").count()))
     assert(lm.counters("clusters") ===
       Map("clusters" -> read(link, "clusters").select("cluster_id").distinct().count()))
-    assert(lm.counters("lineage") ===
-      Seq("records", "blocks", "pairs").map(s => s -> lm.completedRows(s)).toMap)
+    assert(lm.counters("lineage") === Map("records" -> lm.completedRows("records"),
+      "blocks" -> lm.completedRows("blocks"), "pairs" -> lm.completedRows("scored")))
     assert(ls.clusters === lm.counters("clusters")("clusters") && ls.pairs > 0)
 
     val dm = new StageManifest(dedup)
@@ -183,5 +186,41 @@ class StageManifestSpec extends SparkSpec {
     val beyond = all.filter(_._2 != all.head._2)
     assert(beyond.isEmpty, s"jobs beyond the write's own (recount or inference): $beyond")
     assert(m.completedRows("small") === 20L && m.counters("small") === Map("big" -> 5L))
+  }
+
+  test("a fresh LinkJob runs one SQL execution before its scored write: the skew-tail collect") {
+    val out = tmp("graft-sm-link-jobs")
+    val docs = Fixtures.docs(spark, 150)
+    val sc = spark.sparkContext
+    // (execution id, physical plan) of every top-level SQL execution
+    val execs = new ConcurrentLinkedQueue[(Long, String)]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.rootExecutionId.forall(_ == s.executionId) =>
+          execs.add((s.executionId, s.physicalPlanDescription))
+        case _ =>
+      }
+    }
+    ListenerBusShim.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      LinkJob.run(spark, docs, MatchConfig.fixture, out)
+      ListenerBusShim.drain(sc)
+    } finally sc.removeSparkListener(listener)
+
+    val all = execs.asScala.toSeq.sortBy(_._1)
+    // a write's plan details name its output path
+    val writeTo = "(?s)\\) Execute InsertIntoHadoopFsRelationCommand\\s.*?Arguments: file:([^,\\s]+)".r
+    def target(plan: String) = writeTo.findFirstMatchIn(plan).map(m => Paths.get(m.group(1)))
+    val targets = all.flatMap(e => target(e._2))
+    val scoredAt = all.indexWhere(e => target(e._2).contains(Paths.get(out, "scored")))
+    assert(scoredAt >= 0, s"no scored write among ${targets.mkString(", ")}")
+    val nonWrites = all.take(scoredAt).filter(e => target(e._2).isEmpty)
+    assert(nonWrites.size === 1,
+      s"executions before the scored write that write nothing:\n${nonWrites.map(_._2).mkString("\n")}")
+    assert(nonWrites.head._2.contains(s"$out/blocks"), "the one execution is not the skew-tail read of blocks")
+    assert(!targets.exists(t => Set("pairs", "classified")(t.getFileName.toString)),
+      s"a pairs or classified stage was written: $targets")
+    assert(Seq("pairs", "classified").forall(d => !Files.exists(Paths.get(out, d))))
   }
 }

@@ -224,7 +224,7 @@ class ErEndToEndSpec extends SparkSpec {
     val docs = Fixtures.docs(spark, n)
     val a = graft.jobs.LinkJob.run(spark, docs, config, dirA)
 
-    // simulate a killed run: copy only the first three completed stages into B
+    // simulate a killed run: copy only the first two completed stages into B
     val mB = new graft.io.StageManifest(dirB)
     def copyDir(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
       import java.nio.file._
@@ -234,7 +234,7 @@ class ErEndToEndSpec extends SparkSpec {
         else Files.copy(p, t, StandardCopyOption.REPLACE_EXISTING)
       }
     }
-    Seq("records", "blocks", "pairs").foreach { s =>
+    Seq("records", "blocks").foreach { s =>
       copyDir(java.nio.file.Paths.get(dirA, s), java.nio.file.Paths.get(dirB, s))
       mB.record(s, java.nio.file.Paths.get(dirB, s).toString, 0)
     }
