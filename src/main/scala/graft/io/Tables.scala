@@ -410,8 +410,10 @@ object Tables {
   * }}}
   *
   * `rows` and the optional named counters (`k=v`, long values, `;`-joined)
-  * are observed on the stage's write itself (`Dataset.observe`), so a stage
-  * costs its write job and nothing else: no re-count, no schema inference.
+  * are observed on the stage's write itself (`Dataset.observe`) or, with
+  * [[StageManifest#stageWithStats]], computed on the driver alongside it, so
+  * a stage costs its write job and nothing else: no re-count, no schema
+  * inference.
   * Lines without the 4th field (outDirs written before counters existed, or
   * hand-recorded) parse with no counters. A later line for a stage
   * supersedes an earlier one. A rerun with the same outDir skips completed
@@ -470,23 +472,33 @@ class StageManifest(outDir: String) {
     * round-trip makes it; only a resumed stage infers its schema.
     */
   def stage(spark: SparkSession, name: String, counters: (String, Column)*)(
-      compute: => DataFrame): DataFrame = {
+      compute: => DataFrame): DataFrame =
+    stageWithStats(spark, name, Nil, counters: _*)((compute, Map.empty))
+
+  /** [[stage]] for a compute that also yields driver-side counters, named in
+    * `stats` (e.g. a pair generator's skew report, computed before the write
+    * from a bounded collect). They are recorded on the stage's line with the
+    * observed ones, so a resumed or no-op run reads them back like any other
+    * counter instead of losing them; a line lacking one is recomputed.
+    */
+  def stageWithStats(spark: SparkSession, name: String, stats: Seq[String],
+      counters: (String, Column)*)(compute: => (DataFrame, Map[String, Long])): DataFrame = {
     val path = s"$outDir/$name"
+    val names = counters.map(_._1) ++ stats
     entries.get(name) match {
-      case Some(e) if counters.forall(c => e.counters.contains(c._1)) =>
+      case Some(e) if names.forall(e.counters.contains) =>
         spark.read.parquet(e.path)
       case _ =>
-        require(!counters.exists(_._1 == "rows") && counters.forall(c =>
-          c._1.nonEmpty && !c._1.exists(";=\t\n".contains(_))),
+        require(names.forall(k => k.nonEmpty && k != "rows" && !k.exists(";=\t\n".contains(_))),
           s"stage $name: counter names must be non-empty, not 'rows', without ;=TAB")
-        val df = compute
+        val (df, computed) = compute
         val obs = Observation()
         val named = (("rows" -> count(lit(1))) +: counters).map { case (k, c) => c.as(k) }
         df.observe(obs, named.head, named.tail: _*).write.mode("overwrite").parquet(path)
         val got = obs.get.map { case (k, v) =>
           k -> Option(v).map(_.asInstanceOf[Number].longValue).getOrElse(0L)
         }
-        record(name, path, got("rows"), got - "rows")
+        record(name, path, got("rows"), got - "rows" ++ computed)
         spark.read.schema(StageManifest.readBackSchema(df.schema)).parquet(path)
     }
   }

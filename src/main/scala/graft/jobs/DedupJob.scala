@@ -86,18 +86,18 @@ object DedupJob {
               s"${TrainingOps.minhashBandSpark(j)} AS band$j"): _*)
       }
 
-    // ③ candidate rep pairs through the skew discipline (stats -> metrics)
-    val candDf = m.stage(spark, "candidates") {
+    // ③ candidate rep pairs through the skew discipline; the stats ride the
+    //    stage's manifest line (the dropped mass is integral), so resumed and
+    //    no-op runs report them too
+    val skew = Seq("dropped_pairs_mass", "salted_blocks")
+    val candDf = m.stageWithStats(spark, "candidates", skew) {
       val items = banded.selectExpr("doc_id AS id",
         s"array(${(0 until cfg.minhashBands).map(j => s"band$j").mkString(",")}) AS bands")
       val (pairs, st) = BandedPairs.candidates(items, cfg.pairCfg)
-      metrics += (("candidates", "dropped_pairs_mass", st.droppedPairsMass))
-      metrics += (("candidates", "salted_blocks", st.saltedBlocks.toDouble))
-      pairs
+      (pairs, skew.zip(Seq(st.droppedPairsMass.toLong, st.saltedBlocks)).toMap)
     }
-    val statsMass = metrics.collectFirst {
-      case ("candidates", "dropped_pairs_mass", v) => v
-    }.getOrElse(0.0) // 0.0 on resume: stage served from parquet, stats not rerun
+    val candStats = m.counters("candidates")
+    skew.foreach(k => metrics += (("candidates", k, candStats(k).toDouble)))
 
     // ④ verify candidates with exact shingle-set Jaccard (arrays re-attach
     //    only to surviving candidate ids — never shuffled during generation)
@@ -147,7 +147,7 @@ object DedupJob {
       docs = counts("docs"), exactGroups = counts("exact_groups"),
       candidates = counts("candidates"), edges = counts("edges"),
       clusters = counts("clusters"), kept = counts("kept"),
-      dropped = counts("dropped"), droppedPairsMass = statsMass)
+      dropped = counts("dropped"), droppedPairsMass = candStats("dropped_pairs_mass").toDouble)
   }
 
   /** spark-submit entry: DedupJob <documentsParquet> <outDir> */

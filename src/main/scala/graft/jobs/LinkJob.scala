@@ -81,18 +81,19 @@ object LinkJob {
     // ③ candidate pairs (salted triangular self-join, skew-capped), scored
     //    (mapPartitions) and classified where they are generated: the pair
     //    set is written once, with its score and bucket, and the match/maybe
-    //    counts are observed on that write
-    var pairStats = ErPipeline.PairStats(0, 0, 0)
-    val scored = m.stage(spark, "scored",
+    //    counts are observed on that write. The skew report rides the same
+    //    manifest line (the dropped mass n(n-1)/2 is integral), so resumed
+    //    and no-op runs report it too
+    val skew = Seq("dropped_blocks", "dropped_pairs_mass", "salted_blocks")
+    val scored = m.stageWithStats(spark, "scored", skew,
         "matches" -> count(when($"bucket" === "match", 1)),
         "maybes" -> count(when($"bucket" === "maybe", 1))) {
       val (p, st) = ErPipeline.pairs(blocks, pairCfg)
-      pairStats = st
-      metrics += (("pairs", "dropped_blocks", st.droppedBlocks.toDouble))
-      metrics += (("pairs", "dropped_pairs_mass", st.droppedPairsMass))
-      metrics += (("pairs", "salted_blocks", st.saltedBlocks.toDouble))
-      ErPipeline.classify(ErPipeline.score(p, records, config), config)
+      (ErPipeline.classify(ErPipeline.score(p, records, config), config),
+        skew.zip(Seq(st.droppedBlocks, st.droppedPairsMass.toLong, st.saltedBlocks)).toMap)
     }
+    val pairStats = m.counters("scored")
+    skew.foreach(k => metrics += (("pairs", k, pairStats(k).toDouble)))
 
     // ④ match edges: a pushed-down `bucket = 'match'` filter of `scored`,
     //    with the overrides applied. Their orientation is normalized once
@@ -162,7 +163,7 @@ object LinkJob {
 
     // every summary count was observed on a stage write and is read back
     // from the manifest, on fresh and resumed runs alike (docs = records)
-    val observed = Seq("lineage", "scored", "clusters").map(m.counters).reduce(_ ++ _)
+    val observed = m.counters("lineage") ++ (pairStats -- skew) ++ m.counters("clusters")
     val counts = observed + ("docs" -> observed("records"))
     counts.foreach { case (k, v) => metrics += (("job", k, v.toDouble)) }
 
@@ -174,7 +175,7 @@ object LinkJob {
       docs = counts("docs"), records = counts("records"), blocks = counts("blocks"),
       pairs = counts("pairs"), matches = counts("matches"), maybes = counts("maybes"),
       clusters = counts("clusters"),
-      droppedBlocks = pairStats.droppedBlocks, saltedBlocks = pairStats.saltedBlocks)
+      droppedBlocks = pairStats("dropped_blocks"), saltedBlocks = pairStats("salted_blocks"))
   }
 
   /** spark-submit entry: LinkJob <outDir> [nEntities=1000] [configJson]

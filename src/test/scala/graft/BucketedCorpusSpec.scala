@@ -219,6 +219,8 @@ class BucketedCorpusSpec extends SparkSpec {
       val met = spark.read.parquet(s"$baseB/corpus/metrics")
       assert(met.count() === 3L)
       assert(met.agg(sum("docs")).collect()(0).getLong(0) === 5L)
+      assertMetricsMatchEdgeLog(s"$baseB/corpus/metrics", s"$baseB/edges")
+      assertMetricsMatchEdgeLog(s"$baseP/corpus/metrics", s"$baseP/edges")
 
       // the table really is bucketed and accumulated across batches
       // (refresh: the catalog's cached file listing predates the last append)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.io.{LabelStore, StageManifest}
 import graft.jobs.LinkJob
 import graft.model.MatchConfig
-import graft.pipeline.Fixtures
+import graft.pipeline.{ErPipeline, Fixtures}
 
 /** Checkpoint/resume semantics (BASELINE north_rule "resumable from checkpoint
   * with per-partition lineage + metrics"): a killed run resumed mid-pipeline
@@ -100,26 +100,11 @@ class ResumeSpec extends SparkSpec {
 
     val cleanSummary = LinkJob.run(spark, docs, MatchConfig.fixture, cleanOut)
 
-    // simulate a killed run: run fully, then strip the manifest + outputs back
-    // to the first two stages (records/blocks) — as if the crash hit during
-    // pair scoring — and resume.
+    // simulate a killed run: run fully, then cut back to the first two
+    // stages (records/blocks) — as if the crash hit during pair scoring —
+    // and resume.
     LinkJob.run(spark, docs, MatchConfig.fixture, resumeOut)
-    val manifestPath = java.nio.file.Paths.get(resumeOut, "_graft_manifest.tsv")
-    val keep = Set("records", "blocks")
-    val lines = Files.readAllLines(manifestPath)
-    val kept = new java.util.ArrayList[String]()
-    lines.forEach { l => if (keep.contains(l.split('\t')(0))) kept.add(l) }
-    Files.write(manifestPath, kept)
-    // delete downstream stage outputs so resume must recompute them
-    new java.io.File(resumeOut).listFiles().foreach { f =>
-      if (f.isDirectory && !keep.contains(f.getName)) {
-        def rm(x: java.io.File): Unit = {
-          if (x.isDirectory) x.listFiles().foreach(rm)
-          x.delete()
-        }
-        rm(f)
-      }
-    }
+    cutManifestTo(resumeOut, Set("records", "blocks"))
 
     val resumedSummary = LinkJob.run(spark, docs, MatchConfig.fixture, resumeOut)
     assert(resumedSummary === cleanSummary)
@@ -196,6 +181,24 @@ class ResumeSpec extends SparkSpec {
     // the counter-less `scored` line was recomputed with its bucket
     assert(new StageManifest(oldOut).counters("scored") === new StageManifest(cleanOut).counters("scored"))
     assert(spark.read.parquet(s"$oldOut/scored").columns.contains("bucket"))
+  }
+
+  test("skew stats survive a no-op rerun and a resume after the pair stage") {
+    val docs = Fixtures.docs(spark, 250)
+    val pc = ErPipeline.PairConfig(saltThreshold = 4, maxBlockSize = 40)
+    def metricRows(out: String) = spark.read.parquet(s"$out/metrics").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
+    val freshOut = tmpDir("graft-skew-fresh").toString
+    val fresh = LinkJob.run(spark, docs, MatchConfig.fixture, freshOut, pc)
+    assert(fresh.saltedBlocks === 47L)
+    assert(metricRows(freshOut).contains(("pairs", "salted_blocks", 47.0)))
+    assert(LinkJob.run(spark, docs, MatchConfig.fixture, freshOut, pc) === fresh)
+
+    val resumeOut = tmpDir("graft-skew-resume").toString
+    LinkJob.run(spark, docs, MatchConfig.fixture, resumeOut, pc)
+    cutManifestTo(resumeOut, Set("records", "blocks", "scored"))
+    assert(LinkJob.run(spark, docs, MatchConfig.fixture, resumeOut, pc) === fresh)
+    assert(metricRows(resumeOut) === metricRows(freshOut))
   }
 
   test("a second run over a completed outDir is a pure no-op read") {

@@ -125,10 +125,12 @@ class StreamRecoverySpec extends SparkSpec {
     assert(lc === rows(st.read(spark)), "labels diverged after crash-replay")
     assert(lc === rows(sc.readDocPartitions(spark, (0 until 8).toSet)))
 
-    // metrics: one row per batch, same totals
+    // metrics: one row per batch, same totals, edge counts equal to the log's
     val mc = spark.read.parquet(s"$crashed/corpus/metrics")
     assert(mc.count() === 3L)
     assert(mc.agg(sum("docs")).collect()(0).getLong(0) === 5L)
+    assertMetricsMatchEdgeLog(s"$crashed/corpus/metrics", s"$crashed/edges")
+    assertMetricsMatchEdgeLog(s"$control/corpus/metrics", s"$control/edges")
   }
 
   test("nearDupStream (bucketed tables) kill mid-batch + restart, then compaction") {
@@ -166,6 +168,7 @@ class StreamRecoverySpec extends SparkSpec {
         addBatch(1)
         intercept[Exception] { q1.processAllAvailable() }
       } finally q1.stop()
+      assertMetricsMatchEdgeLog(s"$base/corpus/metrics", s"$base/edges")
 
       // compact WHILE CRASHED (batch 1's artifacts on disk, checkpoint
       // uncommitted): the keep-newest fold must leave batch 1's partitions
@@ -188,6 +191,9 @@ class StreamRecoverySpec extends SparkSpec {
 
       val got = rows(EdgeLog.read(spark, s"$base/edges"))
       assert(got === rows(EdgeLog.read(spark, s"$ctl/edges")), "edges diverged")
+      // the replayed batch's metrics row is rewritten beside the folded log
+      assertMetricsMatchEdgeLog(s"$base/corpus/metrics", s"$base/edges")
+      assertMetricsMatchEdgeLog(s"$ctl/corpus/metrics", s"$ctl/edges")
       assert(got.distinct.size === got.size && got.nonEmpty)
       // bucketed corpus: exactly one row per doc despite the replayed batch
       spark.catalog.refreshTable("graft_rec_corpus_fps")
@@ -231,6 +237,7 @@ class StreamRecoverySpec extends SparkSpec {
       try q3.processAllAvailable() finally q3.stop()
       val afterEdges = EdgeLog.read(spark, s"$base/edges")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assertMetricsMatchEdgeLog(s"$base/corpus/metrics", s"$base/edges")
       assert(afterEdges.contains((1L, 4L)) && afterEdges.contains((3L, 4L)),
         s"post-compaction batch failed to link: $afterEdges")
     } finally {
