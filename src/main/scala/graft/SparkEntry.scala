@@ -831,8 +831,7 @@ object SparkEntry {
     /** MinHash signatures (8) over word-3-shingle sets. */
     "q_minhash_signatures" -> ((s, dir) => {
       shingleFps(t(s, dir, "documents"))
-        .selectExpr(Seq("doc_id") ++ (0 until 2 * nBands).map(i =>
-          s"array_min(transform(fps, f -> (${2 * i + 1} * f + ${7919 * i + 13}) % 1000000007)) AS mh$i"): _*)
+        .selectExpr(Seq("doc_id") ++ (0 until 2 * nBands).map(i => s"${minhashSpark(i)} AS mh$i"): _*)
     }),
 
     /** MinHash-LSH near-dup candidate pairs: 4 bands of 2 signatures; verified
@@ -845,7 +844,6 @@ object SparkEntry {
       */
     "q_lsh_near_dup_pairs" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val bandExprs = (0 until nBands).map(j => s"${minhashBandSpark(j)} AS band$j")
       // materialize signatures ONCE: bands (self-joined, 2 scans) + two fps
       // joins would otherwise re-run the per-character rolling-hash transform
       // up to 4× per document — at 100 TB that is 4 full corpus passes.
@@ -853,9 +851,7 @@ object SparkEntry {
       // first consumer and scans sigs exactly once, so the signatures
       // materialize inside that job — the old eager pin was a whole extra
       // sequential job computing the same thing.
-      val sigs = graft.io.Persist.pinLazy(shingleFps(docs)
-        .selectExpr(Seq("doc_id", "fps") ++ bandExprs: _*))
-      val fps = sigs.select(col("doc_id"), col("fps"))
+      val sigs = graft.io.Persist.pinLazy(bandedFps(docs, nBands))
       graft.pipeline.BandedPairs.verifiedPairs(
         // null/empty-fps rows are excluded BEFORE contraction: concat_ws
         // silently maps both to "", which would merge every degenerate doc
@@ -864,21 +860,13 @@ object SparkEntry {
         // shingle kernel never emits an empty array — short docs fall back
         // to [fp(text)] — but the guard must not depend on that.)
         sigs.where(size(col("fps")) > 0)
-          .selectExpr("doc_id AS id", "fps",
-            s"array(${(0 until nBands).map(j => s"band$j").mkString(",")}) AS bands"),
+          .selectExpr("doc_id AS id", "fps", s"${bandArray(nBands)} AS bands"),
         key = md5(concat_ws(",", col("fps"))),
         selfSims = Seq(lit(1000000L).as("jacc_micro")),
         cfg = config.pairCfg) { reps =>
         // fps arrays re-attach to REP pairs only, AFTER the narrow id-only
         // candidate generation — the verify join is bounded by the rep count
-        reps
-          .join(fps.select(col("doc_id").as("a_id"), col("fps").as("fa")), "a_id")
-          .join(fps.select(col("doc_id").as("b_id"), col("fps").as("fb")), "b_id")
-          .withColumn("inter", size(array_intersect(col("fa"), col("fb"))).cast("long"))
-          .withColumn("jacc_micro", expr(
-            "CAST(FLOOR(CAST(inter AS DOUBLE) / (size(fa) + size(fb) - inter) * 1e6 + 0.5) AS BIGINT)"))
-          .where(col("jacc_micro") >= config.jaccardMinMicro)
-          .select(col("a_id"), col("b_id"), col("jacc_micro"))
+        jaccardVerify(reps, sigs, sigs, config.jaccardMinMicro)
       }
     }),
 
@@ -942,10 +930,8 @@ object SparkEntry {
       val d = t(s, dir, "documents")
       val a = d.selectExpr("doc_id AS a_id", s"${g3("text")} AS ga")
       val b = d.selectExpr("doc_id AS b_id", s"${g3("text")} AS gb")
-      a.join(b, col("b_id") === col("a_id") + 1)
-        .withColumn("inter", size(array_intersect(col("ga"), col("gb"))).cast("long"))
-        .selectExpr("a_id", "b_id",
-          "CAST(FLOOR(CAST(inter AS DOUBLE) / (size(ga) + size(gb) - inter) * 1e6 + 0.5) AS BIGINT) AS jacc_micro")
+      withJaccardMicro(a.join(b, col("b_id") === col("a_id") + 1), "ga", "gb")
+        .select(col("a_id"), col("b_id"), col("jacc_micro"))
     }),
 
     /** Brute-force cosine top-k (the ANN baseline): 8 query vectors vs all. */
@@ -1099,15 +1085,11 @@ object SparkEntry {
       * (rational arithmetic only — no transcendentals, oracle-reproducible).
       */
     "q_quality_score" -> ((s, dir) => {
-      val nTok = s"size($toksSpark)"
-      val nAlpha = s"size(filter($toksSpark, x -> x rlike '^[a-z]+$$'))"
-      val stop = langHitsSpark("en")
       t(s, dir, "documents").selectExpr(
         "doc_id",
-        s"CAST($nTok AS BIGINT) AS n_tokens",
-        s"CAST(FLOOR(CAST($nAlpha AS DOUBLE) / $nTok * 1e6 + 0.5) AS BIGINT) AS alpha_ratio_micro",
-        s"CAST(FLOOR((LEAST($nTok, 100) / 100.0 * 0.5 + CAST($stop AS DOUBLE) / $nTok * 0.3" +
-          s" + CAST($nAlpha AS DOUBLE) / $nTok * 0.2) * 1e6 + 0.5) AS BIGINT) AS quality_micro")
+        s"CAST($nToksSpark AS BIGINT) AS n_tokens",
+        s"CAST(FLOOR(CAST($alphaToksSpark AS DOUBLE) / $nToksSpark * 1e6 + 0.5) AS BIGINT) AS alpha_ratio_micro",
+        s"$qualityMicroSpark AS quality_micro")
     }),
 
     /** Token counting: whitespace tokens + BPE-ish pretokenizer pieces (runs
@@ -1117,8 +1099,8 @@ object SparkEntry {
     "q_token_count" -> ((s, dir) => {
       t(s, dir, "documents").selectExpr(
         "doc_id",
-        s"CAST(size($toksSpark) AS BIGINT) AS n_ws_tokens",
-        s"CAST(size(filter($toksSpark, x -> x rlike '^[a-z]+$$')) AS BIGINT) AS n_alpha_tokens",
+        s"CAST($nToksSpark AS BIGINT) AS n_ws_tokens",
+        s"CAST($alphaToksSpark AS BIGINT) AS n_alpha_tokens",
         """CAST(size(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]', 0)) AS BIGINT) AS n_bpe_pieces""",
         "CAST(length(text) AS BIGINT) AS n_chars")
     }),

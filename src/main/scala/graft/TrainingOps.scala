@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Training-data pipeline operators over the `documents` / `embeddings` tables
@@ -105,19 +105,69 @@ object TrainingOps {
 
   def nBands: Int = config.minhashBands // 2 minhash signatures per band
 
-  /** Band value for LSH band j over a distinct-shingle-fp array column: two
-    * independent minhashes packed into one 64-bit key (each < 10⁹, so
-    * mh1·10⁹⁺⁷ + mh2 is collision-free). Shared by the `q_lsh_near_dup_pairs`
-    * query, its DuckDB oracle (`minhashBandDuck`) and `jobs.DedupJob` — one
-    * definition, three consumers.
+  /** MinHash signature `i` over a distinct-shingle-fp array column: the
+    * minimum of an independent linear map mod P. The `q_minhash_signatures`
+    * columns and both halves of every band are this one expression.
+    */
+  def minhashSpark(i: Int, fpsCol: String = "fps"): String =
+    s"array_min(transform($fpsCol, f -> (${2 * i + 1} * f + ${7919 * i + 13}) % 1000000007))"
+
+  /** Band value for LSH band j: signatures 2j and 2j+1 packed into one
+    * 64-bit key (each < 10⁹, so mh1·10⁹⁺⁷ + mh2 is collision-free). The
+    * DuckDB oracle twin is `minhashBandDuck`; Spark callers go through
+    * [[minhashBandCols]].
     */
   def minhashBandSpark(j: Int, fpsCol: String = "fps"): String =
-    s"(array_min(transform($fpsCol, f -> (${4 * j + 1} * f + ${7919 * (2 * j) + 13}) % 1000000007)) * 1000000007" +
-      s" + array_min(transform($fpsCol, f -> (${4 * j + 3} * f + ${7919 * (2 * j + 1) + 13}) % 1000000007)))"
+    s"(${minhashSpark(2 * j, fpsCol)} * 1000000007 + ${minhashSpark(2 * j + 1, fpsCol)})"
 
   def minhashBandDuck(j: Int, fpsCol: String = "fps"): String =
     s"(list_min(list_transform($fpsCol, f -> (${4 * j + 1} * f + ${7919 * (2 * j) + 13}) % 1000000007)) * 1000000007" +
       s" + list_min(list_transform($fpsCol, f -> (${4 * j + 3} * f + ${7919 * (2 * j + 1) + 13}) % 1000000007)))"
+
+  /** The band column names of an n-band scheme: `band0 .. band{n-1}`. */
+  def bandCols(n: Int): Seq[String] = (0 until n).map(j => s"band$j")
+
+  /** The band columns as one array, in band order (the `bands` input of
+    * `BandedPairs`, the `<band>:<value>` keys of the near-dup stream).
+    */
+  def bandArray(n: Int): String = s"array(${bandCols(n).mkString(",")})"
+
+  /** The `bandCols(n)` MinHash band values over `fps`. With `onlyIf`, rows
+    * failing it get NULL bands and the minhashes are not computed for them
+    * (DedupJob bands exact-group representatives only).
+    */
+  def minhashBandCols(n: Int, onlyIf: Option[Column] = None): Seq[Column] =
+    bandCols(n).zipWithIndex.map { case (b, j) =>
+      val v = expr(minhashBandSpark(j))
+      onlyIf.fold(v)(when(_, v)).as(b)
+    }
+
+  /** documents -> (doc_id, fps, band0..): one fingerprint pass, n MinHash
+    * bands over it (the near-dup stream's extract, `q_lsh_near_dup_pairs`).
+    */
+  def bandedFps(docs: DataFrame, n: Int): DataFrame =
+    shingleFps(docs).select(col("doc_id") +: col("fps") +: minhashBandCols(n): _*)
+
+  /** Shingle-set Jaccard in micro units between the fp arrays in columns
+    * `fa` and `fb`. The intersection size is staged as its own `inter`
+    * column, so `array_intersect` runs once per pair.
+    */
+  def withJaccardMicro(pairs: DataFrame, fa: String, fb: String): DataFrame =
+    pairs.withColumn("inter", size(array_intersect(col(fa), col(fb))).cast("long"))
+      .withColumn("jacc_micro", expr(
+        s"CAST(FLOOR(CAST(inter AS DOUBLE) / (size($fa) + size($fb) - inter) * 1e6 + 0.5) AS BIGINT)"))
+
+  /** Exact near-dup verify: the `(doc_id, fps)` arrays of `a` and `b`
+    * re-attach to the candidate `(a_id, b_id)` pairs only (never shuffled
+    * during candidate generation), and pairs at Jaccard >= `minMicro`
+    * survive as `(a_id, b_id, jacc_micro)`.
+    */
+  def jaccardVerify(cand: DataFrame, a: DataFrame, b: DataFrame, minMicro: Long): DataFrame =
+    withJaccardMicro(cand
+      .join(a.select(col("doc_id").as("a_id"), col("fps").as("fa")), "a_id")
+      .join(b.select(col("doc_id").as("b_id"), col("fps").as("fb")), "b_id"), "fa", "fb")
+      .where(col("jacc_micro") >= minMicro)
+      .select(col("a_id"), col("b_id"), col("jacc_micro"))
 
   // -------- embeddings --------
   /** Cosine with per-vector norms precomputed BEFORE the pair join (each
@@ -162,18 +212,8 @@ object TrainingOps {
     * `planes` is configurable (buckets = 2^planes); for banded multi-probe use
     * `lshBandSpark` with distinct plane indices per band.
     */
-  def lshBucketSpark(v: String, planes: Int): String =
-    (0 until planes).map { j =>
-      val dot = s"aggregate(zip_with($v, transform(sequence(1, size($v)), i -> CAST(((i * 31 + ${j * 17}) % 7) - 3 AS DOUBLE))," +
-        s" (p, h) -> CAST(p AS DOUBLE) * h), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-      s"(CASE WHEN $dot > 0 THEN ${1 << j} ELSE 0 END)"
-    }.mkString(" + ")
-  def lshBucketDuck(v: String, planes: Int): String =
-    (0 until planes).map { j =>
-      val dot = s"list_sum(list_transform(generate_series(1, len($v))," +
-        s" i -> CAST(($v)[i] AS DOUBLE) * (((i * 31 + ${j * 17}) % 7) - 3)))"
-      s"(CASE WHEN $dot > 0 THEN ${1 << j} ELSE 0 END)"
-    }.mkString(" + ")
+  def lshBucketSpark(v: String, planes: Int): String = lshBandSpark(v, 0, planes)
+  def lshBucketDuck(v: String, planes: Int): String = lshBandDuck(v, 0, planes)
 
   /** Banded multi-probe sign-LSH: band `b` uses its own `planesPerBand`
     * hyperplanes (global plane index b·planesPerBand + j), so a vector lands in
@@ -214,6 +254,20 @@ object TrainingOps {
     val set = langWords.toMap.apply(lang).map(w => s"'$w'").mkString(", ")
     s"len(list_filter($toksDuck, x -> x IN ($set)))"
   }
+
+  /** Token and alphabetic-token counts of `text`. */
+  val nToksSpark = s"size($toksSpark)"
+  val alphaToksSpark = s"size(filter($toksSpark, x -> x rlike '^[a-z]+$$'))"
+
+  /** Composite quality score in micro units: token count (capped at 100),
+    * English stopword ratio and alpha-token ratio, weighted 0.5/0.3/0.2.
+    * Rational arithmetic only, so the DuckDB oracle reproduces it;
+    * `q_quality_score` and `jobs.FilterJob` both project it.
+    */
+  val qualityMicroSpark: String =
+    s"CAST(FLOOR((LEAST($nToksSpark, 100) / 100.0 * 0.5" +
+      s" + CAST(${langHitsSpark("en")} AS DOUBLE) / $nToksSpark * 0.3" +
+      s" + CAST($alphaToksSpark AS DOUBLE) / $nToksSpark * 0.2) * 1e6 + 0.5) AS BIGINT)"
 
   /** argmax with fixed tie order en > es > de > fr, 'und' when all zero. */
   def langIdSql(hits: String => String): String = {

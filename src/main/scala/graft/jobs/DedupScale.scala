@@ -87,11 +87,8 @@ object DedupScale {
     val baseFps = fps.where(col("doc_id") % 50 === 0)
       .select(col("fam"), col("doc_id").as("base_id"), col("fps").as("base_fps"))
     val dec = decisions.select(col("doc_id"), col("cluster_id"))
-    fps.where(col("doc_id") % 50 =!= 0)
-      .join(baseFps, "fam")
-      .withColumn("inter", size(array_intersect(col("fps"), col("base_fps"))).cast("long"))
-      .withColumn("jacc_micro", expr(
-        "CAST(FLOOR(CAST(inter AS DOUBLE) / (size(fps) + size(base_fps) - inter) * 1e6 + 0.5) AS BIGINT)"))
+    graft.TrainingOps.withJaccardMicro(
+        fps.where(col("doc_id") % 50 =!= 0).join(baseFps, "fam"), "fps", "base_fps")
       .join(dec.select(col("doc_id"), col("cluster_id").as("ca")), "doc_id")
       .join(dec.select(col("doc_id").as("base_id"), col("cluster_id").as("cb")), "base_id")
       .select(col("jacc_micro"), (col("ca") === col("cb")).as("same"))

@@ -9,11 +9,13 @@ import graft.io.StageManifest
 /** Quality filtering over a `documents(doc_id, text)` corpus — the third
   * training-data pipeline job beside `DedupJob` and `LinkJob` (builder
   * mandate: text analysis as first-class components): language ID, quality
-  * scoring and token counting computed in ONE narrow pass (the same
-  * oracle-checked expressions as `q_lang_id` / `q_quality_score` /
-  * `q_token_count`), then a declarative keep decision with per-reason drop
-  * counts. No shuffle anywhere — the whole job is scan → project → write,
-  * the shape that saturates I/O at 100 TB.
+  * scoring and token counting computed in ONE narrow pass, then a
+  * declarative keep decision with per-reason drop counts. `lang_guess`,
+  * `n_tokens` and `quality_micro` are the TrainingOps expressions that the
+  * oracle-checked `q_lang_id` / `q_quality_score` also project
+  * (FilterJobSpec checks the quality pair row for row). No shuffle
+  * anywhere — the whole job is scan → project → write, the shape that
+  * saturates I/O at 100 TB.
   */
 object FilterJob {
 
@@ -41,16 +43,12 @@ object FilterJob {
     // fixed order (lang, quality, length) so each drop has ONE cause and the
     // reason counts sum to the drop total
     val decisions = m.stage(spark, "decisions") {
-      val nTok = s"size($toksSpark)"
       val langs = rules.languages.map(l => s"'$l'").mkString(", ")
       documents.selectExpr(
         "doc_id",
         s"${langIdSql(langHitsSpark)} AS lang_guess",
-        s"CAST($nTok AS BIGINT) AS n_tokens",
-        s"""CAST(FLOOR((LEAST($nTok, 100) / 100.0 * 0.5
-           |  + CAST(${langHitsSpark("en")} AS DOUBLE) / $nTok * 0.3
-           |  + CAST(size(filter($toksSpark, x -> x rlike '^[a-z]+$$')) AS DOUBLE) / $nTok * 0.2)
-           |  * 1e6 + 0.5) AS BIGINT) AS quality_micro""".stripMargin)
+        s"CAST($nToksSpark AS BIGINT) AS n_tokens",
+        s"$qualityMicroSpark AS quality_micro")
         .selectExpr("doc_id", "lang_guess", "n_tokens", "quality_micro",
           s"""CASE
              | WHEN lang_guess NOT IN ($langs) THEN 'lang'

@@ -30,8 +30,8 @@ import org.apache.spark.sql.functions._
   *
   * Two public shapes over that skeleton:
   *
-  *  - `candidatePairs`/`candidates` contract on the band VECTOR (identical
-  *    bands ⇒ identical bucket memberships) and expand before returning; the
+  *  - `candidates` contracts on the band VECTOR (identical bands ⇒
+  *    identical bucket memberships) and expands before returning; the
   *    caller verifies each candidate pair. Safe when the caller's input is
   *    already one row per distinct payload (e.g. `jobs.DedupJob` feeds exact-
   *    fingerprint representatives), but on raw dup-heavy input stage ④'s
@@ -48,10 +48,9 @@ import org.apache.spark.sql.functions._
   *
   * Block sizes ride on every row via one count-window per key (no discovery
   * aggregation jobs, no driver collects — the whole candidate plan is lazy;
-  * `candidates` adds one stats aggregate for callers that want the skew
-  * report, `candidatePairs` skips even that). `candidatePairs` output is
-  * exactly the naive candidate set (distinct unordered id pairs sharing ≥1
-  * band) minus pairs inside dropped blocks; `verifiedPairs` output is exactly
+  * `candidates` adds one stats aggregate for the skew report). `candidates`
+  * output is exactly the naive candidate set (distinct unordered id pairs
+  * sharing ≥1 band) minus pairs inside dropped blocks; `verifiedPairs` output is exactly
   * "naive candidates, each verified" minus the same drops. Defaults leave
   * small-SF oracle outputs byte-identical (nothing exceeds the thresholds at
   * sf≤0.1).
@@ -85,18 +84,9 @@ object BandedPairs {
   }
 
   /** `items`: (id: bigint, bands: array<bigint>) — one bucket value per band
-    * index, same length for every row. Returns distinct (a_id < b_id) pairs;
-    * entirely lazy (no jobs run until the result is consumed, beyond the
-    * contraction pin).
+    * index, same length for every row. Returns distinct (a_id < b_id) pairs
+    * and the skew report (one aggregate job; the pairs stay lazy).
     */
-  def candidatePairs(
-      items: DataFrame,
-      cfg: ErPipeline.PairConfig = ErPipeline.PairConfig()): DataFrame = {
-    val c = contract(items, bandVectorKey, cfg)
-    c.intra.unionByName(expand(c.repPairs, c.members))
-  }
-
-  /** As `candidatePairs`, plus the skew report (one extra aggregate job). */
   def candidates(
       items: DataFrame,
       cfg: ErPipeline.PairConfig = ErPipeline.PairConfig()): (DataFrame, Stats) = {

@@ -30,13 +30,6 @@ import org.apache.spark.sql.types._
   */
 object Cluster {
 
-  /** Plan/lineage truncation — delegates to the engine-wide policy
-    * (`graft.io.Persist.truncate`: reliable checkpoint when a dir is
-    * configured, local otherwise). LinkJob overrides with
-    * parquet-per-iteration stages for resumability.
-    */
-  def truncate(df: DataFrame): DataFrame = graft.io.Persist.truncate(df)
-
   /** Result: (doc_id, cluster_id) for every node that appears in `edges`;
     * callers union in singletons (docs with no edge) with cluster_id = doc_id.
     *

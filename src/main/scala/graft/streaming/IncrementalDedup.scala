@@ -22,18 +22,6 @@ import graft.io.Tables
   */
 object IncrementalDedup {
 
-  private def banded(docs: DataFrame): DataFrame =
-    TrainingOps.shingleFps(docs.select(col("doc_id"), col("text")))
-      .selectExpr(Seq("doc_id", "fps") ++
-        (0 until TrainingOps.config.minhashBands).map(j =>
-          s"${TrainingOps.minhashBandSpark(j)} AS band$j"): _*)
-
-  private def bandBlocks(b: DataFrame): DataFrame =
-    b.selectExpr("doc_id",
-      s"posexplode(array(${(0 until TrainingOps.config.minhashBands)
-        .map(j => s"band$j").mkString(",")})) AS (bix, bval)")
-      .selectExpr("CAST(doc_id AS STRING) AS doc_id", "concat(bix, ':', bval) AS key")
-
   /** @param corpusTable catalog name prefix of the corpus tables
     *                     (`<name>_bands` bucketed on key, `<name>_fps` on
     *                     doc_id, under `corpusDir/bandblocks` and
@@ -61,19 +49,15 @@ object IncrementalDedup {
       nClusterBuckets: Int = 8,
       labelSnapshotsToKeep: Option[Int] = None,
       onBatchComplete: Long => Unit = _ => ()): StreamingQuery = {
-    // both legs' fps arrays re-attach to the candidate ids only here
-    def verified(cand: DataFrame, a: DataFrame, b: DataFrame): DataFrame = cand
-      .select(col("a_id").cast("long").as("a_id"), col("b_id").cast("long").as("b_id"))
-      .join(a.select(col("doc_id").as("a_id"), col("fps").as("fa")), "a_id")
-      .join(b.select(col("doc_id").as("b_id"), col("fps").as("fb")), "b_id")
-      .withColumn("inter", size(array_intersect(col("fa"), col("fb"))).cast("long"))
-      .withColumn("jacc_micro", expr(
-        "CAST(FLOOR(CAST(inter AS DOUBLE) / (size(fa) + size(fb) - inter) * 1e6 + 0.5) AS BIGINT)"))
-      .where(col("jacc_micro") >= cfg.jaccardMinMicro)
-      .select(col("a_id"), col("b_id"), col("jacc_micro"))
+    def bandBlocks(b: DataFrame): DataFrame =
+      b.selectExpr("doc_id", s"posexplode(${TrainingOps.bandArray(cfg.minhashBands)}) AS (bix, bval)")
+        .selectExpr("CAST(doc_id AS STRING) AS doc_id", "concat(bix, ':', bval) AS key")
+    def verified(cand: DataFrame, a: DataFrame, b: DataFrame): DataFrame = TrainingOps.jaccardVerify(
+      cand.select(col("a_id").cast("long").as("a_id"), col("b_id").cast("long").as("b_id")),
+      a, b, cfg.jaccardMinMicro)
     val tn = corpusTable.getOrElse(Tables.corpusTableName(corpusDir))
     CorpusStream.start(stream,
-      extract = banded, blocks = bandBlocks, payload = Seq("doc_id", "fps"),
+      extract = TrainingOps.bandedFps(_, cfg.minhashBands), blocks = bandBlocks, payload = Seq("doc_id", "fps"),
       pairCfg = cfg.pairCfg, edges = verified,
       payloadAt = (tn + "_fps", "fps"), blocksAt = (tn + "_bands", "bandblocks"),
       corpusDir = corpusDir, edgesDir = edgesDir, checkpointDir = checkpointDir,

@@ -78,6 +78,22 @@ class DedupJobSpec extends SparkSpec {
     assert(java.nio.file.Paths.get(out, "_graft_manifest.tsv").toFile.lastModified() === mtime)
   }
 
+  test("an outDir whose grouped line has no counters resumes to a clean run's summary") {
+    // a grouped stage written before manifest counters existed: three
+    // fields, and (doc_id, fps, rep) parquet without band columns. The
+    // missing exact_groups counter makes the stage recompute.
+    val d = docs(1L -> base, 2L -> base, 10L -> variant("zzz"),
+      30L -> (1 to 20).map(i => s"other$i").mkString(" "))
+    val clean = DedupJob.run(spark, d, tmp("graft-dedup-clean"))
+    val out = tmp("graft-dedup-legacy")
+    val grouped = java.nio.file.Paths.get(out, "grouped").toString
+    graft.TrainingOps.shingleFps(d).withColumn("rep", lit(0L)).write.parquet(grouped)
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(out, "_graft_manifest.tsv"), s"grouped\t$grouped\t4\n")
+    assert(DedupJob.run(spark, d, out) === clean)
+    assert(spark.read.parquet(grouped).columns.contains("band0"))
+  }
+
   test("exact duplicates can NEVER be lost to the block cap; distinct hot buckets are capped with mass") {
     import graft.TrainingOps
     val out = tmp("graft-dedup-cap")

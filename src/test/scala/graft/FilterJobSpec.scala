@@ -49,4 +49,15 @@ class FilterJobSpec extends SparkSpec {
     assert(s2 === s)
     assert(java.nio.file.Paths.get(out, "_graft_manifest.tsv").toFile.lastModified() === mtime)
   }
+
+  test("n_tokens and quality_micro equal q_quality_score row for row on sf0.001") {
+    val sf = "/root/testdata/sf0.001"
+    val out = tmp()
+    FilterJob.run(spark, spark.read.parquet(s"$sf/documents.parquet"), out)
+    val job = spark.read.parquet(s"$out/decisions").select("doc_id", "n_tokens", "quality_micro")
+    val query = SparkEntry.queries("q_quality_score")(spark, sf)
+      .select("doc_id", "n_tokens", "quality_micro")
+    assert(job.count() === 500L)
+    assert(job.exceptAll(query).isEmpty && query.exceptAll(job).isEmpty)
+  }
 }

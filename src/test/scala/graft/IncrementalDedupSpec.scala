@@ -20,12 +20,9 @@ class IncrementalDedupSpec extends SparkSpec {
   /** Batch oracle: naive band-share candidates + exact Jaccard verify. */
   private def batchEdges(docs: Seq[(Long, String)]): Set[(Long, Long)] = {
     import spark.implicits._
-    val banded = TrainingOps.shingleFps(docs.toDF("doc_id", "text"))
-      .selectExpr(Seq("doc_id", "fps") ++
-        (0 until TrainingOps.config.minhashBands).map(j =>
-          s"${TrainingOps.minhashBandSpark(j)} AS band$j"): _*)
-    val rows = banded.selectExpr("doc_id", "fps",
-      s"array(${(0 until TrainingOps.config.minhashBands).map(j => s"band$j").mkString(",")}) AS bands")
+    val n = TrainingOps.config.minhashBands
+    val rows = TrainingOps.bandedFps(docs.toDF("doc_id", "text"), n)
+      .selectExpr("doc_id", "fps", s"${TrainingOps.bandArray(n)} AS bands")
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toSet, r.getSeq[Long](2)))
     (for {
       (ia, fa, ba) <- rows; (ib, fb, bb) <- rows
@@ -33,6 +30,36 @@ class IncrementalDedupSpec extends SparkSpec {
       j = fa.intersect(fb).size.toDouble / (fa ++ fb).size
       if math.floor(j * 1e6 + 0.5).toLong >= TrainingOps.config.jaccardMinMicro
     } yield (ia, ib)).toSet
+  }
+
+  /** Streams `docs` in `nBatches` micro-batches through nearDupStream with a
+    * cluster labeling; returns the final (doc_id -> cluster_id) labels.
+    */
+  private def streamLabels(docs: Seq[(Long, String)], baseDir: String, nBatches: Int,
+      cfg: TrainingOps.Config = TrainingOps.config): Map[Long, Long] = {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(Long, String)]
+    val q = IncrementalDedup.nearDupStream(
+      mem.toDS().toDF("doc_id", "text"),
+      s"$baseDir/corpus", s"$baseDir/edges", s"$baseDir/ckpt",
+      cfg = cfg, clustersDir = Some(s"$baseDir/clusters"))
+    try {
+      docs.grouped((docs.size + nBatches - 1) / nBatches).foreach { b =>
+        mem.addData(b: _*); q.processAllAvailable()
+      }
+    } finally q.stop()
+    new graft.io.LabelStore(s"$baseDir/clusters", 8)
+      .read(spark).collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+  }
+
+  /** DedupJob over `docs`: its summary and (doc_id -> cluster_id) decisions. */
+  private def batchLabels(docs: Seq[(Long, String)], out: String,
+      cfg: TrainingOps.Config = TrainingOps.config): (graft.jobs.DedupJob.Summary, Map[Long, Long]) = {
+    import spark.implicits._
+    val summary = graft.jobs.DedupJob.run(spark, docs.toDF("doc_id", "text"), out, cfg)
+    (summary, spark.read.parquet(s"$out/decisions")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap)
   }
 
   test("streamed near-dup edges over batches == batch pipeline's verified set") {
@@ -103,33 +130,35 @@ class IncrementalDedupSpec extends SparkSpec {
     // members always connect (Jaccard 1) and member-pair similarity equals
     // the rep pair's, so both graphs have identical components — the
     // labelings (and therefore keep/drop decisions) must match exactly.
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
+    // Two null-text docs, streamed in different batches, are no duplicates
+    // of each other: each is its own kept cluster on both sides.
     val baseDir = Files.createTempDirectory("graft-neardup-unify").toString
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val driver = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text")).orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    val docs = (1000L -> (null: String)) +: driver :+ (1001L -> (null: String))
 
-    val mem = MemoryStream[(Long, String)]
-    val q = IncrementalDedup.nearDupStream(
-      mem.toDS().toDF("doc_id", "text"),
-      s"$baseDir/corpus", s"$baseDir/edges", s"$baseDir/ckpt",
-      clustersDir = Some(s"$baseDir/clusters"))
-    try {
-      docs.grouped((docs.size + 2) / 3).foreach { b =>
-        mem.addData(b: _*); q.processAllAvailable()
-      }
-    } finally q.stop()
-    val streamed = new graft.io.LabelStore(s"$baseDir/clusters", 8)
-      .read(spark).collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-
-    val summary = graft.jobs.DedupJob.run(
-      spark, spark.read.parquet("/root/testdata/sf0.001/documents.parquet"),
-      s"$baseDir/batchjob")
-    val batch = spark.read.parquet(s"$baseDir/batchjob/decisions")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val streamed = streamLabels(docs, baseDir, 3)
+    val (summary, batch) = batchLabels(docs, s"$baseDir/batchjob")
 
     assert(streamed === batch)
     assert(streamed.count { case (d, c) => d == c } === summary.kept.toInt)
+    assert(batch(1000L) === 1000L && batch(1001L) === 1001L)
+    val cands = spark.read.parquet(s"$baseDir/batchjob/candidates")
+    assert(cands.where(col("a_id").isin(1000L, 1001L) || col("b_id").isin(1000L, 1001L)).isEmpty)
+  }
+
+  test("nearDupStream bands with its cfg.minhashBands, like DedupJob") {
+    val baseDir = Files.createTempDirectory("graft-neardup-bands").toString
+    val cfg = TrainingOps.config.copy(minhashBands = 1)
+    val docs = Seq(1L -> base, 2L -> base, 10L -> variant("aaa"), 11L -> variant("bbb"),
+      30L -> (1 to 20).map(i => s"other$i").mkString(" "), 3L -> base)
+
+    val streamed = streamLabels(docs, baseDir, 2, cfg)
+    val keys = spark.read.parquet(s"$baseDir/corpus/bandblocks")
+      .select(col("key")).collect().map(_.getString(0))
+    assert(keys.length === docs.size)
+    assert(keys.forall(_.startsWith("0:")), keys.mkString(","))
+    assert(streamed === batchLabels(docs, s"$baseDir/batchjob", cfg)._2)
   }
 }
