@@ -133,10 +133,10 @@ class IncrementalDedupSpec extends SparkSpec {
     // Two null-text docs, streamed in different batches, are no duplicates
     // of each other: each is its own kept cluster on both sides.
     val baseDir = Files.createTempDirectory("graft-neardup-unify").toString
-    val driver = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val sf = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text")).orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    val docs = (1000L -> (null: String)) +: driver :+ (1001L -> (null: String))
+    val docs = (1000L -> (null: String)) +: sf :+ (1001L -> (null: String))
 
     val streamed = streamLabels(docs, baseDir, 3)
     val (summary, batch) = batchLabels(docs, s"$baseDir/batchjob")
