@@ -1,271 +1,117 @@
 package graft.io
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, lit}
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-
-/** Atomic dual-layout snapshot store for streaming cluster labels
-  * (VERDICT r4 "What's wrong #2"): the same logical (doc_id, cluster_id)
-  * rows are kept in TWO hash-partitioned projections under ONE snapshot
-  * manifest —
+/** Streaming cluster labels as union-find state on disk: an append-only doc
+  * table plus a forwarding map.
   *
-  *   - layout `c`: partitioned by `hash(cluster_id)` — a cluster's members
-  *     co-locate, so a relabel commit rewrites only the partitions holding
-  *     affected clusters (the write path);
-  *   - layout `d`: partitioned by `hash(doc_id)` — the per-batch label
-  *     LOOKUPS (edge-endpoint labels, new-doc existence) prune to the
-  *     batch's doc partitions instead of scanning the full label table.
-  *     At 10⁹ accumulated docs that read was the last O(corpus) cost left
-  *     in the micro-batch loop.
+  *   - `root/docs`: one `(doc_id, lab)` row per doc, written by the batch the
+  *     doc arrived in through [[Tables.writeBatchBucketed]] (bucketed on
+  *     `doc_id` into `nBuckets`, catalog name `Tables.corpusTableName(root)`).
+  *     `lab` is the doc's cluster root when it arrived; the row is never
+  *     rewritten.
+  *   - `root/fwd/batch_id=<k>`: `(lab, root)` for every root merged away by
+  *     batch k or earlier, pointing at its root after batch k. The map is
+  *     fully compressed (no value is also a key) and written whole per batch,
+  *     so it is bounded by the number of clusters ever merged away. Its
+  *     committed write (the `_SUCCESS` marker) is batch k's commit point.
   *
-  * Both layouts hash into the same `nBuckets` partitions.
-  *
-  * One manifest + one CURRENT pointer swap commits BOTH layouts — they can
-  * never diverge under a crash, which is what makes the replay reasoning of
-  * `LabelCommit` simple: after a committed batch, a foreachBatch replay sees
-  * post-batch labels in both layouts, computes an empty delta, and writes
-  * nothing. (Two separate tables would re-open round 4's superset-ordering
-  * argument, with a crash window between the two commits.)
-  *
-  * Layout: `data/s<k>/c/__part=i`, `data/s<k>/d/__part=j`; manifests and
-  * pointer as in [[SnapshotIo]]. Storage doubles (each row stored twice) —
-  * the standard index trade, bought once, vs a full-table scan per batch.
-  * This is the engine's one snapshot table: an offline stand-in for
-  * Iceberg's snapshot/manifest semantics (no Iceberg jars ship with the
-  * Spark distribution), whose manifest I/O runs on a driver-visible
-  * filesystem.
+  * A doc's cluster as of batch k is `coalesce(fwd_k(lab), lab)` over the doc
+  * rows with `batch_id <= k`: one join against the small side. A batch writes
+  * only its own new doc rows and one map, so its write cost follows its
+  * delta, not the labeling. Cluster ids are canonical: the minimum doc id of
+  * the cluster.
   */
 class LabelStore(val root: String, val nBuckets: Int) {
   require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
 
-  private def rootP: Path = Paths.get(root)
+  private[graft] val table: String = Tables.corpusTableName(root)
+  private[graft] def docsDir: String = s"$root/docs"
+  private[graft] def fwdDir(batchId: Long): String = s"$root/fwd/batch_id=$batchId"
 
-  def currentSnapshot: Option[Long] = SnapshotIo.current(rootP)
+  /** The newest committed batch id. */
+  def currentSnapshot: Option[Long] = LabelStore.newestCommitted(root, Long.MaxValue)
 
-  /** Partition of a `cluster_id` value in layout `c` (the writer's own
-    * expression — callers derive affected partitions with it).
-    */
-  def clusterPart(c: Column): Column = HashLayout.partExpr(c, nBuckets)
-
-  /** Partition of a `doc_id` value in layout `d`. */
-  def docPart(c: Column): Column = HashLayout.partExpr(c, nBuckets)
-
-  private def snapshotDirs(k: Long): Seq[String] = SnapshotIo.dirs(rootP, k)
-
-  private def partOf(dir: String): Int = HashLayout.partOf(dir)
-
-  private def isCluster(dir: String): Boolean = dir.contains("/c/")
-
-  /** Write one layout's partition dirs for snapshot `k`; returns the relative
-    * dirs actually created (empty partitions create no dir).
-    */
-  private def writeLayout(df: DataFrame, k: Long, layout: String, part: Column): Seq[String] = {
-    val dataDir = s"data/s$k/$layout"
-    df.withColumn("__part", part)
-      .write.mode("overwrite").partitionBy("__part").parquet(s"$root/$dataDir")
-    HashLayout.listPartDirs(rootP, dataDir)
-  }
-
-  /** Full write of both layouts (first labeling, or a rebuild). */
-  def overwrite(labels: DataFrame): Long = {
-    val k = currentSnapshot.getOrElse(0L) + 1
-    val c = writeLayout(labels, k, "c", clusterPart(labels("cluster_id")))
-    val d = writeLayout(labels, k, "d", docPart(labels("doc_id")))
-    SnapshotIo.commitManifest(rootP, k, "overwrite", c ++ d)
-    k
-  }
-
-  /** Replace `clusterParts` of layout `c` with `byCluster` and `docParts` of
-    * layout `d` with `byDoc`; every untouched partition keeps pointing at its
-    * previous snapshot's files. The single pointer swap commits both layouts
-    * atomically. Each frame must contain ONLY rows whose partition (by the
-    * matching part expression) is in its listed set — rows outside would
-    * silently shadow live data.
-    */
-  def commitPartitions(
-      byCluster: DataFrame, clusterParts: Set[Int],
-      byDoc: DataFrame, docParts: Set[Int]): Long = {
-    val k = currentSnapshot.getOrElse(0L) + 1
-    val newC = writeLayout(byCluster, k, "c", clusterPart(byCluster("cluster_id")))
-    val newD = writeLayout(byDoc, k, "d", docPart(byDoc("doc_id")))
-    val kept = currentSnapshot.map(snapshotDirs).getOrElse(Nil).filterNot { dir =>
-      val p = partOf(dir)
-      if (isCluster(dir)) clusterParts.contains(p) else docParts.contains(p)
-    }
-    SnapshotIo.commitManifest(rootP, k, "overwrite_partitions", kept ++ newC ++ newD)
-    k
-  }
-
-  /** The complete labeling at the current snapshot (layout `c`). */
+  /** The complete labeling at the newest committed batch. */
   def read(spark: SparkSession): DataFrame =
     readSnapshot(spark, currentSnapshot.getOrElse(
       throw new IllegalStateException(s"empty label store $root")))
 
-  /** The complete labeling as of snapshot `snapshotId` (time travel). */
-  def readSnapshot(spark: SparkSession, snapshotId: Long): DataFrame = {
-    val dirs = snapshotDirs(snapshotId).filter(isCluster)
-    spark.read.parquet(dirs.map(d => s"$root/$d"): _*)
+  /** `(doc_id, cluster_id)` as of committed batch `batchId`: the doc rows of
+    * batches up to it through its map. Throws once that map is expired.
+    */
+  def readSnapshot(spark: SparkSession, batchId: Long): DataFrame = {
+    val fwd = spark.read.parquet(fwdDir(batchId))
+    LabelStore.labeled(docsBefore(spark, batchId + 1, reconcile = true).getOrElse(
+      fwd.select(col("lab").as("doc_id"), col("lab")).where(lit(false))), fwd)
   }
 
-  private def readPruned(
-      spark: SparkSession, parts: Set[Int], layoutFilter: String => Boolean): DataFrame = {
-    val k = currentSnapshot.getOrElse(
-      throw new IllegalStateException(s"empty label store $root"))
-    val dirs = snapshotDirs(k)
-      .filter(d => layoutFilter(d) && parts.contains(partOf(d)))
-    if (dirs.isEmpty) read(spark).limit(0)
-    else spark.read.parquet(dirs.map(d => s"$root/$d"): _*)
-  }
+  private[graft] def isCommitted(batchId: Long): Boolean =
+    LabelStore.committed(LabelStore.fs(root), root)(batchId)
 
-  /** Only the listed `c`-layout partitions (manifest pruning: no other
-    * partition's files are listed or opened — `inputFiles` proves it).
+  /** The `(doc_id, lab)` rows of every batch before `batchId`; None before
+    * the first append. A reader in another JVM than the stream must
+    * `reconcile` the catalog's partition list with the disk (see
+    * [[Tables.ensureBatchTable]]); the stream, the table's only writer, need
+    * not.
     */
-  def readClusterPartitions(spark: SparkSession, parts: Set[Int]): DataFrame =
-    readPruned(spark, parts, isCluster)
+  private[graft] def docsBefore(
+      spark: SparkSession, batchId: Long, reconcile: Boolean): Option[DataFrame] =
+    if (Tables.ensureBatchTable(spark, table, docsDir, "doc_id", nBuckets, reconcile))
+      Some(Tables.readBatchesBefore(spark, table, batchId))
+    else None
 
-  /** Only the listed `d`-layout partitions. */
-  def readDocPartitions(spark: SparkSession, parts: Set[Int]): DataFrame =
-    readPruned(spark, parts, d => !isCluster(d))
-
-  /** Relative dirs first written by snapshot `k`, split by layout
-    * (diagnostics/tests: how much did this commit physically rewrite?).
+  /** The newest committed map of a batch before `batchId`, read with the
+    * doc id type the caller knows (inferring it costs a Spark job).
     */
-  def dirsWrittenBy(snapshotId: Long): Seq[String] =
-    snapshotDirs(snapshotId).filter(_.startsWith(s"data/s$snapshotId/"))
-
-  /** Iceberg `expireSnapshots` analog — see [[SnapshotMaintenance.expire]].
-    * Partition dirs of either layout survive while any retained snapshot
-    * references them.
-    */
-  def expireSnapshots(keepLast: Int = 1): Unit =
-    SnapshotMaintenance.expire(root, keepLast)
+  private[graft] def fwdBefore(
+      spark: SparkSession, batchId: Long, idType: DataType): Option[DataFrame] =
+    LabelStore.newestCommitted(root, batchId).map(k => spark.read
+      .schema(StructType(Seq(StructField("lab", idType), StructField("root", idType))))
+      .parquet(fwdDir(k)))
 }
 
-/** The snapshot-layout protocol (manifest format, pointer-swap commit).
-  * Layout:
-  *   root/data/s<k>/…                  (files/partition-dirs per snapshot)
-  *   root/snapshots/v<k>.json          ({"snapshot":k,"dirs":[...],"op":…})
-  *   root/CURRENT                      (latest k; atomically replaced)
-  */
-private[io] object SnapshotIo {
-  def current(rootP: Path): Option[Long] = {
-    val p = rootP.resolve("CURRENT")
-    if (Files.exists(p)) Some(Files.readString(p).trim.toLong) else None
-  }
+object LabelStore {
 
-  /** Dirs composing snapshot `k` (stored as a JSON array of strings on one
-    * line); throws if the manifest is missing (expired or never committed).
+  /** `(doc_id, cluster_id)`: each `(doc_id, lab)` row through the map. */
+  private[graft] def labeled(docs: DataFrame, fwd: DataFrame): DataFrame =
+    docs.join(fwd, Seq("lab"), "left")
+      .select(col("doc_id"), coalesce(col("root"), col("lab")).as("cluster_id"))
+
+  /** Drops every map older than the newest `keepLast` committed ones. The
+    * doc rows stay: every snapshot reads them. Reading an expired batch's
+    * snapshot throws afterwards; a replay of an expired batch finds its
+    * commit point gone, which a foreachBatch stream never does (it replays
+    * only its newest batch).
     */
-  def dirs(rootP: Path, k: Long): Seq[String] = {
-    val j = Files.readString(rootP.resolve(s"snapshots/v$k.json"))
-    "\"data/[^\"]+\"".r.findAllIn(j).map(_.stripPrefix("\"").stripSuffix("\"")).toSeq
-  }
-
-  /** Write manifest k then atomically swap the CURRENT pointer — the swap IS
-    * the commit (Iceberg's metadata-pointer semantics).
-    */
-  def commitManifest(rootP: Path, k: Long, op: String, dirList: Seq[String]): Unit = {
-    Files.createDirectories(rootP.resolve("snapshots"))
-    val manifest =
-      s"""{"snapshot":$k,"op":"$op","ts":${System.currentTimeMillis()},""" +
-        s""""dirs":[${dirList.map(d => "\"" + d + "\"").mkString(",")}]}"""
-    Files.writeString(rootP.resolve(s"snapshots/v$k.json"), manifest)
-    val tmp = rootP.resolve("CURRENT.tmp")
-    Files.writeString(tmp, k.toString)
-    Files.move(tmp, rootP.resolve("CURRENT"), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-}
-
-/** Iceberg `expireSnapshots` analog for the snapshot layout: drop
-  * manifests older than the newest `keepLast` snapshots and physically delete
-  * every data dir that NO retained snapshot references. Without expiry a
-  * long-running stream accumulates one data dir per commit forever — at 10⁹
-  * accumulated docs the file listing itself becomes the read bottleneck; with
-  * expiry storage is bounded by keepLast × live data (time travel is
-  * correspondingly limited to the retained window — the standard Iceberg
-  * trade, and why this is an explicit maintenance call, not automatic).
-  */
-object SnapshotMaintenance {
   def expire(root: String, keepLast: Int): Unit = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val rootP = Paths.get(root)
-    val currentP = rootP.resolve("CURRENT")
-    if (!Files.exists(currentP)) return
-    val current = Files.readString(currentP).trim.toLong
-    val cutoff = current - keepLast + 1
-    def dirsOf(k: Long): Seq[String] =
-      if (!Files.exists(rootP.resolve(s"snapshots/v$k.json"))) Seq.empty
-      else SnapshotIo.dirs(rootP, k)
-    val retained = (cutoff to current).flatMap(dirsOf).toSet
-    // expire [OLDEST, cutoff): the low-water mark bounds per-call work to
-    // O(newly expired) instead of rescanning every snapshot id since 1 on
-    // each per-batch call — and unlike a stop-at-first-gap walk, a crash
-    // mid-loop self-heals (the mark only advances AFTER the sweep, so the
-    // next call re-covers the crashed range; re-deleting is a no-op)
-    val oldestP = rootP.resolve("OLDEST")
-    val oldest =
-      if (Files.exists(oldestP)) Files.readString(oldestP).trim.toLong else 1L
-    for (k <- oldest until cutoff) {
-      dirsOf(k).filterNot(retained).foreach(d => LocalFs.deleteTree(rootP.resolve(d)))
-      Files.deleteIfExists(rootP.resolve(s"snapshots/v$k.json"))
-    }
-    if (cutoff > oldest) Files.writeString(oldestP, cutoff.toString)
-    // prune dirs left empty after partition-dir deletion, bottom-up — a
-    // data/s<k> whose nested layout dirs (LabelStore's c/ and d/) emptied
-    // collapses entirely. "Empty" includes dirs whose only remaining entries
-    // are `_`/`.`-prefixed marker files (partitionBy writes a `_SUCCESS` at
-    // the layout root that would otherwise keep one dead s<k> dir pair alive
-    // per expired snapshot, forever); dirs a retained manifest references are
-    // never touched (an empty-frame commit legitimately produces a
-    // marker-only dir that readSnapshot must still be able to open)
-    val retainedAbs = retained.map(d => rootP.resolve(d).normalize)
-    val dataP = rootP.resolve("data")
-    if (Files.exists(dataP)) {
-      val walk = Files.walk(dataP)
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .filter(p => p != dataP && Files.isDirectory(p) &&
-          !retainedAbs.contains(p.normalize))
-        .forEach { p =>
-          val inner = p.toFile.listFiles()
-          val onlyMarkers = inner != null && inner.forall(f =>
-            f.isFile && (f.getName.startsWith("_") || f.getName.startsWith(".")))
-          if (inner == null || inner.isEmpty) Files.deleteIfExists(p)
-          else if (onlyMarkers) {
-            inner.foreach(f => Files.deleteIfExists(f.toPath))
-            Files.deleteIfExists(p)
-          }
-        }
-      finally walk.close()
-    }
+    val fs = LabelStore.fs(root)
+    val all = ids(fs, root)
+    val kept = all.reverseIterator.filter(committed(fs, root)).take(keepLast).toSeq
+    if (kept.size == keepLast)
+      all.filter(_ < kept.last).foreach(k => fs.delete(new HPath(s"$root/fwd/batch_id=$k"), true))
   }
-}
 
-/** The hash-partitioned dir layout of [[LabelStore]]: one `__part=i` dir per
-  * `pmod(xxhash64(key), n)` bucket. Single definition so the writer's
-  * partition expression, the dir-name parser, and the post-write listing can
-  * never diverge.
-  */
-private[io] object HashLayout {
-  import org.apache.spark.sql.functions.{lit, pmod, xxhash64}
+  private def fs(root: String): FileSystem = new HPath(root).getFileSystem(new Configuration())
 
-  /** The partition a key value belongs to (the writer's own expression —
-    * callers derive affected partitions with it).
-    */
-  def partExpr(c: Column, nBuckets: Int): Column =
-    pmod(xxhash64(c), lit(nBuckets.toLong)).cast("int")
+  /** Every map dir's batch id, committed or not, ascending. */
+  private def ids(fs: FileSystem, root: String): Seq[Long] = {
+    val dir = new HPath(s"$root/fwd")
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith("batch_id=")).map(_.stripPrefix("batch_id=").toLong).sorted
+  }
 
-  /** Partition index encoded in a `__part=i` dir path. */
-  def partOf(dir: String): Int =
-    dir.substring(dir.lastIndexOf("__part=") + "__part=".length).toInt
+  private def committed(fs: FileSystem, root: String)(batchId: Long): Boolean =
+    fs.exists(new HPath(s"$root/fwd/batch_id=$batchId/_SUCCESS"))
 
-  /** Relative `__part=` dirs now present under `rootP/dataDir` (the listing
-    * a commit records in its manifest; empty partitions create no dir).
-    */
-  def listPartDirs(rootP: Path, dataDir: String): Seq[String] = {
-    val d = rootP.resolve(dataDir).toFile.listFiles()
-    if (d == null) Seq.empty
-    else d.filter(f => f.isDirectory && f.getName.startsWith("__part="))
-      .map(f => s"$dataDir/${f.getName}").toSeq.sorted
+  private def newestCommitted(root: String, below: Long): Option[Long] = {
+    val f = fs(root)
+    ids(f, root).filter(_ < below).reverseIterator.find(committed(f, root))
   }
 }

@@ -3,9 +3,9 @@ package graft.io
 import java.nio.file.{Files, Path}
 import java.util.Comparator
 
-/** Local-filesystem helpers shared by snapshot maintenance and the
-  * measurement harnesses (NOT the distributed data path — that goes through
-  * Hadoop `FileSystem`, which also covers non-local stores).
+/** Local-filesystem helpers for the measurement harnesses and specs (NOT
+  * the distributed data path — that goes through Hadoop `FileSystem`, which
+  * also covers non-local stores).
   */
 object LocalFs {
 

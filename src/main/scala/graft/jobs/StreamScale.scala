@@ -18,7 +18,7 @@ import graft.streaming.IncrementalLink
   * BASELINE.md.
   *
   * Streaming adds per-batch serial floors a batch job does not have (query
-  * planning, checkpoint commits, label-snapshot manifest writes — all
+  * planning, checkpoint commits, label-map commits — all
   * driver-side, a few hundred ms per micro-batch regardless of core count),
   * so efficiency is expected BELOW the batch job's ~1.0; the measurement's
   * point is to quantify that floor honestly, not to hide it.
@@ -107,10 +107,12 @@ object StreamScale {
           q.stop()
           val wall = (System.nanoTime() - t0) / 1e9
           val edges = graft.io.EdgeLog.read(spark, s"$work/edges").count()
-          val labels = new graft.io.LabelStore(s"$work/labels", 16).read(spark).count()
+          val store = new graft.io.LabelStore(s"$work/labels", 16)
+          val labels = store.read(spark).count()
           println(f"[streamscale] cpus=$cpus rep=$r wall=$wall%.2f s edges=$edges labels=$labels")
           spark.sql(s"DROP TABLE IF EXISTS streamscale_c${cpus}_r$r")
           spark.sql(s"DROP TABLE IF EXISTS streamscale_c${cpus}_r${r}_blocks")
+          spark.sql(s"DROP TABLE IF EXISTS ${store.table}")
           deleteTree(Paths.get(work))
           wall
         }

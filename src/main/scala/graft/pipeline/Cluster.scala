@@ -94,6 +94,8 @@ object Cluster {
     edges.select($"b".as("doc_id"), $"a".as("cluster_id")).unionByName(roots)
   }
 
+  case class MergeDelta(relabel: DataFrame, added: DataFrame)
+
   /** Incremental label maintenance — fold a batch of NEW edges into an
     * existing labeling at cost proportional to the DELTA, never the corpus
     * (the streaming counterpart of `connectedComponents`; per-batch full
@@ -104,47 +106,26 @@ object Cluster {
     *     endpoints are fresh singletons labeled by their own id);
     *  2. run CC on the CONTRACTED graph — one node per affected cluster, so
     *     the iterative stage sees |affected clusters| nodes, not |corpus|;
-    *  3. broadcast-size relabel map joins back: docs in untouched clusters
-    *     keep their label without moving.
+    *  3. return the relabel map and the new docs; docs in untouched clusters
+    *     keep their label.
     *
     * Labels stay canonical (cluster id = min member id): old labels are
     * cluster minima, new nodes enter labeled by themselves, and the
-    * contracted CC takes the minimum of the merged label set. Result equals
-    * a from-scratch CC over (all previous edges ∪ batch) — IncrementalCcSpec
-    * proves equality on randomized multi-round streams.
+    * contracted CC takes the minimum of the merged label set. `relabel`
+    * covers every label whose cluster the batch AFFECTS, identity rows (lab
+    * = new_lab) included: rows with that `lab` move to `new_lab`, rows with
+    * any other label are untouched. Applied to the labeling, the result
+    * equals a from-scratch CC over (all previous edges ∪ batch);
+    * `LabelCommit` keeps it as a forwarding map, and IncrementalCcSpec
+    * proves the equality on randomized multi-round streams.
     *
-    * @param labels (doc_id, cluster_id); docs absent from it are treated as
+    * @param labels (doc_id, cluster_id) of at least every edge endpoint that
+    *               is already labeled; docs absent from it are treated as
     *               singletons (LinkJob's convention)
-    * @return the updated complete labeling, including the batch's new docs
-    */
-  def mergeEdges(labels: DataFrame, newEdges: DataFrame): DataFrame = {
-    val spark = labels.sparkSession
-    import spark.implicits._
-    val lab = labels.select(col(labels.columns(0)).as("id"), col(labels.columns(1)).as("lab"))
-    val d = mergeDelta(labels, newEdges)
-    // relabel old docs (untouched clusters miss the join and keep labels)
-    val updatedOld = lab.join(d.relabel, Seq("lab"), "left")
-      .select($"id".as("doc_id"), coalesce($"new_lab", $"lab").as("cluster_id"))
-    updatedOld.unionByName(d.added)
-  }
-
-  /** The DELTA form of `mergeEdges`: the relabel map and the new docs. Cost =
-    * one scan of `labels` (the endpoint-label lookup join — tiny probe side)
-    * plus CC over the contracted affected-cluster graph; the full label set
-    * is never rewritten or re-clustered. `relabel` covers every
-    * label whose cluster the batch AFFECTS — rows with that `lab` must move to
-    * `new_lab`, rows with any other label are untouched — so a partitioned
-    * label store can rewrite only the partitions holding `relabel.lab` values
-    * plus the new docs' labels (IncrementalLink.linkStream). Identity rows
-    * (lab = new_lab) are kept: their partitions GAIN rows from merged-in
-    * clusters and must still be rewritten.
-    *
     * @return relabel: (lab, new_lab); added: (doc_id, cluster_id) for edge
     *         endpoints absent from `labels` (edge-free new docs are the
     *         caller's to add — this function only sees the edge batch)
     */
-  case class MergeDelta(relabel: DataFrame, added: DataFrame)
-
   def mergeDelta(labels: DataFrame, newEdges: DataFrame): MergeDelta = {
     val spark = labels.sparkSession
     import spark.implicits._

@@ -40,12 +40,11 @@ private[streaming] object BatchMetrics {
   * groupBy/join on `key` does; probed on 4.1.2) and parquet row groups
   * (pushed In filter against sorted column stats), turning the per-batch
   * probe from an O(accumulated-corpus) scan into an O(affected-buckets)
-  * read — the same affected-partitions discipline as `LabelCommit`,
-  * applied to the read side. Skipped beyond `maxKeys`
-  * distinct keys (the `limit(maxKeys + 1)` bounds the driver collect to a
-  * constant, keeping the no-unbounded-collect rule): a batch touching most
-  * buckets prunes nothing, and the exchange-free full scan is the better
-  * plan there anyway.
+  * read; `LabelCommit` prunes its doc-table lookup the same way. Skipped
+  * beyond `maxKeys` distinct keys (the `limit(maxKeys + 1)` bounds the
+  * driver collect to a constant, keeping the no-unbounded-collect rule): a
+  * batch touching most buckets prunes nothing, and the exchange-free full
+  * scan is the better plan there anyway.
   */
 private[streaming] object ProbePrune {
   val MaxKeys = 1024
@@ -77,135 +76,82 @@ private[streaming] object ProbePrune {
 /** Per-micro-batch incremental cluster-label maintenance, shared by
   * `IncrementalLink.linkStream` (match-edge clusters) and
   * `IncrementalDedup.nearDupStream` (near-dup clusters): fold one batch's
-  * edges into the standing (doc_id, cluster_id) labeling via
-  * `Cluster.mergeDelta` and commit through a dual-layout [[graft.io.LabelStore]]
-  * — cluster-partitioned for the write (O(affected clusters), never
-  * O(corpus); VERDICT r3 #2), doc-partitioned for the per-batch lookups
-  * (VERDICT r4 #2: both the endpoint-label lookup and the new-doc existence
-  * check previously scanned the FULL label table per batch; they now share
-  * ONE read pruned to the batch's doc partitions). Every batch lands as an
-  * atomic, time-travelable snapshot covering both layouts. Labels stay equal
-  * to a full CC over all edges so far, with edge-free docs as their own
-  * singleton clusters.
+  * edges into the labeling of a [[graft.io.LabelStore]] with
+  * `Cluster.mergeDelta`, writing the batch's new doc rows and one forwarding
+  * map. Labels stay equal to a full CC over all edges so far, with edge-free
+  * docs as their own singleton clusters.
   *
-  * Replay safety (foreachBatch is at-least-once): both layouts commit under
-  * one manifest pointer, so a replayed committed batch reads post-batch
-  * labels, derives an empty delta (endpoints already merged, new docs
-  * already present), and writes nothing — no ordering argument against the
-  * other per-batch artifacts needed (they are each replay-idempotent on
-  * their own).
+  * Replay safety (foreachBatch is at-least-once): the batch reads only
+  * earlier batches' doc rows and map, so a replay recomputes the same rows
+  * and overwrites its own doc partition; once its map is committed the
+  * replay writes nothing.
   */
-private[streaming] object LabelCommit {
-
-  /** Per-commit observability (also the hook the partition-pruning tests
-    * use): which doc partitions the shared lookup read, which cluster/doc
-    * partitions the commit rewrote, and the snapshot id (None when the
-    * delta was empty — e.g. a replayed batch — and nothing was written).
-    */
-  case class CommitStats(
-      snapshot: Option[Long],
-      lookupDocParts: Set[Int],
-      clusterParts: Set[Int],
-      docParts: Set[Int])
+private[graft] object LabelCommit {
 
   /** @param batchEdges (a_id, b_id) match edges, pinned by the caller
     * @param newDocIds  one `doc_id` column: every doc in this batch
-    * @param keepSnapshots when set, expire label snapshots to the newest N
+    * @param keepSnapshots when set, expire the maps to the newest N
     */
   def commit(
       spark: SparkSession,
       dir: String,
       nBuckets: Int,
+      batchId: Long,
       batchEdges: DataFrame,
       newDocIds: DataFrame,
-      keepSnapshots: Option[Int]): CommitStats = {
+      keepSnapshots: Option[Int]): Unit = {
     val store = new graft.io.LabelStore(dir, nBuckets)
-    val stats = store.currentSnapshot match {
-      case None =>
-        // first batch: full labeling = CC over the batch's edges, plus this
-        // batch's edge-free docs as their own singleton clusters
-        val labeled = graft.pipeline.Cluster.connectedComponents(batchEdges)
-          .select(col("doc_id"), col("cluster_id"))
-        val singles = newDocIds.select(col("doc_id"))
-          .join(labeled.select(col("doc_id")), Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("doc_id").as("cluster_id"))
-        val k = store.overwrite(labeled.unionByName(singles))
-        CommitStats(Some(k), Set.empty, (0 until nBuckets).toSet, (0 until nBuckets).toSet)
-      case Some(_) =>
-        // ONE pruned read of the doc layout serves BOTH per-batch lookups
-        // (VERDICT r4 #5): every edge endpoint and every new doc hashes into
-        // `lookupParts`, so `lookup` contains the label row of every doc the
-        // batch can touch — mergeDelta only joins `labels` on endpoints, and
-        // the singles check only probes new docs, so the pruned superset is
-        // exact for both
-        // LAZY pins throughout this commit (optimization r6 / VERDICT r5 #2):
-        // each pinned frame's first consumer is one of the bounded
-        // partition-set collects (or the delta CC's star-forest test), so
-        // the frame materializes inside that job — the old eager pins
-        // serialized one dedicated materialization job per frame onto the
-        // per-trigger driver floor
-        val probeIds = graft.io.Persist.pinLazy(
-          batchEdges.select(col(batchEdges.columns(0)).as("doc_id"))
-            .union(batchEdges.select(col(batchEdges.columns(1)).as("doc_id")))
-            .union(newDocIds.select(col("doc_id")))
-            .distinct())
-        val lookupParts = probeIds.select(store.docPart(col("doc_id")).as("p"))
-          .distinct().collect().map(_.getInt(0)).toSet
-        val lookup = graft.io.Persist.pinLazy(
-          store.readDocPartitions(spark, lookupParts)
-            .select(col("doc_id"), col("cluster_id")))
-        val delta = graft.pipeline.Cluster.mergeDelta(lookup, batchEdges)
-        val relabel = graft.io.Persist.pinLazy(delta.relabel)
-        val added = graft.io.Persist.pinLazy(delta.added)
-        // edge-free new docs enter as singletons labeled by their own id;
-        // presence is checked against the pruned doc-layout lookup — exact,
-        // because both layouts committed atomically last batch (a replayed
-        // doc is already present whatever cluster's partition it lives in)
-        val singles = graft.io.Persist.pinLazy(
-          newDocIds.select(col("doc_id"))
-            .join(lookup.select(col("doc_id")), Seq("doc_id"), "left_anti")
-            .join(added.select(col("doc_id")), Seq("doc_id"), "left_anti")
-            .select(col("doc_id"), col("doc_id").as("cluster_id")))
-        // affected cluster partitions: every relabeled cluster's source and
-        // target labels, plus the new docs' own labels — a cluster's members
-        // all live in hash(cluster_id)'s partition, so this driver-side set
-        // (≤ nBuckets ints) is exact
-        val affected = relabel.select(store.clusterPart(col("lab")).as("p"))
-          .union(relabel.select(store.clusterPart(col("new_lab")).as("p")))
-          .union(added.select(store.clusterPart(col("cluster_id")).as("p")))
-          .union(singles.select(store.clusterPart(col("cluster_id")).as("p")))
-          .distinct().collect().map(_.getInt(0)).toSet
-        if (affected.isEmpty) CommitStats(None, lookupParts, Set.empty, Set.empty)
-        else {
-          val joined = store.readClusterPartitions(spark, affected)
-            .withColumnRenamed("cluster_id", "lab")
-            .join(relabel, Seq("lab"), "left")
-          val updated = joined.select(col("doc_id"),
-            coalesce(col("new_lab"), col("lab")).as("cluster_id"))
-          // doc-layout delta: exactly the rows whose (doc -> label) mapping
-          // is new or changed — relabeled members (old label ≠ new), plus
-          // the batch's added and singleton docs. Complete: every label
-          // change goes through `relabel`, and every changed row lives in an
-          // affected cluster partition (its OLD label's hash), so `joined`
-          // saw it.
-          val movedMembers = joined
-            .where(col("new_lab").isNotNull && col("new_lab") =!= col("lab"))
-            .select(col("doc_id"), col("new_lab").as("cluster_id"))
-          val byDocChanged = graft.io.Persist.pinLazy(
-            movedMembers.unionByName(added).unionByName(singles))
-          val docParts = byDocChanged.select(store.docPart(col("doc_id")).as("p"))
-            .distinct().collect().map(_.getInt(0)).toSet
-          val byDocRows = store.readDocPartitions(spark, docParts)
-            .join(byDocChanged.select(col("doc_id")), Seq("doc_id"), "left_anti")
-            .unionByName(byDocChanged)
-          val k = store.commitPartitions(
-            updated.unionByName(added).unionByName(singles), affected,
-            byDocRows, docParts)
-          CommitStats(Some(k), lookupParts, affected, docParts)
-        }
+    if (!store.isCommitted(batchId)) {
+      // lazy pins throughout: each frame materializes inside its first
+      // consuming job (the probe's key collect, the delta CC's star-forest
+      // test, the doc append). The probe ids need no distinct: the key
+      // collect dedups, the lookup only semi-joins them.
+      val probeIds = Persist.pinLazy(
+        batchEdges.select(col(batchEdges.columns(0)).as("doc_id"))
+          .union(batchEdges.select(col(batchEdges.columns(1)).as("doc_id")))
+          .union(newDocIds.select(col("doc_id"))))
+      // ① the batch's docs that earlier batches labeled, at their current root
+      val fwd = store.fwdBefore(spark, batchId, probeIds.schema("doc_id").dataType).getOrElse(
+        probeIds.select(col("doc_id").as("lab"), col("doc_id").as("root")).where(lit(false)))
+      val lookup = Persist.pinLazy(lookupOf(store, spark, batchId, probeIds, fwd))
+      // ② the one merge
+      val delta = graft.pipeline.Cluster.mergeDelta(lookup, batchEdges)
+      val relabel = Persist.pinLazy(delta.relabel)
+      val added = Persist.pinLazy(delta.added)
+      // ③ new docs enter once, at their root after this batch; edge-free
+      // ones as singletons labeled by their own id
+      val singles = newDocIds.select(col("doc_id"))
+        .join(lookup.select(col("doc_id")), Seq("doc_id"), "left_anti")
+        .join(added.select(col("doc_id")), Seq("doc_id"), "left_anti")
+      Tables.writeBatchBucketed(
+        added.select(col("doc_id"), col("cluster_id").as("lab"))
+          .unionByName(singles.select(col("doc_id"), col("doc_id").as("lab"))),
+        store.table, store.docsDir, "doc_id", nBuckets, batchId)
+      // ④ the previous map moved to the new roots, plus the old roots merged
+      // away. A relabel row keyed by a new doc's own id stays out: that
+      // doc's row already holds its root.
+      val mergedAway = relabel.where(col("lab") =!= col("new_lab"))
+        .join(lookup.select(col("cluster_id").as("lab")), Seq("lab"), "left_semi")
+        .select(col("lab"), col("new_lab").as("root"))
+      fwd.join(relabel.select(col("lab").as("root"), col("new_lab")), Seq("root"), "left")
+        .select(col("lab"), coalesce(col("new_lab"), col("root")).as("root"))
+        .unionByName(mergedAway)
+        .write.mode("overwrite").parquet(store.fwdDir(batchId))
     }
-    keepSnapshots.foreach(store.expireSnapshots)
-    stats
+    keepSnapshots.foreach(graft.io.LabelStore.expire(dir, _))
+  }
+
+  /** `(doc_id, cluster_id)` of the probe ids that batches before `batchId`
+    * labeled, through `fwd`. The redundant `doc_id IN (...)` hint of a
+    * trickle batch lets the doc_id-bucketed doc table skip bucket files
+    * (see [[ProbePrune]]).
+    */
+  private[graft] def lookupOf(store: graft.io.LabelStore, spark: SparkSession, batchId: Long,
+      probeIds: DataFrame, fwd: DataFrame): DataFrame = {
+    val docs = store.docsBefore(spark, batchId, reconcile = false).fold(
+      probeIds.select(col("doc_id"), col("doc_id").as("lab")).where(lit(false)))(d =>
+      ProbePrune(d, probeIds, "doc_id").join(probeIds, Seq("doc_id"), "left_semi"))
+    graft.io.LabelStore.labeled(docs, fwd)
   }
 }
 
@@ -224,7 +170,7 @@ private[streaming] object LabelCommit {
   * in the doc_id-bucketed corpus table, its pair config and one edge
   * function; the trigger owns the rest. Every per-batch artifact (edges,
   * labels, metrics, both corpus tables) lands in the batch's own partition
-  * or snapshot and is replay-idempotent on its own, so foreachBatch's
+  * or dir and is replay-idempotent on its own, so foreachBatch's
   * at-least-once replay rewrites the same rows.
   */
 private[streaming] object CorpusStream {
@@ -260,6 +206,10 @@ private[streaming] object CorpusStream {
     import spark.implicits._
     val (payloadTable, payloadDir) = (payloadAt._1, s"$corpusDir/${payloadAt._2}")
     val (blocksTable, blocksDir) = (blocksAt._1, s"$corpusDir/${blocksAt._2}")
+    clustersDir.foreach { d =>
+      require(!Set(payloadTable, blocksTable)(new graft.io.LabelStore(d, nClusterBuckets).table),
+        s"clustersDir $d names the catalog table of a corpus table; give it a directory of its own")
+    }
 
     // Read-gate catalog state cached across micro-batches (VERDICT r5 #2 —
     // the per-trigger driver floor): ensureBatchTable's reconcile costs a
@@ -349,9 +299,9 @@ private[streaming] object CorpusStream {
           EdgeLog.write(batchEdges.observe(edgeCount, count(lit(1)).as("edges")),
             edgesDir, batchId)
           // incremental transitive clusters: fold this batch's edges into the
-          // standing labels, rewriting only affected partitions
+          // standing labels, writing only this batch's doc rows and map
           clustersDir.foreach { dir =>
-            LabelCommit.commit(spark, dir, nClusterBuckets,
+            LabelCommit.commit(spark, dir, nClusterBuckets, batchId,
               batchEdges.select($"a_id", $"b_id"), newDocs.select($"doc_id"),
               labelSnapshotsToKeep)
           }

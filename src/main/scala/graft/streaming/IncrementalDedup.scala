@@ -30,10 +30,12 @@ object IncrementalDedup {
     * @param clustersDir when set, a complete (doc_id, cluster_id) near-dup
     *                     cluster labeling is maintained across micro-batches —
     *                     the streaming analog of `DedupJob`'s decisions stage:
-    *                     keep = (doc_id == cluster_id). Same partitioned
-    *                     delta-commit machinery as `linkStream` (LabelCommit);
+    *                     keep = (doc_id == cluster_id). The same label
+    *                     store and delta commit as `linkStream` (LabelCommit);
     *                     labels equal full CC over all streamed edges, with
     *                     edge-free docs as singletons (IncrementalDedupSpec).
+    *                     `nClusterBuckets` and `labelSnapshotsToKeep` as in
+    *                     `IncrementalLink.linkStream`.
     * @param onBatchComplete see `IncrementalLink.linkStream` — the same
     *                     end-of-batch observability / failure-injection hook.
     */

@@ -120,24 +120,22 @@ object IncrementalLink {
     *                    is `<name>_blocks`); None derives one from `corpusDir`
     *                    ([[graft.io.Tables.corpusTableName]])
     * @param clustersDir when set, a complete (doc_id, cluster_id) labeling is
-    *                     maintained under this path across micro-batches via
-    *                     `Cluster.mergeDelta` — each batch's match edges fold
-    *                     into the existing labels at DELTA cost (contracted
-    *                     CC over affected clusters only), and the commit
-    *                     rewrites ONLY the label partitions holding affected
-    *                     clusters (`LabelStore.commitPartitions`, labels
-    *                     hash-partitioned on cluster_id into
-    *                     `nClusterBuckets`, with a doc-partitioned twin
-    *                     layout serving the per-batch lookups pruned) —
-    *                     never the whole labeling. Labels
-    *                     equal the batch pipeline's CC over all edges so far
-    *                     (BucketedCorpusSpec).
-    * @param labelSnapshotsToKeep when set, expire label snapshots after each
-    *                     commit keeping the newest N (bounded storage for
-    *                     unbounded streams; time travel limited to the
-    *                     retained window — shared partition dirs survive as
-    *                     long as any retained snapshot references them).
-    *                     None (default) keeps every batch's labeling.
+    *                     maintained under this path across micro-batches as a
+    *                     [[graft.io.LabelStore]]: each batch's match edges fold
+    *                     into the existing labels at DELTA cost
+    *                     (`Cluster.mergeDelta`, a contracted CC over affected
+    *                     clusters only), and the batch writes only its new
+    *                     docs' `(doc_id, lab)` rows plus one forwarding map of
+    *                     the roots merged away so far — never the whole
+    *                     labeling. Labels equal the batch pipeline's CC over
+    *                     all edges so far (BucketedCorpusSpec).
+    * @param nClusterBuckets bucket count of the label store's doc table
+    *                     (bucketed on doc_id)
+    * @param labelSnapshotsToKeep when set, drop the forwarding maps after each
+    *                     commit but the newest N, which bounds their storage
+    *                     on an unbounded stream; `readSnapshot` then reaches
+    *                     only the retained batches. None (default) keeps
+    *                     every batch's labeling readable.
     * @param onBatchComplete called with the batch id as the LAST step of each
     *                     micro-batch, after every artifact (edges, labels,
     *                     metrics, corpus) has landed but BEFORE the engine

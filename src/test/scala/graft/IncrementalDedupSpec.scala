@@ -104,9 +104,9 @@ class IncrementalDedupSpec extends SparkSpec {
       // incrementally maintained near-dup clusters == full CC over all
       // streamed edges, edge-free docs as singletons; keep = min member.
       // This is DedupJob's decisions contract, maintained per micro-batch
-      // at affected-partition write cost (LabelCommit)
+      // at delta write cost (LabelCommit)
       val ctbl = new graft.io.LabelStore(s"$baseDir/clusters", 8)
-      assert(ctbl.currentSnapshot === Some(3L))
+      assert(ctbl.currentSnapshot === Some(2L))
       val gotLabels = ctbl.read(spark).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toMap
       val full = graft.pipeline.Cluster.connectedComponents(

@@ -218,21 +218,23 @@ class ResumeSpec extends SparkSpec {
     val store = new LabelStore(root, 4)
     assert(store.currentSnapshot === None)
     intercept[IllegalStateException](store.read(spark))
-    def labels(rows: (String, String)*) = rows.toDF("doc_id", "cluster_id")
+    def commit(k: Long, edges: Seq[(String, String)], ids: String*): Unit =
+      graft.streaming.LabelCommit.commit(spark, root, 4, k,
+        edges.toDF("a_id", "b_id"), ids.toDF("doc_id"), None)
     def read(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), r.getString(1))).toSet
 
-    val s1 = store.overwrite(labels(("a", "a"), ("b", "a")))
-    val s2 = store.overwrite(labels(("a", "a"), ("b", "a"), ("c", "c")))
+    commit(0L, Seq("a" -> "b"), "a", "b")
+    commit(1L, Nil, "c")
     assert(read(store.read(spark)) === Set(("a", "a"), ("b", "a"), ("c", "c")))
-    assert(store.readSnapshot(spark, s1).count() === 2)
+    assert(store.readSnapshot(spark, 0L).count() === 2)
 
-    val s3 = store.overwrite(labels(("z", "z")))
-    assert(store.currentSnapshot === Some(s3))
-    assert(Seq(s1, s2, s3) === Seq(1L, 2L, 3L))
-    assert(read(store.read(spark)) === Set(("z", "z")))
-    // time travel still sees the pre-overwrite snapshots
-    assert(read(store.readSnapshot(spark, s2)) === Set(("a", "a"), ("b", "a"), ("c", "c")))
-    assert(read(store.readSnapshot(spark, s1)) === Set(("a", "a"), ("b", "a")))
+    // batch 2 merges c's cluster into a's: the labeling moves, and time
+    // travel still sees the earlier batches' labelings
+    commit(2L, Seq("c" -> "b"))
+    assert(store.currentSnapshot === Some(2L))
+    assert(read(store.read(spark)) === Set(("a", "a"), ("b", "a"), ("c", "a")))
+    assert(read(store.readSnapshot(spark, 1L)) === Set(("a", "a"), ("b", "a"), ("c", "c")))
+    assert(read(store.readSnapshot(spark, 0L)) === Set(("a", "a"), ("b", "a")))
   }
 }

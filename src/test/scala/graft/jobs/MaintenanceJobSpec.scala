@@ -108,6 +108,25 @@ class MaintenanceJobSpec extends SparkSpec {
     } finally spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 
+  test("expire-snapshots keeps the newest label maps, one by default") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-mj-labels").toString
+    for (k <- 0L to 3L)
+      graft.streaming.LabelCommit.commit(spark, root, 4, k,
+        Seq(s"d$k" -> s"d${k + 1}").toDF("a_id", "b_id"), Seq(s"d${k + 1}").toDF("doc_id"), None)
+    val store = new graft.io.LabelStore(root, 4)
+    val labels = store.read(spark).collect().toSet
+    def maps = new File(s"$root/fwd").list().toSet
+
+    MaintenanceJob.run(spark, Seq("expire-snapshots", root, "2"))
+    assert(maps === Set("batch_id=2", "batch_id=3"))
+    MaintenanceJob.run(spark, Seq("expire-snapshots", root))
+    assert(maps === Set("batch_id=3"))
+    assert(store.currentSnapshot === Some(3L))
+    assert(store.read(spark).collect().toSet === labels)
+    assert(labels.size === 5)
+  }
+
   test("the CLI has three subcommands; compact-bucketed is rejected") {
     val e = intercept[IllegalArgumentException] {
       MaintenanceJob.run(spark, Seq("compact-bucketed", "t", "/nowhere", "doc_id", "4"))

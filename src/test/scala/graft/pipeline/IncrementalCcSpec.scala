@@ -1,52 +1,57 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import java.nio.file.Files
 
 import graft.SparkSpec
+import graft.io.LabelStore
+import graft.streaming.LabelCommit
 
 /** Incremental CC label maintenance: folding edge batches into the labeling
-  * one at a time must equal a from-scratch CC over all edges seen so far —
-  * on every round, for random graphs, including cross-batch merges of
-  * previously separate clusters.
+  * one at a time (`Cluster.mergeDelta` through the stream's label commit)
+  * must equal a from-scratch CC over all edges seen so far — on every round,
+  * for random graphs, including cross-batch merges of previously separate
+  * clusters.
   */
 class IncrementalCcSpec extends SparkSpec {
+  import spark.implicits._
 
-  private def labMap(df: DataFrame): Map[Long, Long] =
-    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  /** Commits `edges` as batch `k` (its endpoints are the batch's docs) and
+    * returns the labeling after it.
+    */
+  private def commit(dir: String, k: Long, edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    LabelCommit.commit(spark, dir, 4, k, edges.toDF("a_id", "b_id"),
+      edges.flatMap(e => Seq(e._1, e._2)).distinct.toDF("doc_id"), None)
+    new LabelStore(dir, 4).read(spark).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  }
+
+  private def full(edges: Seq[(Long, Long)]): Map[Long, Long] =
+    Cluster.connectedComponents(edges.toDF("a", "b"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("multi-round merge equals full recompute (randomized, seeded)") {
-    import spark.implicits._
     val r = new scala.util.Random(23)
     // 3 batches over a 120-node id space: plenty of cross-batch merges
     val batches = Seq.fill(3)(
       Seq.fill(60)((r.nextInt(120).toLong, r.nextInt(120).toLong))
         .filter(e => e._1 != e._2))
+    val dir = Files.createTempDirectory("graft-inccc").toString
 
-    var labels = Cluster.connectedComponents(batches.head.toDF("a", "b"))
-    var seen = batches.head
-    assert(labMap(labels) === labMap(Cluster.connectedComponents(seen.toDF("a", "b"))))
-
-    for (batch <- batches.tail) {
-      labels = Cluster.mergeEdges(labels, batch.toDF("a", "b"))
+    var seen = Seq.empty[(Long, Long)]
+    for ((batch, k) <- batches.zipWithIndex) {
       seen = seen ++ batch
-      val full = Cluster.connectedComponents(seen.toDF("a", "b"))
-      assert(labMap(labels) === labMap(full), s"divergence after ${seen.size} edges")
+      assert(commit(dir, k.toLong, batch) === full(seen), s"divergence after ${seen.size} edges")
     }
   }
 
   test("edges inside existing clusters and empty batches are no-ops") {
-    import spark.implicits._
-    val labels = Cluster.connectedComponents(
-      Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b"))
-    val before = labMap(labels)
+    val dir = Files.createTempDirectory("graft-inccc-noop").toString
+    val before = commit(dir, 0L, Seq((1L, 2L), (2L, 3L), (10L, 11L)))
     // an edge already implied by the labeling
-    val same = Cluster.mergeEdges(labels, Seq((1L, 3L)).toDF("a", "b"))
-    assert(labMap(same) === before)
+    assert(commit(dir, 1L, Seq((1L, 3L))) === before)
     // an empty batch
-    val empty = Cluster.mergeEdges(labels, Seq.empty[(Long, Long)].toDF("a", "b"))
-    assert(labMap(empty) === before)
+    assert(commit(dir, 2L, Seq.empty) === before)
     // a merge of two existing clusters picks the global minimum label
-    val merged = Cluster.mergeEdges(labels, Seq((3L, 10L)).toDF("a", "b"))
-    assert(labMap(merged) === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 1L, 11L -> 1L))
+    assert(commit(dir, 3L, Seq((3L, 10L))) ===
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 1L, 11L -> 1L))
   }
 }
