@@ -77,7 +77,7 @@ object SparkEntry {
     val config = MatchConfig.fixture
     val docs = Fixtures.docs(spark, 300)
     val records = ErPipeline.extract(docs, config)
-    val (pairIds, _) = ErPipeline.pairs(ErPipeline.block(records))
+    val (pairIds, _) = ErPipeline.pairs(ErPipeline.block(records, config))
     val scored = ErPipeline.score(pairIds, records, config)
     val edges = ErPipeline.matchEdges(scored, config)
     Cluster.connectedComponents(edges)

@@ -1,6 +1,6 @@
 package graft.core
 
-import graft.model.{EntityRecord, MatchConfig, PropertySpec}
+import graft.model.{MatchConfig, PropertySpec}
 
 /** The Duke probability model — SURVEY.md §8 (the parity contract):
   * per-property similarity -> probability curve, naive-Bayes fold, multi-value
@@ -8,9 +8,12 @@ import graft.model.{EntityRecord, MatchConfig, PropertySpec}
   * candidate document (`[U EntityResolutionScript.java#runAsDouble]`,
   * `[D Processor.java#compare]`, `[D utils/Utils.java#computeBayes]`).
   *
-  * Pure JVM, and the only copy of the fold: the batched mapPartitions scorer
+  * Pure JVM, and the only copy of the fold. A record is positional, like
+  * Duke's `Record`: one array of cleaned values per property, in config
+  * order (`ErPipeline.CleanRecord.props`). The batched mapPartitions scorer
   * (`ErPipeline.score`) and the Catalyst `DukeScoreExpr` both call
-  * `CompiledConfig.score` over per-property value arrays.
+  * `CompiledConfig.score` over such arrays; `CompiledConfig.clean` is the one
+  * JVM path from raw values by property name to that form.
   */
 object Duke {
 
@@ -110,36 +113,12 @@ object Duke {
       acc
     }
 
-    /** `score` over records keyed by property name. */
-    def score(a: Map[String, Seq[String]], b: Map[String, Seq[String]]): Double =
-      score(values(a), values(b))
-
-    /** A record's values in config property order (null = missing). A plain
-      * loop: the mapPartitions scorer runs it twice per pair.
+    /** Clean a raw record, given by property name, into the positional form
+      * `score` takes: property i's cleaned non-empty values at index i, an
+      * empty array for a property with no value (as `ErPipeline.extract`).
       */
-    private def values(props: Map[String, Seq[String]]): Array[Array[String]] = {
-      val out = new Array[Array[String]](properties.length)
-      var i = 0
-      while (i < out.length) {
-        val v = props.getOrElse(properties(i).spec.name, null)
-        if (v != null) {
-          out(i) = new Array[String](v.length)
-          v.copyToArray(out(i))
-        }
-        i += 1
-      }
-      out
-    }
-
-    /** Clean a raw record once (map side, before the self-join — each record is
-      * cleaned once, not once per candidate pair).
-      */
-    def clean(r: EntityRecord): EntityRecord =
-      EntityRecord(
-        r.doc_id,
-        properties.iterator
-          .map(p => p.spec.name -> p.cleanedValues(r.props.getOrElse(p.spec.name, Nil)))
-          .toMap)
+    def clean(raw: Map[String, Seq[String]]): Array[Array[String]] =
+      properties.map(p => p.cleanedValues(raw.getOrElse(p.spec.name, Nil)).toArray)
 
     def classify(score: Double): String =
       if (score >= config.threshold) "match"

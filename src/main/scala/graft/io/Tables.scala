@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Observation, SparkSession}
 import org.apache.spark.sql.execution.datasources.BucketingUtils
 import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
@@ -482,13 +482,25 @@ class StageManifest(outDir: String) {
     * counter instead of losing them; a line lacking one is recomputed.
     */
   def stageWithStats(spark: SparkSession, name: String, stats: Seq[String],
-      counters: (String, Column)*)(compute: => (DataFrame, Map[String, Long])): DataFrame = {
+      counters: (String, Column)*)(compute: => (DataFrame, Map[String, Long])): DataFrame =
+    runStage(spark, name, stats, counters, None)(compute)
+
+  /** [[stage]] for rows of type `T`: a completed stage whose parquet has
+    * another schema (an older layout, e.g. `records` with map-typed `props`)
+    * is recomputed, never read as `T`.
+    */
+  def typedStage[T: Encoder](spark: SparkSession, name: String)(compute: => Dataset[T]): Dataset[T] =
+    runStage(spark, name, Nil, Nil, Some(implicitly[Encoder[T]].schema))((compute.toDF(), Map.empty)).as[T]
+
+  private def runStage(spark: SparkSession, name: String, stats: Seq[String],
+      counters: Seq[(String, Column)], schema: Option[StructType])(
+      compute: => (DataFrame, Map[String, Long])): DataFrame = {
     val path = s"$outDir/$name"
     val names = counters.map(_._1) ++ stats
-    entries.get(name) match {
-      case Some(e) if names.forall(e.counters.contains) =>
-        spark.read.parquet(e.path)
-      case _ =>
+    entries.get(name).filter(e => names.forall(e.counters.contains))
+      .map(e => spark.read.parquet(e.path)) // a parquet read is nullable throughout
+      .filter(df => schema.forall(s => df.schema == StageManifest.readBackSchema(s)))
+      .getOrElse {
         require(names.forall(k => k.nonEmpty && k != "rows" && !k.exists(";=\t\n".contains(_))),
           s"stage $name: counter names must be non-empty, not 'rows', without ;=TAB")
         val (df, computed) = compute
@@ -500,7 +512,7 @@ class StageManifest(outDir: String) {
         }
         record(name, path, got("rows"), got - "rows" ++ computed)
         spark.read.schema(StageManifest.readBackSchema(df.schema)).parquet(path)
-    }
+      }
   }
 }
 

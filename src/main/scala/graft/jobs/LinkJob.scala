@@ -63,18 +63,18 @@ object LinkJob {
     val m = new StageManifest(outDir)
     val metrics = scala.collection.mutable.ArrayBuffer[(String, String, Double)]()
 
-    // ① extract + clean (invariant asserted per row)
-    val recordsDf = m.stage(spark, "records") {
-      ErPipeline.extract(docs, config).toDF()
+    // ① extract + clean (invariant asserted per row); a resumed `records`
+    //    stage of another record layout (map-typed `props`) is recomputed
+    val records = m.typedStage(spark, "records") {
+      ErPipeline.extract(docs, config)
     }
-    val records = recordsDf.as[ErPipeline.CleanRecord]
 
     // ② blocking keys — derived from the config's lookup flags
     //    (`[D Property.java#getLookupBehaviour]`): properties marked
     //    lookup=required/true drive candidate retrieval; a config without
     //    flags falls back to the default scheme (Blocking.fromConfig)
     val blocksDf = m.stage(spark, "blocks") {
-      ErPipeline.block(records, Blocking.fromConfig(config)).toDF()
+      ErPipeline.block(records, config, Blocking.fromConfig(config)).toDF()
     }
     val blocks = blocksDf.as[ErPipeline.BlockRow]
 

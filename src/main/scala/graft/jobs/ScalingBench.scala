@@ -58,7 +58,7 @@ object ScalingBench {
         records.toDF().repartition(Partitions).write.mode("overwrite")
           .parquet(s"$dir/records")
         val persisted = spark.read.parquet(s"$dir/records").as[ErPipeline.CleanRecord]
-        val (pairs, stats) = ErPipeline.pairs(ErPipeline.block(persisted))
+        val (pairs, stats) = ErPipeline.pairs(ErPipeline.block(persisted, config))
         pairs.toDF().repartition(Partitions).write.mode("overwrite")
           .parquet(s"$dir/pairs")
         println(s"""{"prepared":{"entities":$nEntities,"records":${persisted.count()},""" +

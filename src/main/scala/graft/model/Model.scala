@@ -13,11 +13,6 @@ case class Span(kind: String, text: String, media_ref: String, offset: Int)
 /** A document row of the input table (doc_id:string, spans:array<struct<...>>). */
 case class Doc(doc_id: String, spans: Seq[Span])
 
-/** Flat Duke-style record extracted from spans by `kind` (SURVEY.md §1.1):
-  * every property is multi-valued strings `[D Record.java#getValues]`.
-  */
-case class EntityRecord(doc_id: String, props: Map[String, Seq[String]])
-
 /** Property matching spec — mirrors Duke `Property` + the plugin's query-JSON
   * field entry (`[D Property.java]`, `[U README.md#usage]`, SURVEY.md §1.2):
   * ordered `cleaners` chain (short names, Duke class names, or parameterized

@@ -62,9 +62,11 @@ object ConfigTuner {
       "ConfigTuner needs a non-empty evaluation set: every labeled (a_id, b_id) " +
         "pair must join `records` on BOTH ids — got zero joined pairs")
 
+    // `props` is positional in config order; every candidate keeps the base
+    // config's property order (genome ops map/zip it in place)
     def scoreCol(cfg: MatchConfig) = {
-      val kids = cfg.properties.flatMap(p =>
-        Seq(col("a_props").getItem(p.name), col("b_props").getItem(p.name)))
+      val kids = cfg.properties.indices.flatMap(i =>
+        Seq(col("a_props").getItem(i), col("b_props").getItem(i)))
       graftshim.column(graft.expr.DukeScoreExpr(kids.map(graftshim.expression), cfg))
     }
 

@@ -1,9 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Cleaners, Duke, Phonetics}
+import graft.core.Duke
 import graft.model.{Doc, MatchConfig}
 
 /** The distributed re-expression of the reference's retrieve->score->decide
@@ -14,11 +14,13 @@ import graft.model.{Doc, MatchConfig}
   */
 object ErPipeline {
 
-  /** Flat cleaned record (Duke Record analog `[D Record.java]`): doc_id +
-    * multi-valued property map, values already cleaned map-side (each record is
-    * cleaned once — not once per candidate pair).
+  /** Flat cleaned record (Duke Record analog `[D Record.java]`): `props(i)`
+    * holds the cleaned non-empty values of `config.properties(i)` (empty when
+    * the doc has none), cleaned once map-side, not once per candidate pair.
+    * The one record format from extract to score: the Duke fold, the keyers
+    * and the config tuner all read it by property index.
     */
-  case class CleanRecord(doc_id: String, props: Map[String, Seq[String]])
+  case class CleanRecord(doc_id: String, props: Array[Array[String]])
 
   case class BlockRow(doc_id: String, key: String)
   case class PairIds(a_id: String, b_id: String, block_key: String)
@@ -47,24 +49,25 @@ object ErPipeline {
     doc
   }
 
-  /** Declarative violation counter over the raw docs table (test/metrics use).
-    * `greatest(size(spans)-1, 0)` guards the slice length: a doc with zero
-    * spans is vacuously ordered, not a SparkRuntimeException.
+  /** The span invariant as one predicate over the `spans` column, true on a
+    * valid row. `greatest(size(spans)-1, 0)` guards the slice length: a doc
+    * with zero spans is vacuously ordered, not a SparkRuntimeException.
     */
-  def invariantViolations(docs: DataFrame): Long = {
-    val increasing = expr(
-      "forall(zip_with(slice(transform(spans, s -> s.offset), 1, greatest(size(spans)-1, 0))," +
-        " slice(transform(spans, s -> s.offset), 2, greatest(size(spans)-1, 0))," +
-        " (a, b) -> b > a), x -> x)")
-    val shapeOk = expr(
-      "forall(spans, s -> IF(s.kind = 'media', s.media_ref is not null and s.text is null," +
-        " s.text is not null and s.media_ref is null))")
-    docs.where(!(coalesce(increasing, lit(true)) && shapeOk)).count()
-  }
+  private def spanInvariantOk: Column = expr(
+    "coalesce(forall(zip_with(slice(transform(spans, s -> s.offset), 1, greatest(size(spans)-1, 0))," +
+      " slice(transform(spans, s -> s.offset), 2, greatest(size(spans)-1, 0))," +
+      " (a, b) -> b > a), x -> x), true)") && expr(
+    "coalesce(forall(spans, s -> IF(s.kind = 'media'," +
+      " s.media_ref is not null and s.text is null," +
+      " s.text is not null and s.media_ref is null)), true)")
+
+  /** Declarative violation counter over the raw docs table (test/metrics use). */
+  def invariantViolations(docs: DataFrame): Long = docs.where(!spanInvariantOk).count()
 
   /** spans -> flat multi-valued Duke record, cleaned per the config's cleaner
     * chains (SURVEY.md §1.4: properties extracted from spans by `kind`; media
-    * spans contribute `media_ref`, text spans `text`).
+    * spans contribute `media_ref`, text spans `text`), one `props` entry per
+    * configured property, in config order.
     *
     * Fully declarative — span higher-order functions + the codegen'd CleanExpr
     * chain, one narrow whole-stage-codegen pass, no object-domain hop (a typed
@@ -77,15 +80,7 @@ object ErPipeline {
     val spark = docs.sparkSession
     import spark.implicits._
 
-    val increasing = expr(
-      "coalesce(forall(zip_with(slice(transform(spans, s -> s.offset), 1, greatest(size(spans)-1, 0))," +
-        " slice(transform(spans, s -> s.offset), 2, greatest(size(spans)-1, 0))," +
-        " (a, b) -> b > a), x -> x), true)")
-    val shapeOk = expr(
-      "coalesce(forall(spans, s -> IF(s.kind = 'media'," +
-        " s.media_ref is not null and s.text is null," +
-        " s.text is not null and s.media_ref is null)), true)")
-    val gatedId = when(increasing && shapeOk, $"doc_id")
+    val gatedId = when(spanInvariantOk, $"doc_id")
       .otherwise(raise_error(concat(
         lit("span invariant violated (kind/text/media_ref/order) for doc "), $"doc_id")))
 
@@ -104,17 +99,17 @@ object ErPipeline {
         "'k', IF(s.kind = 'media', 'media', s.kind)," +
         "'v', IF(s.kind = 'media', s.media_ref, s.text)))")
 
-    val entries: Seq[Column] = config.properties.flatMap { p =>
+    val values: Seq[Column] = config.properties.map { p =>
       val src = filter(col("__kvs"), e => e.getField("k") === p.name)
       val cleaned = transform(src, e =>
         graft.expr.functions.clean_chain(p.cleaners, e.getField("v")))
       val nonEmpty = filter(cleaned, v => v.isNotNull && v =!= "")
-      Seq(lit(p.name), coalesce(nonEmpty, array().cast("array<string>")))
+      coalesce(nonEmpty, array().cast("array<string>"))
     }
 
     docs.toDF()
       .select(gatedId.as("doc_id"), kvs.as("__kvs"))
-      .select(col("doc_id"), map(entries: _*).as("props"))
+      .select(col("doc_id"), array(values: _*).as("props"))
       .as[CleanRecord]
   }
 
@@ -124,15 +119,14 @@ object ErPipeline {
     * retrieval — SURVEY.md §2.6 J3): recall-oriented keys from cleaned values.
     * Default keyers mirror a Duke lookup-property setup: surname soundex +
     * exact phone digits (see `Blocking` for the configurable KeyFunction
-    * analog). Multiple keys per doc; the same function defines the "same
-    * blocking key" for the labeled pairs (BASELINE.json:2).
+    * analog). Multiple keys per doc; the same keys define the "same blocking
+    * key" for the labeled pairs (BASELINE.json:2).
     */
-  def blockKeys(rec: CleanRecord): Seq[String] = Blocking.keys(Blocking.default)(rec)
-
   def block(
       records: Dataset[CleanRecord],
+      config: MatchConfig,
       keyers: Seq[Blocking.Keyer] = Blocking.default): Dataset[BlockRow] =
-    Blocking.block(records, keyers)
+    Blocking.block(records, config, keyers)
 
   // ------------------------------------------------------------------ pair generation
 
@@ -286,7 +280,8 @@ object ErPipeline {
     * candidate iterator (SURVEY.md §3.1).
     *
     * Joins pair ids back to records on doc_id (two shuffle hash joins; records
-    * are pre-cleaned so no string work happens here).
+    * are pre-cleaned so no string work happens here). Each pair decodes its
+    * two positional `props` arrays, which the fold reads as they are.
     */
   def score(
       pairIds: Dataset[PairIds],
@@ -313,7 +308,7 @@ object ErPipeline {
     val b = bRecords.toDF("b_id", "b_props")
     val joined = pairIds.join(a, "a_id").join(b, "b_id")
       .select($"a_id", $"b_id", $"block_key", $"a_props", $"b_props")
-      .as[(String, String, String, Map[String, Seq[String]], Map[String, Seq[String]])]
+      .as[(String, String, String, Array[Array[String]], Array[Array[String]])]
 
     joined.mapPartitions { it =>
       it.map { case (aId, bId, key, ap, bp) =>

@@ -80,10 +80,12 @@ object Eval {
   }
 
   /** Brute-force O(n²) oracle (SURVEY.md §5.2 #4): single-threaded driver-side
-    * re-implementation of the whole pipeline — clean every doc, consider every
-    * unordered pair (restricted to co-blocked pairs when `blockedOnly`, exactly
-    * like the distributed path), score with the same compiled Duke config, link
-    * at threshold, transitively close with union-find. Only for fix-unit scale.
+    * re-implementation of the whole pipeline — clean every doc on the JVM
+    * (`Duke.CompiledConfig.clean`, not the Spark extract), consider every
+    * unordered pair (restricted to pairs co-blocked under the config's
+    * scheme, `Blocking.fromConfig`, when `blockedOnly` — exactly like the
+    * distributed path), score with the same compiled Duke config, link at
+    * threshold, transitively close with union-find. Only for fix-unit scale.
     */
   def bruteForceClusters(
       docs: Seq[Doc],
@@ -92,16 +94,14 @@ object Eval {
     val cc = graft.core.Duke.compile(config)
     val recs = docs.map { d =>
       val byKind = d.spans.groupBy(_.kind)
-      val props = config.properties.map { p =>
-        val raw = byKind.getOrElse(p.name, Nil)
+      val raw = config.properties.map { p =>
+        p.name -> byKind.getOrElse(p.name, Nil)
           .map(s => if (p.name == "media") s.media_ref else s.text)
-        p.name -> raw
       }.toMap
-      cc.clean(graft.model.EntityRecord(d.doc_id, props))
+      ErPipeline.CleanRecord(d.doc_id, cc.clean(raw))
     }.sortBy(_.doc_id)
-    val keys: Map[String, Set[String]] =
-      recs.map(r => r.doc_id -> ErPipeline.blockKeys(
-        ErPipeline.CleanRecord(r.doc_id, r.props)).toSet).toMap
+    val keysOf = Blocking.keys(Blocking.fromConfig(config), config)
+    val keys: Map[String, Set[String]] = recs.map(r => r.doc_id -> keysOf(r).toSet).toMap
     val parent = scala.collection.mutable.Map[String, String](recs.map(r => r.doc_id -> r.doc_id): _*)
     def find(x: String): String = {
       var r = x

@@ -162,7 +162,7 @@ object IncrementalLink {
     val recordsTable = corpusTable.getOrElse(Tables.corpusTableName(corpusDir))
     CorpusStream.start[Doc](stream,
       extract = batch => ErPipeline.extract(batch, config).toDF(),
-      blocks = recs => ErPipeline.block(recs.as[ErPipeline.CleanRecord], keyers).toDF(),
+      blocks = recs => ErPipeline.block(recs.as[ErPipeline.CleanRecord], config, keyers).toDF(),
       payload = Seq("doc_id", "props"),
       pairCfg = ErPipeline.PairConfig(),
       edges = (cand, a, b) => ErPipeline.matchEdges(ErPipeline.score(cand.as[ErPipeline.PairIds],

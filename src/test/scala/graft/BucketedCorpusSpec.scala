@@ -44,7 +44,7 @@ class BucketedCorpusSpec extends SparkSpec {
       .localCheckpoint(true).as[ErPipeline.CleanRecord]
 
     val (pairIds, _) = ErPipeline.linkPairs(
-      ErPipeline.block(newRecs), ErPipeline.block(corpusRecs))
+      ErPipeline.block(newRecs, cfg), ErPipeline.block(corpusRecs, cfg))
     val pinnedPairs = pairIds.toDF().localCheckpoint(true).as[ErPipeline.PairIds]
     // the plain (unbucketed) corpus run every bucketed read must reproduce
     val plainScores = ErPipeline.score(pinnedPairs, newRecs, corpusRecs, cfg)

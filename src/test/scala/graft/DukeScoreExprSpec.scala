@@ -20,8 +20,8 @@ class DukeScoreExprSpec extends SparkSpec {
       pairs: Dataset[ErPipeline.PairIds],
       records: Dataset[ErPipeline.CleanRecord],
       config: MatchConfig): DataFrame = {
-    val kids = config.properties.flatMap(p =>
-      Seq(col("a_props").getItem(p.name), col("b_props").getItem(p.name)))
+    val kids = config.properties.indices.flatMap(i =>
+      Seq(col("a_props").getItem(i), col("b_props").getItem(i)))
     val scoreCol = graftshim.column(DukeScoreExpr(kids.map(graftshim.expression), config))
     pairs.toDF()
       .join(records.toDF("a_id", "a_props"), "a_id")
@@ -33,7 +33,7 @@ class DukeScoreExprSpec extends SparkSpec {
     val config = MatchConfig.fixture
     val docs = Fixtures.docs(spark, 400)
     val records = ErPipeline.extract(docs, config)
-    val (pairIds, _) = ErPipeline.pairs(ErPipeline.block(records))
+    val (pairIds, _) = ErPipeline.pairs(ErPipeline.block(records, config))
 
     val viaMapPartitions = ErPipeline.score(pairIds, records, config)
       .collect().map(p => (p.a_id, p.b_id) -> p.score).toMap
@@ -51,13 +51,12 @@ class DukeScoreExprSpec extends SparkSpec {
     val config = MatchConfig.fixture
     // records with absent phone/media on one side — factor must be skipped,
     // never scored as a mismatch
+    // positional in fixture order: name, address, phone, media
     val recs = Seq(
-      ErPipeline.CleanRecord("x1", Map(
-        "name" -> Seq("john smith"), "address" -> Seq("1 oak st salem"),
-        "phone" -> Nil, "media" -> Nil)),
-      ErPipeline.CleanRecord("x2", Map(
-        "name" -> Seq("john smith"), "address" -> Seq("1 oak st salem"),
-        "phone" -> Seq("5551234"), "media" -> Seq("m://a")))).toDS()
+      ErPipeline.CleanRecord("x1", Array(
+        Array("john smith"), Array("1 oak st salem"), Array(), Array())),
+      ErPipeline.CleanRecord("x2", Array(
+        Array("john smith"), Array("1 oak st salem"), Array("5551234"), Array("m://a")))).toDS()
     val pairs = Seq(ErPipeline.PairIds("x1", "x2", "k")).toDS()
     val fused = scoreByExpr(pairs, recs, config).collect()(0).getDouble(2)
     val plain = ErPipeline.score(pairs, recs, config).collect()(0).score

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{Duke, Similarity}
-import graft.model.{EntityRecord, MatchConfig, PropertySpec}
+import graft.model.{MatchConfig, PropertySpec}
 
 /** The Duke probability model — parity contract tests (SURVEY.md §8):
   * probability curve A1, bayes A3, multi-value max A2, missing-value skip P3,
@@ -77,24 +77,24 @@ class DukeSpec extends AnyFunSuite {
       PropertySpec("name", Seq("lowercase-normalize"), "jaro-winkler", 0.1, 0.95),
       PropertySpec("phone", Seq("digits-only"), "exact", 0.05, 0.98)))
     val cc = Duke.compile(config)
-    val a = cc.clean(EntityRecord("a", Map(
-      "name" -> Seq("John Smith"), "phone" -> Seq("(555) 123-4567"))))
-    val b = cc.clean(EntityRecord("b", Map(
-      "name" -> Seq("Jon Smith"), "phone" -> Seq("5551234567"))))
+    val a = cc.clean(Map(
+      "name" -> Seq("John Smith"), "phone" -> Seq("(555) 123-4567")))
+    val b = cc.clean(Map(
+      "name" -> Seq("Jon Smith"), "phone" -> Seq("5551234567")))
     val simName = Similarity.jaroWinkler("john smith", "jon smith")
     val pName = Duke.propertyProbability(simName, 0.1, 0.95)
     val expected = Duke.bayes(Duke.bayes(0.5, pName), 0.98)
-    assert(math.abs(cc.score(a.props, b.props) - expected) < eps)
+    assert(math.abs(cc.score(a, b) - expected) < eps)
 
     // missing property on one side: only the other factor applies
-    val c = cc.clean(EntityRecord("c", Map("name" -> Seq("John Smith"))))
+    val c = cc.clean(Map("name" -> Seq("John Smith")))
     val expected2 = Duke.bayes(0.5, Duke.propertyProbability(
       Similarity.jaroWinkler("john smith", "jon smith"), 0.1, 0.95))
-    assert(math.abs(cc.score(c.props, b.props) - expected2) < eps)
+    assert(math.abs(cc.score(c, b) - expected2) < eps)
 
     // no shared evidence at all -> prior 0.5 -> "maybe"/below
-    val d = cc.clean(EntityRecord("d", Map.empty))
-    assert(cc.score(d.props, b.props) === 0.5)
+    val d = cc.clean(Map.empty)
+    assert(cc.score(d, b) === 0.5)
     assert(cc.classify(0.5) === "no-match")
     assert(cc.classify(0.7) === "maybe")
     assert(cc.classify(0.86) === "match")
@@ -103,8 +103,9 @@ class DukeSpec extends AnyFunSuite {
   test("identifier mismatch drags the score down (low << 0.5)") {
     val config = MatchConfig.fixture
     val cc = Duke.compile(config)
-    val same = Map("name" -> Seq("john smith"), "phone" -> Seq("55512345"))
-    val other = Map("name" -> Seq("john smith"), "phone" -> Seq("55599999"))
+    // positional in fixture order: name, address, phone, media
+    val same: Array[Array[String]] = Array(Array("john smith"), Array(), Array("55512345"), Array())
+    val other: Array[Array[String]] = Array(Array("john smith"), Array(), Array("55599999"), Array())
     val withMatch = cc.score(same, same)
     val withMismatch = cc.score(same, other)
     assert(withMatch > 0.99)
@@ -114,11 +115,12 @@ class DukeSpec extends AnyFunSuite {
   test("score is symmetric and deterministic") {
     val cc = Duke.compile(MatchConfig.fixture)
     val r = new scala.util.Random(17)
-    def rec(): Map[String, Seq[String]] = Map(
-      "name" -> Seq.fill(1 + r.nextInt(2))(s"n${r.nextInt(20)} x${r.nextInt(9)}"),
-      "address" -> Seq(s"${r.nextInt(100)} main street city${r.nextInt(5)}"),
-      "phone" -> (if (r.nextBoolean()) Seq(s"555${r.nextInt(100000)}") else Nil),
-      "media" -> Seq.fill(r.nextInt(3))(s"m://x/${r.nextInt(50)}"))
+    // positional in fixture order: name, address, phone, media
+    def rec(): Array[Array[String]] = Array(
+      Array.fill(1 + r.nextInt(2))(s"n${r.nextInt(20)} x${r.nextInt(9)}"),
+      Array(s"${r.nextInt(100)} main street city${r.nextInt(5)}"),
+      if (r.nextBoolean()) Array(s"555${r.nextInt(100000)}") else Array(),
+      Array.fill(r.nextInt(3))(s"m://x/${r.nextInt(50)}"))
     for (_ <- 1 to 300) {
       val (a, b) = (rec(), rec())
       val s1 = cc.score(a, b)
@@ -151,8 +153,8 @@ class DukeSpec extends AnyFunSuite {
     val cfg2 = MatchConfig.fromJson(j2)
     val cc2 = Duke.compile(cfg2)
     val s = cc2.score(
-      Map("n" -> Seq(" MARTHA ")).map { case (k, v) => k -> cc2.properties(0).cleanedValues(v) },
-      Map("n" -> Seq("MARHTA")).map { case (k, v) => k -> cc2.properties(0).cleanedValues(v) })
+      Array(cc2.properties(0).cleanedValues(Seq(" MARTHA ")).toArray),
+      Array(cc2.properties(0).cleanedValues(Seq("MARHTA")).toArray))
     assert(s > 0.5)
   }
 
@@ -185,9 +187,10 @@ class DukeSpec extends AnyFunSuite {
     assert(cc.properties(0).cleanedValues(Seq("no digits here")) === Nil) // P3: no evidence
     assert(cc.properties(1).cleanedValues(Seq(" OSLO ")) === Seq("0sl0"))
     // a matching zip on both sides is evidence; a no-match zip is skipped
-    val hi = cc.score(Map("zip" -> Seq("0371")), Map("zip" -> Seq("0371")))
+    // positional: zip, city
+    val hi = cc.score(Array(Array("0371"), Array()), Array(Array("0371"), Array()))
     assert(hi > 0.5)
-    assert(cc.score(Map("zip" -> Nil), Map("zip" -> Seq("0371"))) === 0.5)
+    assert(cc.score(Array(Array(), Array()), Array(Array("0371"), Array())) === 0.5)
   }
 
   test("idProperty / ignoreProperty are never evidence; lookup drives blocking") {
@@ -207,15 +210,17 @@ class DukeSpec extends AnyFunSuite {
     val cc = Duke.compile(cfg)
     // identical id + identical ignored note contribute NOTHING; different
     // names dominate — with flags honored the score has no id/note terms
-    val a = Map("id" -> Seq("r1"), "note" -> Seq("same"), "name" -> Seq("alice"))
-    val b = Map("id" -> Seq("r1"), "note" -> Seq("same"), "name" -> Seq("bob"))
+    // positional: id, note, name, phone
+    val a: Array[Array[String]] = Array(Array("r1"), Array("same"), Array("alice"), Array())
+    val b: Array[Array[String]] = Array(Array("r1"), Array("same"), Array("bob"), Array())
     val withFlags = cc.score(a, b)
-    val nameOnly = cc.score(Map("name" -> Seq("alice")), Map("name" -> Seq("bob")))
+    val nameOnly = cc.score(Array(Array(), Array(), Array("alice"), Array()),
+      Array(Array(), Array(), Array("bob"), Array()))
     assert(withFlags === nameOnly)
     // lookup=required blocks on name values; lookup=false/id excluded
     val keyers = graft.pipeline.Blocking.fromConfig(cfg)
     val rec = graft.pipeline.ErPipeline.CleanRecord("d1",
-      Map("id" -> Seq("r1"), "name" -> Seq("alice"), "phone" -> Seq("5551234")))
-    assert(graft.pipeline.Blocking.keys(keyers)(rec) === Seq("name:alice"))
+      Array(Array("r1"), Array(), Array("alice"), Array("5551234")))
+    assert(graft.pipeline.Blocking.keys(keyers, cfg)(rec) === Seq("name:alice"))
   }
 }

@@ -208,11 +208,11 @@ class ExpressionsSpec extends SparkSpec {
       multiValued = Set("name", "address", "phone", "media")))
       .select(col("id"), col("score")).collect().map(r0 => r0.getString(0) -> r0.getDouble(1)).toMap
     for (row <- rows) {
-      val a = cc.clean(graft.model.EntityRecord(row._1, Map(
-        "name" -> row._2, "address" -> row._3, "phone" -> row._4, "media" -> row._5)))
-      val b = cc.clean(graft.model.EntityRecord("b", Map(
-        "name" -> row._6, "address" -> row._7, "phone" -> row._8, "media" -> row._9)))
-      val want = cc.score(a.props, b.props)
+      val a = cc.clean(Map(
+        "name" -> row._2, "address" -> row._3, "phone" -> row._4, "media" -> row._5))
+      val b = cc.clean(Map(
+        "name" -> row._6, "address" -> row._7, "phone" -> row._8, "media" -> row._9))
+      val want = cc.score(a, b)
       val got = scored(row._1)
       assert(math.abs(got - want) < 1e-12, s"${row._1}: column=$got kernel=$want")
     }

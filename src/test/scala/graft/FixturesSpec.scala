@@ -67,19 +67,20 @@ class FixturesSpec extends SparkSpec {
       Span("media", null, "m://sha256/ff", 9)))
     val recs = ErPipeline.extract(Seq(doc).toDS(), graft.model.MatchConfig.fixture).collect()
     assert(recs.length === 1)
-    val p = recs(0).props
-    assert(p("name") === Seq("john smith"))
-    assert(p("address") === Seq("12 oak street salem"))
-    assert(p("phone") === Seq("5551234567"))
-    assert(p("media") === Seq("m://sha256/ff"))
-    assert(!p.contains("text")) // not a configured property
+    // positional in fixture order: name, address, phone, media
+    val p = recs(0).props.map(_.toSeq)
+    assert(p(0) === Seq("john smith"))
+    assert(p(1) === Seq("12 oak street salem"))
+    assert(p(2) === Seq("5551234567"))
+    assert(p(3) === Seq("m://sha256/ff"))
+    assert(p.length === 4) // "text" is not a configured property
   }
 
   test("hot-key skew knob produces a dominant blocking key") {
     import spark.implicits._
     val docs = Fixtures.docs(spark, 400, Fixtures.GenConfig(hotKeyFraction = 0.3))
     val records = ErPipeline.extract(docs, graft.model.MatchConfig.fixture)
-    val blocks = ErPipeline.block(records)
+    val blocks = ErPipeline.block(records, graft.model.MatchConfig.fixture)
     val counts = blocks.groupBy($"key").count().orderBy(desc("count")).collect()
     val hot = counts.head
     // smith -> soundex S530; ~30% of entities forced onto it

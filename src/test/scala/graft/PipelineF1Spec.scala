@@ -17,7 +17,7 @@ class PipelineF1Spec extends SparkSpec {
   private def pipeline(nEntities: Long) = {
     val docs = Fixtures.docs(spark, nEntities)
     val records = ErPipeline.extract(docs, config)
-    val blocks = ErPipeline.block(records)
+    val blocks = ErPipeline.block(records, config)
     val (pairIds, _) = ErPipeline.pairs(blocks)
     val scored = ErPipeline.score(pairIds, records, config)
     (records, blocks, scored)
@@ -60,13 +60,27 @@ class PipelineF1Spec extends SparkSpec {
     assert(mismatches === 0)
   }
 
+  test("brute-force oracle blocks like LinkJob under a lookup-flagged config") {
+    import spark.implicits._
+    // phone as the only lookup property: LinkJob blocks on exact phone
+    // values (Blocking.fromConfig), and so must the oracle
+    val cfg = config.copy(properties = config.properties.map(p =>
+      if (p.name == "phone") p.copy(lookup = "required") else p))
+    val docs = Fixtures.docs(spark, 150L)
+    val out = java.nio.file.Files.createTempDirectory("graft-f1-lookup").toString
+    graft.jobs.LinkJob.run(spark, docs, cfg, out)
+    val oracle = Eval.bruteForceClusters(docs.collect().toSeq, cfg)
+    assert(Eval.partitionDiff(spark.read.parquet(s"$out/clusters"),
+      oracle.toSeq.toDF("doc_id", "cluster_id")) === 0)
+  }
+
   test("pipeline output independent of partitioning (determinism, SURVEY.md §5.2 #5)") {
     import spark.implicits._
     val n = 300L
     def run(parts: Int): Set[(String, String, Long)] = {
       val docs = Fixtures.docs(spark, n).repartition(parts)
       val records = ErPipeline.extract(docs, config)
-      val (pairIds, _) = ErPipeline.pairs(ErPipeline.block(records))
+      val (pairIds, _) = ErPipeline.pairs(ErPipeline.block(records, config))
       val scored = ErPipeline.score(pairIds, records, config)
       scored.collect().map(p => (p.a_id, p.b_id, math.round(p.score * 1e12))).toSet
     }

@@ -183,6 +183,33 @@ class ResumeSpec extends SparkSpec {
     assert(spark.read.parquet(s"$oldOut/scored").columns.contains("bucket"))
   }
 
+  test("a records stage with map-typed props from an older run is recomputed on resume") {
+    import spark.implicits._
+    val cleanOut = tmpDir("graft-map-clean").toString
+    val oldOut = tmpDir("graft-map-old").toString
+    val docs = Fixtures.docs(spark, 250)
+    val cleanSummary = LinkJob.run(spark, docs, MatchConfig.fixture, cleanOut)
+
+    // an older run wrote `records` with props as a property-name map and was
+    // killed after `blocks`: rebuild that stage by hand, from the clean
+    // run's records, and record its manifest line
+    LinkJob.run(spark, docs, MatchConfig.fixture, oldOut)
+    cutManifestTo(oldOut, Set("blocks"))
+    val names = array(MatchConfig.fixture.properties.map(p => lit(p.name)): _*)
+    spark.read.parquet(s"$cleanOut/records")
+      .select($"doc_id", map_from_arrays(names, $"props").as("props"))
+      .write.parquet(s"$oldOut/records")
+    new StageManifest(oldOut).record("records", s"$oldOut/records", cleanSummary.records)
+    def propsType(out: String) = spark.read.parquet(s"$out/records").schema("props").dataType
+    assert(propsType(oldOut).typeName === "map")
+
+    val resumed = LinkJob.run(spark, docs, MatchConfig.fixture, oldOut)
+    assert(resumed === cleanSummary)
+    assert(clusterMap(oldOut) === clusterMap(cleanOut))
+    // the stage was recomputed in the positional layout
+    assert(propsType(oldOut) === propsType(cleanOut))
+  }
+
   test("skew stats survive a no-op rerun and a resume after the pair stage") {
     val docs = Fixtures.docs(spark, 250)
     val pc = ErPipeline.PairConfig(saltThreshold = 4, maxBlockSize = 40)

@@ -108,7 +108,7 @@ class StageManifestSpec extends SparkSpec {
     assert(got.schema === inferred)
     assert(got.orderBy("id").collect().toSeq === df.orderBy("id").collect().toSeq)
 
-    // a production stage: map<string, array<string>> props
+    // a production stage: array<array<string>> props
     val records = m.stage(spark, "records") {
       ErPipeline.extract(Fixtures.docs(spark, 20), MatchConfig.fixture).toDF()
     }

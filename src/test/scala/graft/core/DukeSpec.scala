@@ -1,7 +1,7 @@
 package graft.core
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.model.{EntityRecord, MatchConfig, PropertySpec}
+import graft.model.{MatchConfig, PropertySpec}
 
 /** The Duke probability model (SURVEY.md §8) — golden + algebraic tests. */
 class DukeSpec extends AnyFunSuite {
@@ -38,18 +38,17 @@ class DukeSpec extends AnyFunSuite {
 
   test("record score: exact duplicate scores near 1, unrelated scores low") {
     val cc = Duke.compile(MatchConfig.fixture)
-    val a = EntityRecord("d1", Map(
+    val ca = cc.clean(Map(
       "name" -> Seq("John Smith"), "address" -> Seq("12 Main Street"),
       "phone" -> Seq("555-1234"), "media" -> Seq("m://sha256/aa")))
-    val b = EntityRecord("d2", Map(
+    val cb = cc.clean(Map(
       "name" -> Seq("Jon  Smith"), "address" -> Seq("12 Main St."),
       "phone" -> Seq("5551234"), "media" -> Seq("m://sha256/aa")))
-    val u = EntityRecord("d3", Map(
+    val cu = cc.clean(Map(
       "name" -> Seq("Greta Jones"), "address" -> Seq("99 Ocean Ave"),
       "phone" -> Seq("777-0000"), "media" -> Seq("m://sha256/zz")))
-    val ca = cc.clean(a); val cb = cc.clean(b); val cu = cc.clean(u)
-    val dup = cc.score(ca.props, cb.props)
-    val non = cc.score(ca.props, cu.props)
+    val dup = cc.score(ca, cb)
+    val non = cc.score(ca, cu)
     assert(dup > 0.9, s"dup=$dup")
     assert(non < 0.3, s"non=$non")
     assert(cc.classify(dup) == "match")
@@ -61,22 +60,22 @@ class DukeSpec extends AnyFunSuite {
       PropertySpec("name", Seq("lowercase-normalize"), "jaro-winkler", 0.1, 0.95),
       PropertySpec("phone", Seq("digits-only"), "exact", 0.3, 0.98)))
     val cc = Duke.compile(cfg)
-    val a = cc.clean(EntityRecord("a", Map("name" -> Seq("John Smith"), "phone" -> Seq("no digits at all"))))
-    val b = cc.clean(EntityRecord("b", Map("name" -> Seq("John Smith"), "phone" -> Seq("555"))))
+    val a = cc.clean(Map("name" -> Seq("John Smith"), "phone" -> Seq("no digits at all")))
+    val b = cc.clean(Map("name" -> Seq("John Smith"), "phone" -> Seq("555")))
     // phone cleans to empty on side a -> property must contribute nothing
     val expected = Duke.bayes(0.5, Duke.propertyProbability(1.0, 0.1, 0.95))
-    assert(math.abs(cc.score(a.props, b.props) - expected) < eps)
+    assert(math.abs(cc.score(a, b) - expected) < eps)
   }
 
   test("multi-value max (A2): best pair wins") {
     val cfg = MatchConfig(0.8, 0.6, Seq(
       PropertySpec("name", Nil, "exact", 0.2, 0.9)))
     val cc = Duke.compile(cfg)
-    val a = EntityRecord("a", Map("name" -> Seq("x", "y")))
-    val b = EntityRecord("b", Map("name" -> Seq("z", "y")))
+    val a = Array(Array("x", "y")) // the one property, name
+    val b = Array(Array("z", "y"))
     // exact match exists in the cross product -> factor = high prob at sim=1
     val expected = Duke.bayes(0.5, (0.9 - 0.5) * 1.0 + 0.5)
-    assert(math.abs(cc.score(a.props, b.props) - expected) < eps)
+    assert(math.abs(cc.score(a, b) - expected) < eps)
   }
 
   test("config JSON round-trip (plugin-style params — SURVEY.md §1.2)") {

@@ -125,8 +125,7 @@ class ExprSpec extends SparkSpec {
         "name" -> Option(r.getAs[String](s"name_$sfx")).toSeq,
         "address" -> Option(r.getAs[String](s"addr_$sfx")).toSeq,
         "phone" -> Option(r.getAs[String](s"phone_$sfx")).toSeq)
-      val expected = cc.score(cc.clean(graft.model.EntityRecord("a", side("a"))).props,
-        cc.clean(graft.model.EntityRecord("b", side("b"))).props)
+      val expected = cc.score(cc.clean(side("a")), cc.clean(side("b")))
       assert(math.abs(r.getAs[Double]("score") - expected) < 1e-12,
         s"row $r: ${r.getAs[Double]("score")} vs $expected")
     }

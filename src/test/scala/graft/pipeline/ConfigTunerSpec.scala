@@ -14,7 +14,7 @@ class ConfigTunerSpec extends SparkSpec {
     val docs = Fixtures.docs(spark, 150)
     val config = MatchConfig.fixture
     val records = ErPipeline.extract(docs, config)
-    val blocks = ErPipeline.block(records)
+    val blocks = ErPipeline.block(records, config)
     val labeled = Eval.labeledPairs(blocks, Fixtures.goldClusters(spark, 150))
 
     // detuned: near-uninformative probabilities + overtight threshold

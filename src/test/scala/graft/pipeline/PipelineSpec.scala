@@ -37,8 +37,8 @@ class FixtureSpec extends SparkSpec {
     assert(ErPipeline.invariantViolations(docs.toDF()) == 0)
     val recs = ErPipeline.extract(docs, MatchConfig.fixture).collect()
       .map(r => r.doc_id -> r.props).toMap
-    assert(recs("e0").values.forall(_.isEmpty))
-    assert(recs("e1")("name") == Seq("ann"))
+    assert(recs("e0").forall(_.isEmpty))
+    assert(recs("e1")(0).toSeq == Seq("ann")) // name, the fixture's first property
   }
 
   test("generation is deterministic and partitioning-independent") {
@@ -50,7 +50,7 @@ class FixtureSpec extends SparkSpec {
   test("skew knob plants a hot blocking key") {
     val cfg = Fixtures.GenConfig(hotKeyFraction = 0.2)
     val records = ErPipeline.extract(Fixtures.docs(spark, 500, cfg), MatchConfig.fixture)
-    val keyCounts = ErPipeline.block(records).groupBy($"key").count()
+    val keyCounts = ErPipeline.block(records, MatchConfig.fixture).groupBy($"key").count()
       .orderBy(desc("count")).collect()
     // smith -> S530 should dominate
     assert(keyCounts.head.getString(0) == "n:S530", keyCounts.take(3).mkString(","))
@@ -154,7 +154,7 @@ class ErEndToEndSpec extends SparkSpec {
     val gold = Fixtures.goldClusters(spark, nEntities)
 
     val records = ErPipeline.extract(docs, config)
-    val blocks = ErPipeline.block(records)
+    val blocks = ErPipeline.block(records, config)
     val (pairIds, _) = ErPipeline.pairs(blocks)
     val scored = ErPipeline.score(pairIds, records, config)
 
@@ -181,7 +181,7 @@ class ErEndToEndSpec extends SparkSpec {
     val nEntities = 60
     val docs = Fixtures.docs(spark, nEntities)
     val records = ErPipeline.extract(docs, config)
-    val blocks = ErPipeline.block(records)
+    val blocks = ErPipeline.block(records, config)
     val (pairIds, _) = ErPipeline.pairs(blocks)
     val scored = ErPipeline.score(pairIds, records, config)
     val edges = ErPipeline.matchEdges(scored, config)
@@ -191,7 +191,8 @@ class ErEndToEndSpec extends SparkSpec {
     // brute-force oracle: score every co-blocked pair with the pure kernel
     val cc = Duke.compile(config)
     val recs = records.collect()
-    val keysOf = recs.map(r => r.doc_id -> ErPipeline.blockKeys(r).toSet).toMap
+    val blockKeys = Blocking.keys(Blocking.default, config)
+    val keysOf = recs.map(r => r.doc_id -> blockKeys(r).toSet).toMap
     val props = recs.map(r => r.doc_id -> r.props).toMap
     val ids = recs.map(_.doc_id).sorted
     val parent = scala.collection.mutable.Map[String, String]()
@@ -252,7 +253,7 @@ class ErEndToEndSpec extends SparkSpec {
         spark.conf.set("spark.sql.shuffle.partitions", parts)
         val docs = Fixtures.docs(spark, 200)
         val records = ErPipeline.extract(docs, config)
-        val (pairIds, _) = ErPipeline.pairs(ErPipeline.block(records))
+        val (pairIds, _) = ErPipeline.pairs(ErPipeline.block(records, config))
         val scored = ErPipeline.score(pairIds, records, config)
         Cluster.connectedComponents(ErPipeline.matchEdges(scored, config))
           .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq

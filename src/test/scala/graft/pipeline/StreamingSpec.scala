@@ -54,7 +54,7 @@ class StreamingSpec extends SparkSpec {
       // batch oracle on the same docs
       val docs = Fixtures.docs(spark, 150)
       val records = ErPipeline.extract(docs, config)
-      val (pairIds, _) = ErPipeline.pairs(ErPipeline.block(records))
+      val (pairIds, _) = ErPipeline.pairs(ErPipeline.block(records, config))
       val batch = ErPipeline.matchEdges(ErPipeline.score(pairIds, records, config), config)
         .as[(String, String)].collect().toSet
       assert(streamed == batch,

@@ -361,4 +361,43 @@ class StreamRecoverySpec extends SparkSpec {
       assert(!spark.catalog.tableExists(t + "_absent"))
     } finally spark.sql(s"DROP TABLE IF EXISTS $t")
   }
+  test("a corpus whose payload was written map-typed fails its first trigger, never misread") {
+    import spark.implicits._
+    val in = Files.createTempDirectory("graft-map-in").toString
+    val base = Files.createTempDirectory("graft-map-corpus").toString
+    val cfg = MatchConfig.fixture
+    def stream() = IncrementalLink.linkStream(
+      spark.readStream.schema(Encoders.product[Doc].schema)
+        .option("maxFilesPerTrigger", "1").parquet(in).as[Doc],
+      cfg, s"$base/corpus", s"$base/edges", s"$base/ckpt")
+    val d1 = doc("d1", "john smith", "5551234")
+    val q1 = stream()
+    try {
+      landBatch(Seq(d1).toDS().toDF(), in, 0)
+      q1.processAllAvailable()
+    } finally q1.stop()
+
+    // an older writer stored batch 0's payload with props as a
+    // property-name map: rewrite the corpus records table that way
+    val table = graft.io.Tables.corpusTableName(s"$base/corpus")
+    spark.sql(s"DROP TABLE $table")
+    graft.io.LocalFs.deleteTree(java.nio.file.Paths.get(base, "corpus", "records"))
+    val names = array(cfg.properties.map(p => lit(p.name)): _*)
+    val mapTyped = graft.pipeline.ErPipeline.extract(Seq(d1).toDS(), cfg).toDF()
+      .select($"doc_id", map_from_arrays(names, $"props").as("props"))
+    graft.io.Tables.writeBatchBucketed(mapTyped, table, s"$base/corpus/records", "doc_id", 8, 0L)
+
+    // the next trigger reads that corpus: it fails instead of scoring
+    val q2 = stream()
+    try {
+      landBatch(Seq(doc("d2", "jon smith", "5551234")).toDS().toDF(), in, 1)
+      intercept[Exception](q2.processAllAvailable())
+      // Spark's deserializer check on the corpus read, not a scoring error
+      val e = q2.exception.map(_.getMessage).getOrElse("")
+      assert(e.contains("MAP<STRING, ARRAY<STRING>>"), e)
+    } finally q2.stop()
+    assert(!new java.io.File(s"$base/edges/batch_id=1").exists(), "batch 1 wrote edges")
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    spark.sql(s"DROP TABLE IF EXISTS ${table}_blocks")
+  }
 }
